@@ -22,23 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-
-def _ckpt_edges(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint for EDGE-SIZED (O(E)) tables, stored
-    serialized (MEMORY_AND_DISK) instead of the deserialized default.
-
-    Deserialized row blocks cost ~150+ bytes per (string, string) edge;
-    at the 100x scaling-probe rung (120M directed edges) that is ~18 GB
-    of live objects and 32 concurrently-unrolling tasks OOMed a 16 GiB
-    JVM (r9).  Serialized Tungsten rows are a fraction of that and spill
-    cleanly; the per-round deserialization cost is amortized across the
-    whole iteration's scans of the same blocks.  Small per-round state
-    (ranks, labels — O(V)) keeps the default deserialized level: those
-    tables are re-read every round and stay tiny relative to edges.
-    """
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
 
 
 def connected_components(
@@ -68,7 +53,7 @@ def connected_components(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).union(pairs.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
     if dedup_edges:
-        edges = _ckpt_edges(
+        edges = sized_local_checkpoint(
             edges.distinct()
             # materialize once: every iteration joins against edges, and
             # without this the full upstream pair pipeline (e.g. shingle
@@ -207,7 +192,7 @@ def pagerank(
     # all read this single materialization instead of re-running the
     # caller's upstream edge pipeline (r7: that recompute — ~5× per
     # call — was the dominant cost of pagerank_influence)
-    e_deg = _ckpt_edges(
+    e_deg = sized_local_checkpoint(
         e.withColumn("deg", F.count("*").over(W.partitionBy("s")))
     )
     # the dangling flag rides the node table (r8): danglingness is
@@ -292,7 +277,7 @@ def triangle_count(
     """
     # e feeds the two path-join sides AND the closing semi-join — without
     # a checkpoint the caller's edge pipeline executes 3× (r11, §2.4)
-    e = _ckpt_edges(
+    e = sized_local_checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
@@ -404,7 +389,7 @@ def bfs_distances(
     )
     if not directed:
         e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = _ckpt_edges(e.distinct())
+    e = sized_local_checkpoint(e.distinct())
 
     spark = edges.sparkSession
     visited = spark.createDataFrame(
@@ -467,7 +452,9 @@ def shortest_paths(
             )
         )
     # parallel edges: only the lightest can ever matter
-    e = _ckpt_edges(e.groupBy("src", "dst").agg(F.min("w").alias("w")))
+    e = sized_local_checkpoint(
+        e.groupBy("src", "dst").agg(F.min("w").alias("w"))
+    )
 
     spark = edges.sparkSession
     dist = spark.createDataFrame(
@@ -538,7 +525,7 @@ def label_propagation(
     e0 = pairs.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).where(F.col("s") != F.col("d"))
-    edges = _ckpt_edges(
+    edges = sized_local_checkpoint(
         e0.unionByName(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
     )
@@ -619,7 +606,7 @@ def personalized_pagerank(
     e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
     if not assume_distinct:
         e = e.distinct()
-    e_deg = _ckpt_edges(
+    e_deg = sized_local_checkpoint(
         e.withColumn("deg", F.count("*").over(W.partitionBy("s")))
     )
     # dangling flag on the node table (r8, same as pagerank): one setup
@@ -695,7 +682,7 @@ def hits(
 
     Returns ``(node, hub, authority)`` rounded to 6.
     """
-    e = _ckpt_edges(edges.select(
+    e = sized_local_checkpoint(edges.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).distinct())
     nodes = (
@@ -800,7 +787,7 @@ def modularity(
     e0 = pairs.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).where(F.col("s") != F.col("d"))
-    edges = _ckpt_edges(
+    edges = sized_local_checkpoint(
         e0.select(
             F.least("s", "d").alias("s"), F.greatest("s", "d").alias("d")
         )
@@ -890,7 +877,7 @@ def louvain_communities(
     # checkpoint scan comes back as an ExistingRDD with UNKNOWN
     # partitioning, so every downstream aggregate re-exchanges anyway;
     # plan-verified, keep the natural (s, d) keying.)
-    edges = _ckpt_edges(
+    edges = sized_local_checkpoint(
         e0.unionByName(
             e0.select(F.col("d").alias("s"), F.col("s").alias("d"), "w")
         )
@@ -1155,8 +1142,6 @@ def link_predict(
     # is size-capped (r12, VERDICT r11 item 1): above
     # $SMARTPY_ARC_CKPT_CAP_BYTES they recompute from lineage instead of
     # pinning an edge-sized copy in non-replicated storage.
-    from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
-
     e = sized_local_checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
@@ -1243,7 +1228,7 @@ def clustering_coefficient(
     # e feeds the two path-join sides, the closing semi-join and the
     # degree union (×2) — checkpoint so the caller's edge pipeline runs
     # once instead of 5× (r11, guide §2.4)
-    e = _ckpt_edges(
+    e = sized_local_checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
@@ -1328,7 +1313,7 @@ def minimum_spanning_forest(
         .groupBy("s", "d")
         .agg(F.min("w").alias("w"))
     )
-    e = _ckpt_edges(e)
+    e = sized_local_checkpoint(e)
     comp = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
@@ -1468,7 +1453,7 @@ def assortativity(
     # und feeds both orientations of the union, and — through deg — both
     # endpoint-degree joins: checkpoint so the caller's edge pipeline
     # runs once instead of 6× (r11, guide §2.4)
-    und = _ckpt_edges(
+    und = sized_local_checkpoint(
         edges.select(
             F.col(src_col).alias("a"), F.col(dst_col).alias("b")
         ).where(F.col("a") != F.col("b"))

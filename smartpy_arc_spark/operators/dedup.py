@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
+
 
 # ---------------------------------------------------------------------------
 # exact
@@ -324,8 +326,9 @@ def minhash_prepare(
     capped and uncapped) compute the dominant shingling/MinHash pass and
     the collapse shuffle ONCE.  Returns ``(sigs, star_exact)`` —
     exactly the frames the banding stage consumes;
-    ``materialize=True`` localCheckpoints the collapse output so each
-    variant reads materialized rows instead of re-executing the prefix.
+    ``materialize=True`` localCheckpoints the collapse output (size-guarded,
+    see ``_ckpt``) so each variant reads materialized rows instead of
+    re-executing the prefix.
     """
     sigs = minhash_signatures(
         df,
@@ -353,7 +356,7 @@ def minhash_prepare(
         ).join(sigs, id_col)
         keyed = keyed.withColumn("_rep", F.min(id_col).over(W.partitionBy("_th")))
         if materialize:
-            keyed = keyed.localCheckpoint(eager=True)
+            keyed = sized_local_checkpoint(keyed)
         star_exact = (
             keyed.where(F.col(id_col) != F.col("_rep"))
             .select(F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b"))
@@ -362,7 +365,7 @@ def minhash_prepare(
             id_col, "minhash_sig"
         )
     elif materialize:
-        sigs = sigs.localCheckpoint(eager=True)
+        sigs = sized_local_checkpoint(sigs)
     return sigs, star_exact
 
 
@@ -395,7 +398,7 @@ def minhash_banded(
         ).alias("band", "bucket"),
     )
     if materialize:
-        banded = banded.localCheckpoint(eager=True)
+        banded = sized_local_checkpoint(banded)
     return banded
 
 
@@ -416,8 +419,10 @@ def minhash_band_candidates(
     composition — pinned by unit test.  Pass ``banded`` (from
     :func:`minhash_banded` over the same ``sigs``/``bands``) to share
     one band explode across several cap variants."""
-    sigs = sigs.cache()  # read twice: banding pass + signature re-attach
     if banded is None:
+        # read twice: banding pass + signature re-attach.  A caller's
+        # banded frame leaves sigs read once, so it is not pinned then
+        sigs = sigs.cache()
         banded = minhash_banded(
             sigs, id_col=id_col, num_hashes=num_hashes, bands=bands,
             portable_hash=portable_hash,

@@ -30,20 +30,6 @@ from pyspark.sql import Window as W
 from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
 
 
-def _ckpt(df: DataFrame, *, scale: float = 1.0) -> DataFrame:
-    """Size-guarded eager serialized localCheckpoint for O(input)-sized
-    intermediates (deduped baskets, pruned basket-item rows): they feed
-    several consumers, and without materialization each consumer
-    re-executes the distinct/prune shuffle over the full detail input
-    (r11, guide §2.4).  Serialized storage is the components._ckpt_edges
-    discipline.  Above ``$SMARTPY_ARC_CKPT_CAP_BYTES`` the frame
-    recomputes from lineage instead of pinning an input-sized copy in
-    non-replicated storage (r12, VERDICT r11 item 1); ``scale`` carries
-    known super-linear expansion (the basket pair explosion is bounded
-    by ``max_basket/2`` rows per surviving basket-item row)."""
-    return sized_local_checkpoint(df, scale=scale)
-
-
 def frequent_pairs(
     df: DataFrame,
     *,
@@ -63,7 +49,7 @@ def frequent_pairs(
     # deduped baskets feed the universe count, the item-frequency pass
     # and the prune join; item_freq feeds the frequent filter and both
     # lift sides — materialize each once (r11, guide §2.4)
-    baskets = _ckpt(
+    baskets = sized_local_checkpoint(
         df.select(
             F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
         ).distinct()
@@ -148,7 +134,7 @@ def item_similarity(
 
     # deduped (basket, item) rows feed the supports aggregate and both
     # co-occurrence self-join sides — materialize once (r11, guide §2.4)
-    bi = _ckpt(
+    bi = sized_local_checkpoint(
         df.select(
             F.col(basket_col).alias("b"), F.col(item_col).alias("i")
         ).distinct()
@@ -229,7 +215,7 @@ def association_rules(
     basket-universe size is a 1-row scalar reused as a literal.
     """
     # the frequent_pairs materialization discipline (r11, guide §2.4)
-    baskets = _ckpt(
+    baskets = sized_local_checkpoint(
         df.select(
             F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
         ).distinct()
@@ -415,7 +401,7 @@ def frequent_triples(
     # as the pruned table f — both sides of the pair join, the candidate
     # join and the closing third-item join: materialize each once (r11,
     # guide §2.4; the deduped distinct otherwise re-executed 6×)
-    items = _ckpt(
+    items = sized_local_checkpoint(
         df.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
         ).distinct()
@@ -426,7 +412,9 @@ def frequent_triples(
         .where(F.col("n1") >= min_support)
         .select("it")
     )
-    f = _ckpt(items.join(F.broadcast(freq1), "it").select("bk", "it"))
+    f = sized_local_checkpoint(
+        items.join(F.broadcast(freq1), "it").select("bk", "it")
+    )
     a, b = f.alias("a"), f.alias("b")
     # the basket-keyed pair expansion feeds BOTH the level-2 support
     # aggregate and (filtered by freq2) the level-3 candidate set — run
@@ -434,7 +422,7 @@ def frequent_triples(
     # scale=32: the expansion is super-linear (about half the mean
     # frequent-basket width per surviving item row) — the guard prices
     # that in before pinning it in non-replicated storage
-    ab = _ckpt(
+    ab = sized_local_checkpoint(
         a.join(b, F.col("a.bk") == F.col("b.bk"))
         .where(F.col("a.it") < F.col("b.it"))
         .select(

@@ -9,32 +9,20 @@ materialize.
 
 Spark-first: no staging, no index — a single join whose physical strategy
 Catalyst picks.  The enrichment side is the known-small side (that's the
-operator's whole purpose), so we hint ``broadcast()`` by default: at 100 TB
-the target fact table never shuffles, each executor hash-probes the
-broadcast enrichment map.  ``broadcast=False`` falls back to sort-merge /
-shuffle-hash with AQE skew splitting for unbounded enrichment sides.
+operator's whole purpose), so it is always hinted ``broadcast()``: at
+100 TB the target fact table never shuffles, each executor hash-probes the
+broadcast enrichment map.  The hint goes through
+``_ckpt.broadcast_if_small``, the engine's one size gate: an enrichment
+side over its cap is joined by shuffle (sort-merge / shuffle-hash with AQE
+skew splitting) with a warning.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Hard cap on an enrichment side we will hint as broadcast.  An oversized
-# broadcast OOMs executors instead of degrading, so past this estimate we
-# fall back to a shuffle join (AQE can still re-plan it) with a warning.
-BROADCAST_CAP_BYTES = 512 << 20
-
-
-def _estimated_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (bytes), or None if the JVM
-    handle is unavailable (e.g. a mocked DataFrame in tests)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j edge
-        return None
+from smartpy_arc_spark.operators._ckpt import broadcast_if_small
 
 
 def enrich_join(
@@ -44,9 +32,7 @@ def enrich_join(
     enrich_id_fld: str,
     *,
     keep_common: bool = True,
-    broadcast: bool = True,
     suffix: str = "_r",
-    broadcast_cap_bytes: int = BROADCAST_CAP_BYTES,
 ) -> DataFrame:
     """Join ``enrich`` onto ``target``.
 
@@ -56,22 +42,12 @@ def enrich_join(
       (it duplicates the target key), and any other colliding enrichment
       column is suffixed — matching the reference's unqualified-fields
       materialization (arc_utils.py:948).
-    * ``broadcast=True`` is a *hint* guarded by a size estimate: if
-      Catalyst's optimized-plan stats put the enrichment side above
-      ``broadcast_cap_bytes``, we fall back to a shuffle join with a
-      warning rather than risk an executor OOM.
+    * The enrichment side is hinted as broadcast unless its leaf bytes
+      exceed ``_ckpt.BROADCAST_CAP_BYTES``; then it is joined by shuffle
+      with a warning rather than risk an executor OOM.
     """
     how = "inner" if keep_common else "left"
-    if broadcast:
-        est = _estimated_plan_bytes(enrich)
-        if est is not None and est > broadcast_cap_bytes:
-            warnings.warn(
-                f"enrich_join: enrichment side estimated at {est} bytes "
-                f"(> cap {broadcast_cap_bytes}); falling back to shuffle join",
-                stacklevel=2,
-            )
-            broadcast = False
-    right = F.broadcast(enrich) if broadcast else enrich
+    right = broadcast_if_small(enrich, "enrich_join")
 
     # Rename colliding non-key enrichment columns before the join so the
     # output needs no qualification.
@@ -111,7 +87,5 @@ def range_join(
     we get, minus any shuffle).  For two BIG interval sets, bucketize both
     by interval-aligned grid cells first and equi-join on the cell key.
     """
-    from pyspark.sql import functions as F
-
     cond = (F.col(value_col) >= ranges[lo_col]) & (F.col(value_col) < ranges[hi_col])
     return facts.join(F.broadcast(ranges), cond, how)

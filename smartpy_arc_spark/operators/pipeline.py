@@ -33,22 +33,6 @@ from smartpy_arc_spark.operators.quality import gopher_flags
 from smartpy_arc_spark.operators.sample import stratified_hash_sample
 
 
-def _ckpt_stage(df: DataFrame) -> DataFrame:
-    """Size-guarded eager localCheckpoint for a pipeline stage's survivor
-    frame: each stage's output feeds BOTH the next stage's key
-    computation and the semi-join that applies it, so an unmaterialized
-    stage re-executes everything upstream twice per level — the funnel's
-    docs scan appeared 9× in the r11 plan.  Serialized storage
-    (components._ckpt_edges discipline) since rows carry document text.
-
-    The survivor frames are O(input) WITH the full document text, so the
-    materialization is capped (r12, VERDICT r11 item 1): above
-    ``$SMARTPY_ARC_CKPT_CAP_BYTES`` the stage recomputes from lineage —
-    a column-pruned corpus re-scan per consumer instead of pinning the
-    whole corpus text in non-replicated storage."""
-    return sized_local_checkpoint(df)
-
-
 def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -67,12 +51,18 @@ def curate_corpus(
     quality_ids = gopher_flags(docs, text_col=text_col, id_col=id_col).where(
         "keep"
     ).select(id_col)
-    qdocs = _ckpt_stage(docs.join(quality_ids, id_col, "left_semi"))
+    # each stage's survivors feed the next stage's keys AND the semi-join
+    # applying them; unpinned, the docs scan ran 9x in the r11 plan
+    qdocs = sized_local_checkpoint(
+        docs.join(quality_ids, id_col, "left_semi")
+    )
 
     keepers = qdocs.groupBy(F.md5(F.col(text_col)).alias("_h")).agg(
         F.min(id_col).alias(id_col)
     ).select(id_col)
-    survivors = _ckpt_stage(qdocs.join(keepers, id_col, "left_semi"))
+    survivors = sized_local_checkpoint(
+        qdocs.join(keepers, id_col, "left_semi")
+    )
 
     clean_ids = (
         ngram_decontaminate(

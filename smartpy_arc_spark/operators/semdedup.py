@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
 
 
 def assign_clusters(
@@ -206,14 +207,10 @@ def semdedup(
     # and the final left join), and without this the whole assignment
     # pass — corpus scan + centroid broadcast + nearest-centroid
     # aggregate — executed three times per run (r11 plan audit: 6
-    # embeddings scans in one plan).  Serialized storage, the edge-table
-    # discipline from components._ckpt_edges: rows carry the full
-    # vector, so deserialized row blocks would be memory-heavy at scale.
-    from pyspark.storagelevel import StorageLevel
-
-    assigned = assign_clusters(
+    # embeddings scans in one plan).
+    assigned = sized_local_checkpoint(assign_clusters(
         df, id_col=id_col, vec_col=vec_col, k=k, two_level=two_level
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    ))
     a = assigned.select(
         F.col("cluster"), F.col(id_col).alias("__ida"),
         F.col("__v").alias("__va"), F.col("__n2v").alias("__na2"),

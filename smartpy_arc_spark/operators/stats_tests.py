@@ -26,19 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from pyspark.storagelevel import StorageLevel
 
+from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
 from smartpy_arc_spark.operators._stats_common import _check_e4_scale
 
-
-def _ckpt_big(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint for O(n)-keyed intermediate tables (per-item
-    sizes, per-item cells), stored serialized so the materialized copy
-    costs Tungsten-row bytes, not deserialized-object bytes — the
-    components._ckpt_edges storage discipline."""
-    return df.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
 
 def chi_square_independence(
     df: DataFrame, col_a: str, col_b: str
@@ -455,7 +446,7 @@ def kendall_tau_b(df: DataFrame, col_x: str, col_y: str) -> DataFrame:
     # densification join — materialize once (bounded |X|·|Y|; r11 §2.4),
     # SERIALIZED (ADVICE r11): high-cardinality inputs that ignore the
     # pre-bucket guidance should pin Tungsten bytes, not object graphs
-    cells = _ckpt_big(
+    cells = sized_local_checkpoint(
         df.select(F.col(col_x).alias("x"), F.col(col_y).alias("y"))
         .where(F.col("x").isNotNull() & F.col("y").isNotNull())
         .groupBy("x", "y")
@@ -473,7 +464,7 @@ def kendall_tau_b(df: DataFrame, col_x: str, col_y: str) -> DataFrame:
     # the windowed grid feeds the per-x totals, the scored join and the
     # per-y tie totals — materialize once (bounded |X|·|Y|; r11 §2.4),
     # serialized like `cells` above (this is the larger of the two)
-    dense = _ckpt_big(
+    dense = sized_local_checkpoint(
         dense.withColumn("rowcum", F.sum("n").over(wy))
         .withColumn("colcum", F.sum("n").over(wx))
         .withColumn("p_incl", F.sum("rowcum").over(wx))
@@ -1382,7 +1373,7 @@ def fleiss_kappa(
     ).where(F.col("i").isNotNull() & F.col("r").isNotNull())
     # per-item sizes feed the modal-count aggregate, the kept join AND
     # the driver-side n_excluded count — materialize once (r11, §2.4)
-    sizes = _ckpt_big(
+    sizes = sized_local_checkpoint(
         base.groupBy("i").agg(F.count("*").cast("long").alias("n_i"))
     )
     # modal rater count = the design's n (count desc, n asc tiebreak)
@@ -1397,7 +1388,7 @@ def fleiss_kappa(
     n_excluded = sizes.count()
     # per-(item, rating) cells feed the per-item and per-category
     # aggregates — materialize once so the base join runs once (r11)
-    cells = _ckpt_big(
+    cells = sized_local_checkpoint(
         base.join(kept.select("i", "n_raters"), "i")
         .groupBy("i", "r", "n_raters")
         .agg(F.count("*").cast("long").alias("n_ij"))

@@ -85,29 +85,6 @@ def test_copy_oids_order_no_single_partition_exchange(spark):
     assert [r.oid for r in rows] == list(range(1, 10_001))
 
 
-def test_enrich_join_broadcast_cap_falls_back_to_shuffle(spark):
-    import warnings as _w
-
-    big = spark.range(1000).withColumnRenamed("id", "k")
-    side = spark.range(500).withColumnRenamed("id", "ek")
-    # disable Spark's own auto-broadcast so the plan reflects only our hint
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            out = enrich_join(big, side, "k", "ek", broadcast_cap_bytes=1)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert any("falling back to shuffle join" in str(w.message) for w in caught)
-        # sanity: under the default cap the hint does broadcast
-        hinted = enrich_join(big, side, "k", "ek")
-        hplan = hinted._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in hplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_ap_ratio_circle_is_one(spark):
     import math
 

@@ -80,34 +80,6 @@ def test_normalize_sf_mismatch_is_inert():
 
 # ------------------------------------------------- serialized edge checkpoint
 
-def test_ckpt_edges_storage_level_and_values(spark):
-    """_ckpt_edges stores serialized MEMORY_AND_DISK (the O(E)-table
-    level) and is value-transparent."""
-    from pyspark.storagelevel import StorageLevel
-
-    from smartpy_arc_spark.operators.components import _ckpt_edges
-
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(100)], "s long, d long")
-    ck = _ckpt_edges(df)
-    # `.rdd` wraps the plan in a fresh conversion RDD (level NONE), so
-    # inspect the blocks the checkpoint actually registered with the
-    # block manager: at least one cached RDD must be memory+disk and
-    # SERIALIZED (deserialized=False)
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    levels = [
-        (
-            i.storageLevel().useMemory(),
-            i.storageLevel().useDisk(),
-            i.storageLevel().deserialized(),
-        )
-        for i in infos
-    ]
-    assert (True, True, False) in levels, levels
-    assert StorageLevel.MEMORY_AND_DISK.deserialized is False
-    assert sorted(ck.collect()) == sorted(df.collect())
-
-
 def test_graph_ops_survive_checkpoint_level(spark):
     """End-to-end value pin across the operators whose edge checkpoints
     moved to the serialized level: a fixed 2-component graph."""
