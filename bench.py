@@ -167,8 +167,9 @@ HEAVY_TAIL_QUERIES = [
                               #   sums, codegen-stable y-table rounds);
                               #   ~11 driver-loop jobs, so the most
                               #   dispatch-latency-sensitive entry
-    "mst",                    # 4.0s — Borůvka rounds (r7: probe folded
-                              #   into the chosen checkpoint)
+    "mst",                    # Borůvka with a bounded driver-side
+                              #   Kruskal finish: 8 jobs at sf0.01
+                              #   (46 when every round ran distributed)
     "louvain",                # 4.1s — local-move + coarsen rounds
                               #   (r7: per-level deg checkpointed)
     "perplexity_buckets",     # 3.0s (r6 staging+int64 keys; was ~28)

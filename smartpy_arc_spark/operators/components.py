@@ -12,9 +12,13 @@ with tiny diameters, so 3-5 rounds in practice.  Each round is one
 shuffle-join keyed by node id; ``localCheckpoint`` truncates the growing
 lineage so round N doesn't replay rounds 1..N-1.
 
-This is the designated "iterative algorithm" surface of the engine: no
-driver-side graph, no collect — state lives in a (node, label) DataFrame
-at any scale.
+This is the designated "iterative algorithm" surface of the engine: state
+lives in a (node, label) DataFrame at any scale.  The one driver-side graph
+is bounded by construction: ``minimum_spanning_forest`` probes each
+Borůvka round's remaining edges with a ``limit(LOCAL_FINISH_EDGES + 1)``
+collect and, once they fit (≤ 2^16 rows, ~2.6 MB), finishes the forest
+with Kruskal on the driver instead of paying ~15 jobs per further round;
+the picked edges return as an Arrow-built DataFrame.
 """
 
 from __future__ import annotations
@@ -1278,6 +1282,40 @@ def clustering_coefficient(
     )
 
 
+# Borůvka hands the rest of the forest to a driver-side Kruskal once a
+# round's inter-component edge list fits under this many rows.  The probe
+# is a ``limit(LOCAL_FINISH_EDGES + 1)`` collect, so the driver never
+# holds more than ~2.6 MB (five longs per row) whatever the input size;
+# below the bound, sorting the remainder locally is cheaper than the
+# ~15 jobs of one more distributed round (hook, pointer doubling,
+# relabel).  A constant, not an option: the output does not depend on
+# it, only the job count does.
+LOCAL_FINISH_EDGES = 1 << 16
+
+
+def _kruskal_finish(rows: list) -> list[tuple[int, int, int]]:
+    """Spanning forest of the contracted multigraph: Kruskal over
+    ``(w, s, d, cs, cd)`` rows under the strict ``(w, s, d)`` order (a
+    NULL weight sorts first, as in the distributed rounds' struct
+    ``min``), union-find on the component labels ``cs``/``cd``.
+    Returns the picked ``(s, d, w)`` edges."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    picked = []
+    for w, s, d, cs, cd in sorted(rows, key=lambda r: (r[0] is not None, r)):
+        a, b = find(cs), find(cd)
+        if a != b:
+            parent[a] = b
+            picked.append((s, d, w))
+    return picked
+
+
 def minimum_spanning_forest(
     edges: DataFrame,
     *,
@@ -1286,20 +1324,33 @@ def minimum_spanning_forest(
     weight_col: str = "w",
     max_rounds: int = 20,
 ) -> DataFrame:
-    """Distributed Borůvka minimum spanning forest: each round every
-    component selects its lightest outgoing edge, the selected edges
-    join the forest, and components merge — component count at least
-    halves per round, so ``max_rounds = 20`` covers 10⁶ components.
+    """Borůvka minimum spanning forest with a bounded driver-side finish:
+    each distributed round every component selects its lightest outgoing
+    edge, the selected edges join the forest, and components merge —
+    component count at least halves per round, so ``max_rounds = 20``
+    covers 10⁶ components.
 
     Cycle-safety under ties: "lightest" uses the STRICT total order
     ``(w, s, d)`` (a unique minimum per component can never close a
     cycle — the classic Borůvka tie rule), so the output forest is
     deterministic even with duplicate weights.
 
-    Everything is key-partitioned: per-component ``min_by`` aggregates,
-    hash joins against the (checkpointed) component labels, and a
-    pointer-jumping CC pass over each round's SELECTED edges only (a
-    graph with ≤ one edge per component).  No driver-side adjacency.
+    Each round first probes its inter-component edge list with a
+    ``limit(LOCAL_FINISH_EDGES + 1)`` collect.  When the probe holds
+    every remaining edge, Kruskal on the driver finishes the forest and
+    the loop stops: under the strict order the minimum spanning forest
+    is unique, every edge Borůvka already picked belongs to it, and the
+    rest is the spanning forest of the contracted multigraph, which
+    Kruskal under the same order returns exactly.  The picked edges
+    come back through Arrow (``createDataFrame`` of a pandas frame), so
+    no Python worker starts.  Round 1's labels are the identity, so it
+    probes without a label join, and an empty probe ends the loop
+    without a trailing empty round.
+
+    A distributed round is key-partitioned: per-component ``min_by``
+    aggregates, hash joins against the (checkpointed) component labels,
+    and a pointer-jumping CC pass over the round's SELECTED edges only
+    (a graph with ≤ one edge per component).
 
     Returns the forest edge list ``(s, d, w)``.
     """
@@ -1314,44 +1365,53 @@ def minimum_spanning_forest(
         .agg(F.min("w").alias("w"))
     )
     e = sized_local_checkpoint(e)
-    comp = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .withColumn("c", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
+    comp = None  # (node, c) labels, built once a distributed round runs
     forest = None
+    rest: list[tuple[int, int, int]] = []
     for _ in range(max_rounds):
-        lab = comp
-        annotated = (
-            e.join(
-                lab.select(F.col("node").alias("s"), F.col("c").alias("cs")),
-                "s",
+        if comp is None:
+            annotated = e.select(
+                "w", "s", "d", F.col("s").alias("cs"), F.col("d").alias("cd")
             )
-            .join(
-                lab.select(F.col("node").alias("d"), F.col("c").alias("cd")),
-                "d",
+        else:
+            annotated = (
+                e.join(
+                    comp.select(F.col("node").alias("s"), F.col("c").alias("cs")),
+                    "s",
+                )
+                .join(
+                    comp.select(F.col("node").alias("d"), F.col("c").alias("cd")),
+                    "d",
+                )
+                .where(F.col("cs") != F.col("cd"))
             )
-            .where(F.col("cs") != F.col("cd"))
+        probe = (
+            annotated.select("w", "s", "d", "cs", "cd")
+            .limit(LOCAL_FINISH_EDGES + 1)
+            .collect()
         )
+        if len(probe) <= LOCAL_FINISH_EDGES:
+            rest = _kruskal_finish(probe)
+            break
+        if comp is None:
+            comp = (
+                e.select(F.col("s").alias("node"))
+                .union(e.select(F.col("d").alias("node")))
+                .distinct()
+                .withColumn("c", F.col("node"))
+            )
         pick = F.struct("w", "s", "d", "cs", "cd")
         incident = annotated.select(
             F.col("cs").alias("comp"), pick.alias("e")
         ).union(annotated.select(F.col("cd").alias("comp"), pick.alias("e")))
+        # non-empty: the probe above found more than LOCAL_FINISH_EDGES
+        # inter-component edges
         chosen = (
             incident.groupBy("comp")
             .agg(F.min("e").alias("e"))
             .select("comp", "e.w", "e.s", "e.d", "e.cs", "e.cd")
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
-        # convergence probe IS the materializing action (r11): the LAZY
-        # checkpoint materializes on its first job, and a full count
-        # computes every partition — so checkpoint + probe collapse from
-        # two jobs per round to one.  (A limit(1) probe would materialize
-        # the checkpoint only partially — full count is required here.)
-        if chosen.count() == 0:
-            break
         # an edge picked by both endpoints appears twice here; the final
         # (s, d) groupBy dedups, so no per-round distinct exchange
         sel = chosen.select("s", "d", "w")
@@ -1432,9 +1492,20 @@ def minimum_spanning_forest(
             )
             .localCheckpoint(eager=True)
         )
-    if forest is None:
+    out = None
+    if forest is not None:
+        out = forest.groupBy("s", "d").agg(F.min("w").alias("w"))
+    if rest:
+        import pandas as pd
+
+        local = e.sparkSession.createDataFrame(
+            pd.DataFrame(rest, columns=["s", "d", "w"], dtype="Int64"),
+            "s long, d long, w long",
+        )
+        out = local if out is None else out.unionByName(local)
+    if out is None:
         return e.where(F.lit(False)).select("s", "d", "w")
-    return forest.groupBy("s", "d").agg(F.min("w").alias("w"))
+    return out
 
 
 def assortativity(

@@ -471,8 +471,9 @@ def distributed_exact_percentiles(
     by #groups × #cols × #occupied buckets, driver state likewise, and
     no checkpoint / cache of anything input-sized.  ``specs`` is a list
     of ``(value_col, fracs, out_col)``; the output has one row per group
-    present in ``df`` (groups whose values are all NULL yield NULL, like
-    the builtin) and one ``array<double>`` column per spec.  EAGER:
+    present in ``df`` (groups whose values are all NULL yield NULL, and an
+    empty ``fracs`` yields NULL for every group, like the builtin) and
+    one ``array<double>`` column per spec.  EAGER:
     collects the bounded histogram rows at construction time (the
     grand_totals discipline) — group cardinality must be bounded,
     exactly as the builtin's own per-group final buffers already
@@ -873,8 +874,10 @@ def distributed_exact_percentiles(
                 mins.append(F.min(F.lit(None).cast("double")).alias(f"__hi_{i}_{j}"))
                 elems.append(F.lit(None).cast("double"))
         # a group with zero non-null values in THIS column yields NULL
-        # (not an array of NULLs), exactly like the builtin's empty buffer
-        if rows_i:
+        # (not an array of NULLs), exactly like the builtin's empty buffer;
+        # so does every group of an empty-fracs spec, like percentile(c,
+        # array())
+        if rows_i and fracs:
             present = _lit_map({g: 1 for g, _ in rows_i}, "int")
             val_exprs.append(
                 F.when(present[gcol] == 1, F.array(*elems))
@@ -883,16 +886,16 @@ def distributed_exact_percentiles(
             )
         else:
             val_exprs.append(F.lit(None).cast("array<double>").alias(out_col))
-    brackets = cum.groupBy("__g").agg(*mins)
+    # every spec empty-fracs: no bracket to resolve, but agg() needs one
+    # expression; the select below drops it
+    brackets = cum.groupBy("__g").agg(*(mins or [F.count(F.lit(1))]))
     out = brackets.select("__g", *val_exprs)
 
-    # groups whose every value in every column is NULL have no surviving
-    # rows; their one all-NULL output row is appended from the (bounded)
-    # pass-1 group list
-    absent = [
-        g for g in groups
-        if all(n_gw.get((g, i), 0) == 0 for i in range(ncols))
-    ]
+    # groups with no rank target (every value NULL, or non-NULL only in
+    # empty-fracs specs) have no surviving rows; their one all-NULL
+    # output row is appended from the (bounded) pass-1 group list
+    targeted = {g for g, _ in targets}
+    absent = [g for g in groups if g not in targeted]
     if absent:
         from pyspark.sql.types import StructField, StructType
 

@@ -1,11 +1,18 @@
-"""Connected components (dedup clustering) and MERGE/SCD2 emulation."""
+"""Connected components (dedup clustering), Borůvka minimum spanning
+forest and MERGE/SCD2 emulation."""
 
 import datetime as dt
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from smartpy_arc_spark.operators.components import connected_components, dedup_clusters
+from smartpy_arc_spark.operators import components
+from smartpy_arc_spark.operators.components import (
+    connected_components,
+    dedup_clusters,
+    minimum_spanning_forest,
+)
 from smartpy_arc_spark.operators.merge import merge_upsert, scd2_apply
 
 
@@ -49,6 +56,134 @@ def test_dedup_clusters_keeper_flags(spark):
     rows = {r.node: r for r in dedup_clusters(pairs).collect()}
     assert rows[5].is_keeper and not rows[7].is_keeper and not rows[9].is_keeper
     assert all(r.component == 5 for r in rows.values())
+
+
+def _kruskal(nodes, edges):
+    """Reference MST with the same strict (w, s, d) total order."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    out = []
+    for w, a, b in sorted((w, a, b) for a, b, w in edges):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+            out.append((a, b, w))
+    return sorted(out)
+
+
+# LOCAL_FINISH_EDGES per MST path: the driver-side Kruskal finish alone
+# (default bound), distributed Borůvka rounds then the finish, and
+# distributed rounds only
+_MST_BOUNDS = {"local": None, "mixed": 20, "distributed": 0}
+
+
+@pytest.fixture(params=list(_MST_BOUNDS))
+def mst_path(request, monkeypatch):
+    """Pins minimum_spanning_forest to one path; ``check(n_edges)``
+    asserts the run took it, from the edge-list sizes handed to the
+    driver-side finish."""
+    bound = _MST_BOUNDS[request.param]
+    if bound is not None:
+        monkeypatch.setattr(components, "LOCAL_FINISH_EDGES", bound)
+    finished = []
+    finish = components._kruskal_finish
+
+    def spy(rows):
+        finished.append(len(rows))
+        return finish(rows)
+
+    monkeypatch.setattr(components, "_kruskal_finish", spy)
+
+    def check(n_edges):
+        if bound is None or n_edges <= bound:
+            # round 1 probes every edge and finishes at once
+            assert finished == [n_edges]
+        else:
+            # round 1 saw more than the bound, so at least one
+            # distributed round ran before the finish
+            assert len(finished) == 1 and finished[0] <= bound
+        finished.clear()
+
+    return check
+
+
+def test_mst_matches_kruskal_random_graphs(spark, mst_path):
+    for seed in (3, 11):
+        random.seed(seed)
+        nodes = list(range(14))
+        seen, edges = set(), []
+        for _ in range(40):
+            a, b = random.sample(nodes, 2)
+            a, b = min(a, b), max(a, b)
+            if (a, b) in seen:
+                continue
+            seen.add((a, b))
+            edges.append((a, b, random.randint(1, 8)))  # duplicate weights
+        df = spark.createDataFrame(edges, "s long, d long, w long")
+        got = sorted(
+            (r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect()
+        )
+        assert got == _kruskal(nodes, edges)
+        mst_path(len(edges))
+
+
+def test_mst_chain_exercises_pointer_doubling(spark, mst_path):
+    # strictly increasing weights along a 48-node path: every component's
+    # min edge hooks toward node 0, so the round-1 hook tree is a maximal-
+    # depth chain — the worst case for the parent pointer-doubling merge
+    edges = [(i, i + 1, 100 + i) for i in range(48)]
+    df = spark.createDataFrame(edges, "s long, d long, w long")
+    got = sorted((r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect())
+    assert got == sorted(edges)  # a path IS its own spanning tree
+    mst_path(len(edges))
+
+
+def test_mst_forest_on_disconnected_graph(spark, mst_path):
+    edges = [(1, 2, 5), (2, 3, 1), (1, 3, 2), (10, 11, 7)]
+    df = spark.createDataFrame(edges, "s long, d long, w long")
+    got = sorted((r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect())
+    # two trees: {(2,3,1),(1,3,2)} and {(10,11,7)}
+    assert got == [(1, 3, 2), (2, 3, 1), (10, 11, 7)]
+    mst_path(len(edges))
+
+
+def test_mst_single_edge_and_self_loop(spark, mst_path):
+    edges = [(1, 2, 3), (4, 4, 1)]  # self-loop must drop
+    df = spark.createDataFrame(edges, "s long, d long, w long")
+    got = [(r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect()]
+    assert got == [(1, 2, 3)]
+    mst_path(1)
+
+
+def test_mst_null_weight_sorts_first(spark, mst_path):
+    # a NULL weight is the lightest, as in the struct min of a distributed
+    # round, so both NULL edges join the forest
+    edges = [(1, 2, None), (2, 3, 5), (1, 3, 4), (3, 4, None)]
+    df = spark.createDataFrame(edges, "s long, d long, w long")
+    got = {(r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect()}
+    assert got == {(1, 2, None), (1, 3, 4), (3, 4, None)}
+    mst_path(len(edges))
+
+
+def test_mst_chain_job_count(spark):
+    """The driver-side finish keeps the 48-node chain to a handful of
+    Spark jobs; fully distributed Borůvka runs about 40 on it."""
+    edges = [(i, i + 1, 100 + i) for i in range(48)]
+    df = spark.createDataFrame(edges, "s long, d long, w long")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    minimum_spanning_forest(df).collect()
+    # job ids reach the tracker through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert 0 < len(jobs) <= 10, sorted(jobs)
 
 
 def test_merge_upsert_semantics(spark):

@@ -74,6 +74,14 @@ def test_exact_percentiles_bit_equal_edge_groups(spark):
     _check_percentiles(spark, rows, [0.5, 0.9], [0.25, 1.0])
 
 
+def test_exact_percentiles_bit_equal_empty_fracs(spark):
+    # group "1" is non-NULL only in the empty-fracs spec: it must keep its
+    # row, and an empty-fracs spec yields NULL, not []
+    rows = [("1", 1.0, None), ("1", 2.0, None), ("2", 3.0, 4.0)]
+    _check_percentiles(spark, rows, [], [0.5])
+    _check_percentiles(spark, rows, [], [])
+
+
 def test_exact_percentiles_bit_equal_constant(spark):
     rows = [("S", 42.0, 7.0) for _ in range(50)]
     _check_percentiles(spark, rows, [0.3, 0.6], [0.5])
@@ -162,14 +170,20 @@ def _louvain(df):
     return _sorted_rows(louvain_communities(df))
 
 
+_MST_CASE = (
+    [(s, d, (s * 7 + d * 3) % 5 + 1) for s, d in _two_cliques()],
+    "s long, d long, w long",
+    _mst,
+)
+# mst case -> components.LOCAL_FINISH_EDGES: the driver-side finish alone
+# (default), distributed rounds before it (bound 20 < the 23 edges), and
+# distributed rounds only (0)
+_MST_BOUNDS = {"mst": None, "mst_mixed": 20, "mst_distributed": 0}
+
 # case -> (input rows, input schema, operator run returning sorted rows)
 _CHECKPOINT_CASES = {
     "itemsets": (_baskets(), "bk long, it long", _itemsets),
-    "mst": (
-        [(s, d, (s * 7 + d * 3) % 5 + 1) for s, d in _two_cliques()],
-        "s long, d long, w long",
-        _mst,
-    ),
+    **{case: _MST_CASE for case in _MST_BOUNDS},
     "connected_components": (_two_cliques(), "id_a long, id_b long", _cc),
     "louvain": (_two_cliques(), "src long, dst long", _louvain),
 }
@@ -181,8 +195,13 @@ def test_identical_on_both_checkpoint_paths(spark, monkeypatch, tmp_path, case):
     whether their intermediates materialize (default) or recompute (cap
     exceeded).  Inputs go through parquet: a createDataFrame local has no
     leaf size, so the cap would never bite on it."""
+    from smartpy_arc_spark.operators import components
     from smartpy_arc_spark.operators._ckpt import leaf_input_bytes
 
+    if _MST_BOUNDS.get(case) is not None:
+        monkeypatch.setattr(
+            components, "LOCAL_FINISH_EDGES", _MST_BOUNDS[case]
+        )
     rows, schema, run = _CHECKPOINT_CASES[case]
     path = str(tmp_path / "in.parquet")
     spark.createDataFrame(rows, schema).write.parquet(path)

@@ -1,85 +1,5 @@
-"""Batch-23: Borůvka minimum spanning forest + window-suite semantics."""
-
-import random
-
-
-def _kruskal(nodes, edges):
-    """Reference MST with the same strict (w, s, d) total order."""
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    out = []
-    for w, a, b in sorted((w, a, b) for a, b, w in edges):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-            out.append((a, b, w))
-    return sorted(out)
-
-
-def test_mst_matches_kruskal_random_graphs(spark):
-    from smartpy_arc_spark.operators.components import (
-        minimum_spanning_forest,
-    )
-
-    for seed in (3, 11):
-        random.seed(seed)
-        nodes = list(range(14))
-        seen, edges = set(), []
-        for _ in range(40):
-            a, b = random.sample(nodes, 2)
-            a, b = min(a, b), max(a, b)
-            if (a, b) in seen:
-                continue
-            seen.add((a, b))
-            edges.append((a, b, random.randint(1, 8)))  # duplicate weights
-        df = spark.createDataFrame(edges, "s long, d long, w long")
-        got = sorted(
-            (r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect()
-        )
-        assert got == _kruskal(nodes, edges)
-
-
-def test_mst_chain_exercises_pointer_doubling(spark):
-    # strictly increasing weights along a 48-node path: every component's
-    # min edge hooks toward node 0, so the round-1 hook tree is a maximal-
-    # depth chain — the worst case for the parent pointer-doubling merge
-    from smartpy_arc_spark.operators.components import (
-        minimum_spanning_forest,
-    )
-
-    edges = [(i, i + 1, 100 + i) for i in range(48)]
-    df = spark.createDataFrame(edges, "s long, d long, w long")
-    got = sorted((r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect())
-    assert got == sorted(edges)  # a path IS its own spanning tree
-
-
-def test_mst_forest_on_disconnected_graph(spark):
-    from smartpy_arc_spark.operators.components import (
-        minimum_spanning_forest,
-    )
-
-    edges = [(1, 2, 5), (2, 3, 1), (1, 3, 2), (10, 11, 7)]
-    df = spark.createDataFrame(edges, "s long, d long, w long")
-    got = sorted((r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect())
-    # two trees: {(2,3,1),(1,3,2)} and {(10,11,7)}
-    assert got == [(1, 3, 2), (2, 3, 1), (10, 11, 7)]
-
-
-def test_mst_single_edge_and_self_loop(spark):
-    from smartpy_arc_spark.operators.components import (
-        minimum_spanning_forest,
-    )
-
-    edges = [(1, 2, 3), (4, 4, 1)]  # self-loop must drop
-    df = spark.createDataFrame(edges, "s long, d long, w long")
-    got = [(r.s, r.d, r.w) for r in minimum_spanning_forest(df).collect()]
-    assert got == [(1, 2, 3)]
+"""Batch-23: window-suite semantics (the Borůvka MST tests live in
+test_components_merge.py)."""
 
 
 def test_window_suite_tie_semantics(spark):
