@@ -168,7 +168,10 @@ def compat_cast_for_write(df: DataFrame) -> DataFrame:
       * bool → int32 (arc_utils.py:799-800)
       * int64 → int32 iff every value fits ±2147483647, else → float64
         (arc_utils.py:792-798) — the range test is a single distributed
-        aggregate over all long columns, not a per-row decision.
+        aggregate over all long columns, not a per-row decision.  It
+        compares max and min rather than ``max(abs)``: ``abs`` of
+        ``Long.MIN_VALUE`` overflows (an ANSI error, or a silent wrap to a
+        negative value that would pass the test).
 
     Timestamps are already µs in Spark (the reference's ns→µs step,
     arc_utils.py:801-802, is a no-op here).
@@ -177,7 +180,10 @@ def compat_cast_for_write(df: DataFrame) -> DataFrame:
     in_range: dict[str, bool] = {}
     if long_cols:
         aggs = [
-            (F.max(F.abs(F.col(c))) <= F.lit(INT32_MAX)).alias(c) for c in long_cols
+            (
+                (F.max(c) <= F.lit(INT32_MAX)) & (F.min(c) >= F.lit(-INT32_MAX))
+            ).alias(c)
+            for c in long_cols
         ]
         row = df.agg(*aggs).first()
         in_range = {c: bool(row[c]) if row[c] is not None else True for c in long_cols}

@@ -1,16 +1,25 @@
-"""The engine's one size policy: every pin and broadcast decision.
+"""The engine's one size policy: every pin, broadcast and state-width
+decision.
 
 This module is the only place that sizes a frame (``sizeInBytes``) and the
 only place that decides whether an intermediate is pinned
-(:func:`sized_local_checkpoint`) or a join side is broadcast
-(:func:`broadcast_if_small`).  Operators call these two functions; they do
-not size frames or pick storage levels themselves.
+(:func:`sized_local_checkpoint`), a join side is broadcast
+(:func:`broadcast_if_small`) or how wide a bounded stream's state is
+(:func:`stream_state_width`).  Operators and drains call these functions;
+they do not size frames, pick storage levels or set widths themselves.
 
 **The estimator** is the SUM OF LEAF-RELATION SIZES of the frame's
 optimized plan (:func:`leaf_input_bytes`): exact file bytes for parquet
 scans.  The plan-level estimate is not used: a join node's estimate is the
 PRODUCT of its children, and a driver-built ``createDataFrame`` local
-reports ``Long.MaxValue``.  Measured on sf0.01 (Spark 4.1.2):
+reports ``Long.MaxValue``.  A streaming frame is read from its analyzed
+plan, because ``optimizedPlan()`` throws on streaming plans; its V1 file
+source leaf (``StreamingRelation``) reports ``Long.MaxValue`` itself and
+is sized by its batch twin, ``dataSource.resolveRelation().sizeInBytes``:
+exact file bytes, ``pathGlobFilter`` honoured, and no schema-inference job
+because a stream's schema is user-specified.  ``StreamingRelationV2``
+leaves (rate, Python data sources, Kafka) stay unsized.  Measured on
+sf0.01 (Spark 4.1.2):
 
 =========================================  ===================  =================
 input                                      plan-stats estimate  leaf-sum estimate
@@ -18,6 +27,8 @@ input                                      plan-stats estimate  leaf-sum estimat
 10-row list ``createDataFrame``            9223372036854775807  None (unsized)
 ``customer`` filtered (enrichment side)    33,827               33,827
 ``orders ⋈ customer``                      9,518,850,146        315,225
+``events`` file stream, windowed counts    9223372036854775807  221,075
+``rate`` stream                            9223372036854775807  None (unsized)
 =========================================  ===================  =================
 
 Unsized frames are driver-built locals, whose rows already sit on the
@@ -47,6 +58,17 @@ Tungsten rows are a fraction of that and spill cleanly.
 degrading, so a hinted side whose leaf bytes exceed
 :data:`BROADCAST_CAP_BYTES` (512 MiB) is left unhinted with a warning,
 and the join falls back to a shuffle join that AQE can still re-plan.
+
+**Stream state width.**  Spark turns AQE off for stateful streams, so
+nothing coalesces a stateful shuffle, and every state partition opens a
+state store in every micro-batch (a delta file, its ``.crc`` and a
+checkpoint-checksum sidecar, each local create forking ``chmod``).  A
+bounded drain therefore runs its stateful shuffle at the width AQE would
+have coalesced its source to,
+``ceil(leaf bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
+clamped to ``[1, spark.sql.shuffle.partitions]``.  An unsized source keeps
+:data:`UNSIZED_STREAM_WIDTH`, the fixed width the drains ran at before
+they were sized.
 """
 
 from __future__ import annotations
@@ -59,6 +81,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 BROADCAST_CAP_BYTES = 512 << 20
+UNSIZED_STREAM_WIDTH = 8
 _DEFAULT_CAP_BYTES = 8 * 1024**3
 # Long.MaxValue (and anything close) marks an unsized leaf
 _UNSIZED_SENTINEL = 1 << 62
@@ -70,14 +93,24 @@ def ckpt_cap_bytes() -> int:
     )
 
 
+def _leaf_bytes(leaf) -> int:
+    if leaf.nodeName() == "StreamingRelation":
+        # a V1 streaming file source: size its batch twin
+        return int(leaf.dataSource().resolveRelation(True, False).sizeInBytes())
+    return int(str(leaf.stats().sizeInBytes()))
+
+
 def leaf_input_bytes(df: DataFrame) -> int | None:
-    """Sum of the optimized plan's leaf-relation sizes in bytes, or None
-    when any leaf is unsized."""
+    """Sum of the plan's leaf-relation sizes in bytes (the optimized plan,
+    or the analyzed plan of a streaming frame), or None when any leaf is
+    unsized."""
     try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        qe = df._jdf.queryExecution()
+        plan = qe.analyzed() if df.isStreaming else qe.optimizedPlan()
+        leaves = plan.collectLeaves()
         total = 0
         for i in range(leaves.size()):
-            size = int(str(leaves.apply(i).stats().sizeInBytes()))
+            size = _leaf_bytes(leaves.apply(i))
             if size >= _UNSIZED_SENTINEL:
                 return None
             total += size
@@ -109,3 +142,19 @@ def broadcast_if_small(df: DataFrame, what: str) -> DataFrame:
         )
         return df
     return F.broadcast(df)
+
+
+def stream_state_width(df: DataFrame) -> tuple[int, int | None]:
+    """``(width, source bytes)`` for a bounded stream's stateful shuffle:
+    ``ceil(leaf bytes / advisoryPartitionSizeInBytes)`` clamped to
+    ``[1, spark.sql.shuffle.partitions]``, or
+    ``(UNSIZED_STREAM_WIDTH, None)`` for an unsized source."""
+    est = leaf_input_bytes(df)
+    if est is None:
+        return UNSIZED_STREAM_WIDTH, None
+    spark = df.sparkSession
+    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-est // target))), est

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smartpy_arc_spark.operators._ckpt import stream_state_width
+
 # micro-batch counts of the most recent drain per runner, keyed by the
 # memory-sink query name — diagnostics for the dispatch-latency story
 # (every micro-batch is its own job cascade, so batch count is the
@@ -34,6 +36,29 @@ def _record_batches(q) -> None:
     if p is not None:
         # batchIds start at 0; +1 = number of micro-batches executed
         last_drain_batches[p["name"] or p["id"]] = p["batchId"] + 1
+
+
+# the stateful-shuffle width of the most recent drain per runner and the
+# source bytes it was derived from (None: unsized source), keyed like
+# last_drain_batches.  Read by tools/stream_batches.py; a plain dict.
+last_drain_widths: dict[str, dict] = {}
+
+
+def _start_at_state_width(stream_df: DataFrame, name: str, start):
+    """Call ``start()`` with ``spark.sql.shuffle.partitions`` scoped to the
+    stream's state width (``_ckpt.stream_state_width``); the value is
+    captured when the stream starts and pinned in its checkpoint
+    thereafter."""
+    width, source_bytes = stream_state_width(stream_df)
+    last_drain_widths[name] = {"width": width, "source_bytes": source_bytes}
+    conf = stream_df.sparkSession.conf
+    prior = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        return start()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prior)
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded parquet dir as a stream source.
@@ -338,40 +363,38 @@ def run_stream_to_memory(
     *,
     output_mode: str = "complete",
     name: str | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain a (bounded-source) streaming query synchronously into a memory
     sink and return the result table — the local verification harness for
     streaming operators.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to this
-    query's startup (the value is captured when the stream STARTS and
-    pinned in the checkpoint thereafter): every stateful-shuffle partition
-    materializes a state-store instance PER MICRO-BATCH, so a stream whose
-    keyspace is far below the batch default pays pure instancing overhead
-    — measured 2.1s → 1.3s on the sf0.1 window-count drain at 32 → 8.
-    Size it to the stream's key cardinality, not the batch session
-    default; ``None`` keeps the session value.
+    The stateful shuffle runs at the width AQE would have coalesced the
+    source to (``_ckpt.stream_state_width``: source bytes over
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, clamped to
+    ``[1, spark.sql.shuffle.partitions]``; 8 for an unsized source).
+    Spark disables AQE for stateful streams, and every state partition
+    opens a state store per micro-batch, so width is the drain's cost
+    driver.  Measured on a 4-vCPU host (Spark 4.1.2, sf0.01, median of 6
+    calls): the window-count drain (221 KB source) runs at width 1 instead
+    of the former fixed 8 and falls from 2.13 to 1.33 CPU-s, the
+    stream-stream join from 9.83 to 3.25.  The price is on the Python
+    stateful drains, where one task now holds every key: their walls
+    stay flat (first_seen 1.87 → 1.90 s, sessionize 1.20 → 1.22 s)
+    while their CPU falls by 37–58 %.
     """
     name = name or f"stream_out_{uuid.uuid4().hex[:8]}"
-    spark = stream_df.sparkSession
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
+    q = _start_at_state_width(
+        stream_df,
+        name,
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start,
+    )
     q.awaitTermination()
     _record_batches(q)
-    return spark.table(name)
+    return stream_df.sparkSession.table(name)
 
 
 def stream_upsert_to_parquet(
@@ -593,7 +616,6 @@ def run_stream_until_idle(
     idle_polls: int = 1,
     poll_sec: float = 0.05,
     timeout_sec: float = 120.0,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain a BOUNDED custom streaming source to a memory sink.
 
@@ -616,11 +638,11 @@ def run_stream_until_idle(
     timestamp) with ``numInputRows == 0`` and the engine reporting no
     data available — strictly stronger evidence, and the tail shrinks
     from ~0.3 s of held polls to one 100 ms-cadence event.
-    ``state_partitions`` scopes the stateful-shuffle width exactly like
-    :func:`run_stream_to_memory` (every state partition instantiates a
-    state store PER MICRO-BATCH, and the continuous-trigger drain runs
-    several batches) — size it to key cardinality, ``None`` keeps the
-    session value.
+    The stateful-shuffle width is sized exactly as in
+    :func:`run_stream_to_memory`; the in-repo generator sources are
+    unsized, so they keep width 8.  Raises ``TimeoutError`` when
+    ``timeout_sec`` passes before idleness is proven, rather than return
+    the partial table the memory sink holds.
     """
     import time
 
@@ -631,25 +653,21 @@ def run_stream_until_idle(
     # is observed promptly (value captured at stream start)
     conf_key = "spark.sql.streaming.noDataProgressEventInterval"
     prior = spark.conf.get(conf_key, None)
-    part_key = "spark.sql.shuffle.partitions"
-    prior_parts = spark.conf.get(part_key)
     spark.conf.set(conf_key, "100ms")
-    if state_partitions is not None:
-        spark.conf.set(part_key, str(state_partitions))
     try:
-        q = (
+        q = _start_at_state_width(
+            stream_df,
+            name,
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
-            .start()
+            .start,
         )
     finally:
         if prior is None:
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prior)
-        if state_partitions is not None:
-            spark.conf.set(part_key, prior_parts)
     try:
         idle = 0
         last_ts = None
@@ -668,7 +686,12 @@ def run_stream_until_idle(
         q.stop()
         q.awaitTermination()
         _record_batches(q)
-    return stream_df.sparkSession.table(name)
+    if idle < idle_polls:
+        raise TimeoutError(
+            f"stream {name}: not idle after {timeout_sec} s and "
+            f"{last_drain_batches.get(name, 0)} micro-batches"
+        )
+    return spark.table(name)
 
 
 def streaming_ewma_anomaly(

@@ -105,6 +105,17 @@ def test_int_downcast_boundary(spark):
     assert dict(compat_cast_for_write(over).dtypes)["v"] == "double"
 
 
+def test_int_downcast_long_min_value(spark):
+    # abs(Long.MIN_VALUE) overflows: an ANSI error, or a wrap that passes
+    lo = -(2**63)
+    df = spark.createDataFrame([(lo,), (1,)], "v long")
+    out = compat_cast_for_write(df)
+    assert dict(out.dtypes)["v"] == "double"
+    assert sorted(r.v for r in out.collect()) == [float(lo), 1.0]
+    below = spark.createDataFrame([(-2147483648,)], "v long")
+    assert dict(compat_cast_for_write(below).dtypes)["v"] == "double"
+
+
 def test_bool_to_int_cast(spark):
     df = spark.createDataFrame([(True,), (False,)], "b boolean")
     out = compat_cast_for_write(df)

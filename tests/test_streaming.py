@@ -1,0 +1,125 @@
+"""The streaming drains in ``streaming/stream.py``: the state width each
+bounded drain derives from its source (``_ckpt.stream_state_width``), the
+rows it yields at any width, and the timeout of the continuous-trigger
+drain."""
+
+import os
+import uuid
+
+import pytest
+
+from smartpy_arc_spark.operators._ckpt import stream_state_width
+from smartpy_arc_spark.streaming import stream as st
+
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@pytest.fixture
+def advisory(spark):
+    """Set the advisory partition size for one test, then restore it."""
+    prev = spark.conf.get(ADVISORY)
+    yield lambda size: spark.conf.set(ADVISORY, size)
+    spark.conf.set(ADVISORY, prev)
+
+
+@pytest.fixture
+def sf0_01(sf_dir):
+    """The sf0.01 tables, next to the suite's default scale factor."""
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+def _events_bytes(sf_dir):
+    return os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+
+
+def test_sf0_01_events_drain_runs_at_width_1(spark, sf0_01):
+    """221 KB of events is far below one advisory partition (64 MB): the
+    drain starts with one state partition, and the session's shuffle
+    width is restored after start()."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    counts = st.windowed_event_counts(st.read_events_stream(spark, sf0_01))
+    name = f"w_{uuid.uuid4().hex[:8]}"
+    q = st._start_at_state_width(
+        counts, name,
+        counts.writeStream.outputMode("complete").format("memory")
+        .queryName(name).trigger(availableNow=True).start,
+    )
+    q.awaitTermination()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+    assert st.last_drain_widths[name] == {
+        "width": 1, "source_bytes": _events_bytes(sf0_01)}
+    ops = q.lastProgress["stateOperators"]
+    assert [o["numShufflePartitions"] for o in ops] == [1]
+    assert spark.table(name).count() > 0
+
+
+def test_width_is_source_bytes_over_advisory_size(spark, sf0_01, advisory):
+    counts = st.windowed_event_counts(st.read_events_stream(spark, sf0_01))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    advisory("64KB")
+    # ceil(221075 / 65536) = 4
+    assert stream_state_width(counts) == (
+        min(4, cap), _events_bytes(sf0_01))
+    advisory("1b")
+    assert stream_state_width(counts)[0] == cap
+
+
+def test_unsized_source_keeps_width_8(spark):
+    from smartpy_arc_spark.sources.eventgen import register_eventgen
+
+    register_eventgen(spark)
+    gen = spark.readStream.format("eventgen").load()
+    assert stream_state_width(gen.groupBy("user_id").count()) == (8, None)
+
+
+def test_until_idle_raises_on_timeout(spark):
+    """A rate-micro-batch source adds rows in every batch, so it never
+    goes idle: the drain raises instead of returning the partial table
+    the memory sink holds."""
+    rate = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .load()
+    )
+    agg = rate.groupBy((rate.value % 3).alias("k")).count()
+    name = f"rate_{uuid.uuid4().hex[:8]}"
+    with pytest.raises(TimeoutError, match=name):
+        st.run_stream_until_idle(agg, name=name, timeout_sec=2)
+    assert st.last_drain_widths[name] == {"width": 8, "source_bytes": None}
+
+
+def _windowed(events):
+    return st.windowed_event_counts(events), "complete"
+
+
+def _sessions(events):
+    return st.streaming_sessionize(events), "complete"
+
+
+def _join(events):
+    return st.streaming_interval_join(events), "append"
+
+
+def _first_seen(events):
+    return st.streaming_first_seen(events), "append"
+
+
+def _dedup(events):
+    return st.streaming_distinct_keys(events), "append"
+
+
+@pytest.mark.parametrize(
+    "build", [_windowed, _sessions, _join, _first_seen, _dedup],
+    ids=["windowed", "sessionize", "stream_join", "first_seen", "dedup"],
+)
+def test_rows_identical_at_width_1_and_max(spark, sf_dir, advisory, build):
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    got = {}
+    for size, width in (("64MB", 1), ("1b", cap)):
+        advisory(size)
+        frame, mode = build(st.read_events_stream(spark, sf_dir))
+        name = f"eq_{uuid.uuid4().hex[:8]}"
+        out = st.run_stream_to_memory(frame, output_mode=mode, name=name)
+        assert st.last_drain_widths[name]["width"] == width
+        got[width] = sorted(out.collect(), key=repr)
+    assert got[1] and got[1] == got[cap]

@@ -19,6 +19,10 @@ watermark.  ``stream_custom_source`` runs a continuous-trigger drain of
 a rate-limited generator source, so its count is prefetch-paced by
 design and recorded for visibility, not gated.
 
+Next to the batch counts, ``state`` maps each query to the stateful
+shuffle width its drain chose and the source bytes behind it
+(``source_bytes`` null for an unsized source, which keeps width 8).
+
 Usage: python tools/stream_batches.py [sf_dir] [query ...]
 """
 
@@ -45,17 +49,21 @@ def main() -> None:
     if only:
         names = [n for n in names if n in only]
     counts: dict[str, int] = {}
+    state: dict[str, dict | None] = {}
     for name in names:
         st.last_drain_batches.clear()
+        st.last_drain_widths.clear()
         qs[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        drains = list(st.last_drain_batches.values())
+        drains = st.last_drain_batches
         # a query may drain several streams (stream-stream join helpers
-        # run one); record the max per contract query
-        counts[name] = max(drains) if drains else -1
+        # run one); record the drain with the most batches
+        top = max(drains, key=drains.get) if drains else None
+        counts[name] = drains[top] if top else -1
+        state[name] = st.last_drain_widths.get(top)
     print(json.dumps({"metric": "stream_micro_batches", "sf_dir": sf_dir,
-                      "batches": counts}))
+                      "batches": counts, "state": state}))
 
 
 if __name__ == "__main__":
