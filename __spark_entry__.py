@@ -36,6 +36,7 @@ from smartpy_arc_spark import (  # noqa: E402
     restore_null_sentinels,
     scan,
 )
+from smartpy_arc_spark.sources.scan import read_parquet  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -3063,7 +3064,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag", "l_linestatus", "l_extendedprice", "l_discount"
     )
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(d)
-    back = spark.read.parquet(d).where("l_returnflag = 'R'")
+    back = read_parquet(spark, d).where("l_returnflag = 'R'")
     return back.groupBy("l_linestatus").agg(
         F.count("*").cast("long").alias("n_rows"),
         F.round(

@@ -26,6 +26,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from smartpy_arc_spark.session import get_spark
+from smartpy_arc_spark.sources.scan import read_parquet
 
 # context managers keep their reference names
 from smartpy_arc_spark.plans.context import (  # noqa: F401
@@ -41,40 +42,41 @@ def _spark() -> SparkSession:
     return get_spark()
 
 
+def _frame(data) -> DataFrame:
+    """``data`` itself when it is a DataFrame, else the parquet table at
+    that path."""
+    return data if isinstance(data, DataFrame) else read_parquet(_spark(), data)
+
+
 def row_count(data) -> int:
     """arc_utils.py:33-39."""
-    df = data if isinstance(data, DataFrame) else _spark().read.parquet(data)
-    return df.count()
+    return _frame(data).count()
 
 
 def list_flds(data) -> list[str]:
     """arc_utils.py:42-55."""
-    df = data if isinstance(data, DataFrame) else _spark().read.parquet(data)
-    return list(df.columns)
+    return list(_frame(data).columns)
 
 
 def list_fld_types(data) -> dict:
     """arc_utils.py:58-63 (varchar lengths ride in metadata)."""
     from smartpy_arc_spark.sources.inspect import list_fld_types as _lft
 
-    df = data if isinstance(data, DataFrame) else _spark().read.parquet(data)
-    return _lft(df)
+    return _lft(_frame(data))
 
 
 def get_oid_fld(data):
     """arc_utils.py:67-72."""
     from smartpy_arc_spark.sources.inspect import get_oid_fld as _g
 
-    df = data if isinstance(data, DataFrame) else _spark().read.parquet(data)
-    return _g(df)
+    return _g(_frame(data))
 
 
 def get_shp_fld(data):
     """arc_utils.py:75-84."""
     from smartpy_arc_spark.sources.inspect import get_shp_fld as _g
 
-    df = data if isinstance(data, DataFrame) else _spark().read.parquet(data)
-    return _g(df)
+    return _g(_frame(data))
 
 
 def arc_to_pandas(
@@ -232,7 +234,7 @@ def pandas_to_features(
     from smartpy_arc_spark.sinks.write import write_table
 
     spark = _spark()
-    target = fc if isinstance(fc, DataFrame) else spark.read.parquet(fc)
+    target = _frame(fc)
     enrich = spark.createDataFrame(df) if isinstance(df, pd.DataFrame) else df
     joined = enrich_join(
         target, enrich, arc_id_fld, pd_id_fld, keep_common=keep_common
@@ -273,8 +275,7 @@ def create_layer(layer_name: str, table, flds=None, where: str | None = None,
     (name, table) argument order)."""
     from smartpy_arc_spark.plans.layer import create_layer as _cl
 
-    df = table if isinstance(table, DataFrame) else _spark().read.parquet(table)
-    return _cl(df, layer_name, flds=flds, where=where, shp_prefix=shp_prefix)
+    return _cl(_frame(table), layer_name, flds=flds, where=where, shp_prefix=shp_prefix)
 
 
 def get_field_map(src, flds, fld_lens: Mapping | None = None):
@@ -289,7 +290,7 @@ def copy_oids(fc, fld_name: str):
     the frame has a deterministic first column order)."""
     from smartpy_arc_spark.functions.scalar import copy_oids as _co
 
-    df = fc if isinstance(fc, DataFrame) else _spark().read.parquet(fc)
+    df = _frame(fc)
     return _co(df, fld_name, order_by=[df.columns[0]])
 
 
@@ -297,8 +298,7 @@ def add_ap_ratio(data, fld_name: str = "ap_ratio"):
     """arc_utils.py:586-606."""
     from smartpy_arc_spark.functions.scalar import add_ap_ratio as _ap
 
-    df = data if isinstance(data, DataFrame) else _spark().read.parquet(data)
-    return _ap(df, fld_name)
+    return _ap(_frame(data), fld_name)
 
 
 def get_centroids(polys, out_gdb: str | None = None, out_fc: str | None = None,
@@ -308,7 +308,7 @@ def get_centroids(polys, out_gdb: str | None = None, out_fc: str | None = None,
     from smartpy_arc_spark.geometry import get_centroids as _gc
     from smartpy_arc_spark.sinks.write import write_table
 
-    df = polys if isinstance(polys, DataFrame) else _spark().read.parquet(polys)
+    df = _frame(polys)
     out = _gc(df, flds_to_keep=flds_to_keep)
     if out_gdb and out_fc:
         return write_table(out, out_gdb, out_fc, overwrite=True,
@@ -452,6 +452,6 @@ def split_equal_area(in_polys, out_work: str, out_fc: str, max_acres: float,
     from smartpy_arc_spark.geometry import split_equal_area as _sea
     from smartpy_arc_spark.sinks.write import write_table
 
-    df = in_polys if isinstance(in_polys, DataFrame) else _spark().read.parquet(in_polys)
+    df = _frame(in_polys)
     parts = _sea(df, max_area_units=max_acres, flds=flds)
     return write_table(parts, out_work, out_fc, overwrite=True)

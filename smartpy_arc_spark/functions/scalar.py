@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smartpy_arc_spark.meta import tag_oid
+from smartpy_arc_spark.sources.scan import _DATE_TYPES, _NUMERIC_TYPES, _fill_sentinels
+
 
 def portable_hash64(c) -> "F.Column":
     """Engine-portable 60-bit hash of a string column: the first 15 hex
@@ -122,8 +124,6 @@ def clamp_timestamps(
 
 def fill_null_sentinels(df: DataFrame, **kw) -> DataFrame:
     """C5 forward direction: null → sentinel (scan default sentinels)."""
-    from smartpy_arc_spark.sources.scan import _fill_sentinels
-
     return _fill_sentinels(df, **kw)
 
 
@@ -135,7 +135,8 @@ def restore_null_sentinels(
     date_fill: str = "1678-01-01",
 ) -> DataFrame:
     """C5 reverse direction (arc_utils.py:739-745): sentinel → null, including
-    the literal string ``'nan'``.  Lossy by design — legitimate sentinel
+    the literal string ``'nan'``, for every type class ``_fill_sentinels``
+    fills.  Lossy by design — legitimate sentinel
     values become null; provided for reference parity, not as a default."""
     exprs = []
     for field in df.schema.fields:
@@ -144,15 +145,12 @@ def restore_null_sentinels(
             exprs.append(
                 F.when(c.isin(str_fill, "nan"), F.lit(None)).otherwise(c).alias(field.name)
             )
-        elif isinstance(field.dataType, (T.DoubleType, T.FloatType, T.LongType,
-                                         T.IntegerType, T.ShortType, T.ByteType)):
+        elif isinstance(field.dataType, _NUMERIC_TYPES):
             exprs.append(
                 F.when(c == F.lit(num_fill).cast(field.dataType), F.lit(None))
                 .otherwise(c).alias(field.name)
             )
-        elif isinstance(
-            field.dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
-        ):
+        elif isinstance(field.dataType, _DATE_TYPES):
             exprs.append(
                 F.when(c == F.lit(date_fill).cast(field.dataType), F.lit(None))
                 .otherwise(c).alias(field.name)

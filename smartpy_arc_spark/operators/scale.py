@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smartpy_arc_spark.sources.scan import read_parquet
+
 
 def salted_join(
     big: DataFrame,
@@ -997,9 +999,15 @@ def compact_small_files(
         p for p in _glob.glob(_os.path.join(src_dir, f"*{ext}"))
         if _os.path.isfile(p)
     ]
+
+    def load(path: str) -> DataFrame:
+        if fmt == "parquet":
+            return read_parquet(spark, path)
+        return spark.read.format(fmt).load(path)
+
     total = sum(_os.path.getsize(p) for p in files)
     n_out = max(1, _math.ceil(total / target_bytes))
-    df = spark.read.format(fmt).load(src_dir)
+    df = load(src_dir)
     if df.rdd.getNumPartitions() >= n_out:
         sized = df.coalesce(n_out)
     else:  # more output files than scan splits: only a shuffle can split
@@ -1009,7 +1017,7 @@ def compact_small_files(
         p for p in _glob.glob(_os.path.join(dst_dir, f"*{ext}"))
         if _os.path.isfile(p)
     ]
-    n_rows = spark.read.format(fmt).load(dst_dir).count()
+    n_rows = load(dst_dir).count()
     return spark.createDataFrame(
         [(len(files), len(after), n_rows)],
         "n_files_before int, n_files_after int, n_rows long",

@@ -11,7 +11,7 @@ Iceberg/Delta, reduced to what the engine needs):
 - publishing is one atomic ``os.rename`` of the manifest into
   ``<table>/_versions/v{N}.json`` — readers either see a version fully or
   not at all; no reader ever observes a half-written file set;
-- reads load exactly the manifest's file list (``spark.read.parquet(*files)``),
+- reads load exactly the manifest's file list (``read_parquet(spark, *files)``),
   so concurrent publishes never disturb a running read, and old versions
   stay readable until explicitly vacuumed.
 
@@ -33,6 +33,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from smartpy_arc_spark.sources.scan import read_parquet
 
 
 def _versions_dir(table_dir: str) -> str:
@@ -136,7 +138,7 @@ def read_snapshot(
     files = manifest["files"]
     if not files:
         raise ValueError(f"version {manifest['version']} has no files")
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def vacuum_snapshots(table_dir: str, *, keep_last: int = 2) -> list[str]:

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from smartpy_arc_spark.functions.scalar import compat_cast_for_write
 from smartpy_arc_spark.meta import tag_geometry
+from smartpy_arc_spark.sources.scan import read_parquet
 
 
 def _out_path(workspace: str, name: str, fmt: str = "parquet") -> str:
@@ -88,6 +89,8 @@ def write_table(
 
     if get_df_back:
         spark = df.sparkSession
+        if fmt == "parquet":
+            return read_parquet(spark, path)
         reader = spark.read.format(fmt)
         if fmt == "csv":
             reader = reader.option("header", True).option("inferSchema", True)
@@ -118,7 +121,10 @@ def compact_files(
             if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(total // (target_mb << 20), 1)
-    df = spark.read.format(fmt).load(path)
+    if fmt == "parquet":
+        df = read_parquet(spark, path)
+    else:
+        df = spark.read.format(fmt).load(path)
     tmp = path.rstrip("/") + ".compact.tmp"
     df.repartition(int(n_files)).write.mode("overwrite").format(fmt).save(tmp)
     bak = path.rstrip("/") + ".compact.bak"
@@ -209,7 +215,7 @@ def copy_feats(
     if isinstance(spark_or_df, DataFrame):
         df = spark_or_df
     else:
-        df = spark_or_df.read.parquet(source)
+        df = read_parquet(spark_or_df, source)
     if where:
         df = df.where(where)
     if flds is not None:

@@ -15,13 +15,28 @@ projection pruning and predicate pushdown into the parquet reader (the same
 optimizations the reference hand-delegates to the geodatabase engine).
 `.explain("formatted")` on a scan shows ``PushedFilters`` and a pruned
 ``ReadSchema`` — verified in tests/test_scan.py.
+
+Parquet schemas are resolved on the driver (``parquet_schema``): Spark's
+non-merging inference reads one footer — the first data file in full-path
+order — in a Spark job; the resolver reads that same footer through py4j
+with Spark's own reader and converter and hands the schema to the reader,
+so building a DataFrame runs no job.  It declines, and Spark infers as
+before with its own errors, for a non-local or glob path, a path with no
+data file, a ``_metadata``/``_common_metadata`` summary file, a session
+with ``spark.sql.parquet.mergeSchema`` on, or a footer read that raises
+(the last with a warning).  Every package read of a parquet path goes
+through ``read_parquet``.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import warnings
 from collections.abc import Mapping, Sequence
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,6 +51,122 @@ _NUMERIC_TYPES = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
 )
+_DATE_TYPES = (T.TimestampType, T.TimestampNTZType, T.DateType)
+
+# a Hadoop glob character or a URI scheme: paths Spark expands or reads
+# through a non-local filesystem, left to Spark's own inference
+_NOT_PLAIN_PATH = re.compile(r"[*?\[\]{}\\:]")
+
+_SPARK_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _hidden(name: str) -> bool:
+    """Spark's leaf-listing filter (``shouldFilterOutPathName``): names
+    starting with ``_`` or ``.`` are skipped, except ``_x=…`` partition
+    directories."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _inference_file(paths: Sequence[str]) -> str | None:
+    """The file Spark's non-merging parquet inference reads for ``paths``:
+    the first leaf data file in full-path order.  None when the paths are
+    not plain local paths, hold no data file, or hold a summary file
+    (which Spark would read instead)."""
+    leaves = []
+    for p in paths:
+        if not isinstance(p, str) or _NOT_PLAIN_PATH.search(p) or not os.path.exists(p):
+            return None
+        p = os.path.abspath(p)
+        if os.path.isfile(p):
+            if _hidden(os.path.basename(p)):
+                return None
+            leaves.append(p)
+            continue
+        for root, dirs, files in os.walk(p, followlinks=True):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for f in files:
+                if f.startswith(("_metadata", "_common_metadata")):
+                    return None
+                if not _hidden(f):
+                    leaves.append(os.path.join(root, f))
+    return min(leaves, default=None)
+
+
+def parquet_schema(spark: SparkSession, *paths: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(*paths)`` would infer, read on the
+    driver from the footer Spark's inference job reads, or None where
+    Spark must infer (see the module docstring).
+
+    The footer is read and converted by the calls Spark's inference makes
+    on an executor (``ParquetFileFormat.mergeSchemasInParallel``), so the
+    result follows the Spark row-metadata JSON, field metadata,
+    ``isAdjustedToUTC`` and ``nanosAsLong`` by construction.  Array and
+    map element nullability may come back stricter than inferred; the
+    reader's ``asNullable`` evens that out."""
+    leaf = _inference_file(paths)
+    if leaf is None:
+        return None
+    sc = spark.sparkContext
+    hconf = sc._jsc.hadoopConfiguration()
+    conf = spark._jsparkSession.sessionState().conf()
+    if (
+        not hconf.get("fs.defaultFS", "file:///").startswith("file:")
+        or conf.isParquetSchemaMergingEnabled()
+    ):
+        return None
+
+    def jclass(name: str) -> JavaClass:
+        # a direct handle: resolving ``spark._jvm.a.b.C`` costs one py4j
+        # round trip per package segment, most of a resolution's cost
+        return JavaClass(name, sc._gateway._gateway_client)
+
+    conv = jclass(_SPARK_PARQUET + "ParquetToSparkSchemaConverter")
+    try:
+        jpath = jclass("org.apache.hadoop.fs.Path")(leaf)
+        meta = jclass(_SPARK_PARQUET + "ParquetFooterReader").readFooter(
+            jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(jpath, hconf),
+            jclass("org.apache.parquet.format.converter.ParquetMetadataConverter")
+            .SKIP_ROW_GROUPS,
+        )
+        # the converter exactly as inference builds it: five flags from the
+        # session conf, the other three at their constructor defaults
+        converter = conv(
+            conf.isParquetBinaryAsString(),
+            conf.isParquetINT96AsTimestamp(),
+            getattr(conv, "$lessinit$greater$default$3")(),
+            conf.parquetInferTimestampNTZEnabled(),
+            conf.legacyParquetNanosAsLong(),
+            getattr(conv, "$lessinit$greater$default$6")(),
+            getattr(conv, "$lessinit$greater$default$7")(),
+            conf.parquetReaderRespectUnknownTypeAnnotation(),
+        )
+        schema = jclass(_SPARK_PARQUET + "ParquetFileFormat").readSchemaFromFooter(
+            jclass("org.apache.parquet.hadoop.Footer")(jpath, meta), converter
+        )
+        return T.StructType.fromJson(json.loads(schema.json()))
+    except Exception as exc:
+        java = getattr(exc, "java_exception", None)
+        kind = java.getClass().getName() if java is not None else type(exc).__name__
+        warnings.warn(
+            f"parquet_schema: footer of {leaf} unreadable ({kind}); "
+            "falling back to Spark schema inference",
+            stacklevel=2,
+        )
+        return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema from
+    :func:`parquet_schema` when it resolves: no inference job."""
+    reader = spark.read
+    schema = parquet_schema(spark, *paths)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 def _resolve_path(workspace: str, name: str | None, fmt: str = "parquet") -> str:
@@ -140,7 +271,7 @@ def scan(
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
     if fmt == "parquet":
-        df = reader.parquet(path)
+        df = read_parquet(spark, path)
     elif fmt == "csv":
         if schema is not None:
             # explicit schema: single pass over the file — inferSchema=True
@@ -277,9 +408,7 @@ def _fill_sentinels(
             exprs.append(F.coalesce(c, F.lit(str_fill)).alias(field.name))
         elif isinstance(field.dataType, _NUMERIC_TYPES):
             exprs.append(F.coalesce(c, F.lit(num_fill).cast(field.dataType)).alias(field.name))
-        elif isinstance(
-            field.dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
-        ):
+        elif isinstance(field.dataType, _DATE_TYPES):
             exprs.append(
                 F.coalesce(c, F.lit(date_fill).cast(field.dataType)).alias(field.name)
             )

@@ -65,15 +65,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     readStream requires an explicit schema, and the physical type of ``ts``
     depends on the writer (TIMESTAMP(NANOS) → long under the legacy conf;
-    µs writers → timestamp_ntz).  A footer-only batch probe of the same
-    file yields the exact schema the stream reader will see — no data is
-    scanned — and ``normalize_event_time`` then converts whichever ``ts``
-    arrived into a zoned µs timestamp.
+    µs writers → timestamp_ntz).  The events file's footer, read on the
+    driver (``parquet_schema``), yields the exact schema the stream reader
+    will see — no data is scanned and no Spark job runs — and
+    ``normalize_event_time`` then converts whichever ``ts`` arrived into a
+    zoned µs timestamp.
     """
-    from smartpy_arc_spark.sources.scan import normalize_event_time
+    from smartpy_arc_spark.sources.scan import normalize_event_time, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(f"{sf_dir}/events.parquet")
+    probe = read_parquet(spark, f"{sf_dir}/events.parquet")
     raw = (
         spark.readStream.schema(probe.schema)
         # readStream needs a directory; the glob narrows it to the events file
@@ -417,11 +418,12 @@ def stream_upsert_to_parquet(
     import tempfile
 
     from smartpy_arc_spark.operators.merge import merge_upsert
+    from smartpy_arc_spark.sources.scan import read_parquet
 
     def upsert(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
+            target = read_parquet(spark, target_path)
             # dedup within the batch: last writer wins is not defined for a
             # parquet sink, so enforce unique keys per batch
             merged = merge_upsert(target, batch, key)

@@ -1,13 +1,17 @@
 """Scan semantics: S1/S2 + C4/C5 quirks (SURVEY.md §2.1, §2.5)."""
 
+import contextlib
 import datetime as dt
+import glob
+import os
+import warnings
 
 import pytest
 from pyspark.sql import functions as F, types as T
 
 from smartpy_arc_spark import scan
 from smartpy_arc_spark.functions.scalar import clamp_timestamps
-from smartpy_arc_spark.sources.scan import _fill_sentinels
+from smartpy_arc_spark.sources.scan import _fill_sentinels, parquet_schema, read_parquet
 
 
 def test_scan_projection_and_rename(spark, sf_dir):
@@ -271,3 +275,187 @@ def test_open_workspace_registers_lazy_views(spark, sf_dir):
         "SELECT n_name FROM nation WHERE n_nationkey = 3"
     )._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "n_nationkey" in plan
+
+
+def test_restore_decimal_sentinel_becomes_null(spark):
+    # _fill_sentinels fills DecimalType (it is numeric); the restore must
+    # undo it like the double and int columns
+    from smartpy_arc_spark import fill_null_sentinels, restore_null_sentinels
+
+    df = spark.sql(
+        "SELECT 1 AS id, cast(null AS decimal(12,2)) AS m, "
+        "cast(null AS double) AS d, cast(null AS int) AS i"
+    )
+    back = restore_null_sentinels(fill_null_sentinels(df)).collect()[0]
+    assert back.m is None and back.d is None and back.i is None
+
+
+# --- driver-side parquet schema resolution (sources.scan.parquet_schema) ---
+
+@pytest.fixture(scope="module")
+def testdata_tables(sf_dir):
+    """Every table of the three testdata scale factors."""
+    root = os.path.dirname(sf_dir)
+    return sorted(
+        path
+        for sf in ("sf0.001", "sf0.01", "sf0.1")
+        for path in glob.glob(os.path.join(root, sf, "*.parquet"))
+    )
+
+
+@contextlib.contextmanager
+def _nanos_as_long(spark, value: str):
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
+
+
+def _assert_reads_like_inference(spark, *paths):
+    """The read schema with the resolved schema equals Spark's own
+    inference, metadata included (compared as JSON)."""
+    resolved = parquet_schema(spark, *paths)
+    assert resolved is not None, paths
+    got = spark.read.schema(resolved).parquet(*paths).schema
+    assert got.json() == spark.read.parquet(*paths).schema.json(), paths
+
+
+@pytest.mark.parametrize("nanos", ["false", "true"])
+def test_parquet_schema_matches_inference_on_testdata(spark, testdata_tables, nanos):
+    assert len(testdata_tables) == 30
+    with _nanos_as_long(spark, nanos), warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for path in testdata_tables:
+            _assert_reads_like_inference(spark, path)
+    assert not [w for w in caught if "parquet_schema" in str(w.message)]
+
+
+def test_parquet_schema_matches_inference_on_spark_written_dirs(spark, tmp_path):
+    from smartpy_arc_spark.meta import tag_geometry
+
+    df = spark.range(60).selectExpr(
+        "id",
+        "cast(id % 3 AS string) AS part",
+        "array(id, id + 1) AS arr",
+        "map(cast(id AS string), id * 1.5) AS m",
+        "named_struct('a', id, 'b', array(named_struct('c', cast(id AS string)))) AS st",
+        "cast(cast(id AS string) AS binary) AS geometry",
+    )
+    df = tag_geometry(df, "geometry", crs="EPSG:2223")
+    multi = str(tmp_path / "multi")
+    df.repartition(3).write.parquet(multi)
+    names = os.listdir(multi)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    parted = str(tmp_path / "parted")
+    df.write.partitionBy("part").parquet(parted)
+    for path in (multi, parted):
+        _assert_reads_like_inference(spark, path)
+    # several files: inference reads the first in sorted order
+    files = sorted(glob.glob(os.path.join(multi, "part-*.parquet")))
+    _assert_reads_like_inference(spark, *reversed(files))
+    # the geometry tag rides in field metadata, which the JSON compares
+    assert read_parquet(spark, multi).schema["geometry"].metadata
+
+
+def test_parquet_schema_follows_nanos_as_long(spark, tmp_path):
+    # parquet TIMESTAMP(NANOS): long under the legacy conf, an illegal type
+    # without it — where the resolver must leave Spark's own error in place
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ns.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path, version="2.6")
+    with _nanos_as_long(spark, "true"):
+        _assert_reads_like_inference(spark, path)
+        assert read_parquet(spark, path).dtypes == [("ts", "bigint")]
+    with _nanos_as_long(spark, "false"):
+        with pytest.raises(Exception) as inferred:
+            spark.read.parquet(path)
+        with pytest.warns(UserWarning, match="falling back"), pytest.raises(inferred.type):
+            read_parquet(spark, path)
+
+
+def test_parquet_schema_fallbacks_keep_spark_errors(spark, tmp_path):
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (str(empty), str(tmp_path / "missing")):
+        assert parquet_schema(spark, path) is None
+        with pytest.raises(Exception) as inferred:
+            spark.read.parquet(path)
+        with pytest.raises(inferred.type):
+            read_parquet(spark, path)
+
+
+def test_parquet_schema_defers_to_summary_files(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "summ"
+    d.mkdir()
+    pq.write_table(pa.table({"x": [1, 2]}), str(d / "part-0.parquet"))
+    pq.write_metadata(pa.schema([("x", pa.int64())]), str(d / "_common_metadata"))
+    assert parquet_schema(spark, str(d)) is None
+    assert read_parquet(spark, str(d)).schema == spark.read.parquet(str(d)).schema
+
+
+def test_parquet_schema_warns_and_falls_back_on_unreadable_footer(spark, tmp_path):
+    d = tmp_path / "corrupt"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.warns(UserWarning, match="falling back to Spark schema inference"):
+        assert parquet_schema(spark, str(d)) is None
+    with pytest.raises(Exception) as inferred:
+        spark.read.parquet(str(d))
+    with pytest.warns(UserWarning), pytest.raises(inferred.type):
+        read_parquet(spark, str(d))
+
+
+def test_parquet_reads_go_through_the_resolver():
+    """No package module but sources/scan.py reads parquet with Spark's
+    inference: a new ``read.parquet(`` call fails here."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "smartpy_arc_spark")
+    offenders = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, pkg) == os.path.join("sources", "scan.py"):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            for lineno, line in enumerate(fh, 1):
+                if "read.parquet(" in line:
+                    offenders.append(f"{path}:{lineno}")
+    assert not offenders, offenders
+
+
+def _jobs_run_by(spark, build):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    build()
+    # job ids reach the tracker through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(tracker.getJobIdsForGroup()) - before
+
+
+def test_scan_and_event_stream_run_no_job(spark, sf_dir, testdata_tables):
+    from smartpy_arc_spark.streaming.stream import read_events_stream
+
+    def build():
+        for path in testdata_tables:
+            scan(spark, os.path.dirname(path), os.path.basename(path))
+        read_events_stream(spark, sf_dir)
+
+    assert not _jobs_run_by(spark, build)
+
+
+@pytest.mark.parametrize("query", [
+    "enrich_join_inner", "null_sentinel_fill", "text_stats", "dedup_exact",
+    "knn_cosine", "geom_split", "wav_decode",
+])
+def test_building_bench_queries_runs_no_job(spark, sf_dir, query):
+    import __spark_entry__ as contract
+
+    q = getattr(contract, f"q_{query}")
+    assert not _jobs_run_by(spark, lambda: q(spark, sf_dir))
