@@ -1511,10 +1511,11 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12 (guide §5): computed via ``distributed_exact_percentiles`` — the
     former ``percentile(col, array(...))`` was an ObjectHashAggregate
     whose buffer holds EVERY value of the column in one final aggregation
-    task (an executor OOM at 100 TB); the replacement shuffles only the
-    distinct-value count table and interpolates from distributed ranks
-    with bit-identical arithmetic (equality pinned by
-    tests/test_round12_opt.py and the oracle hash)."""
+    task (an executor OOM at 100 TB); the replacement shuffles a bucket
+    histogram (group × column × occupied bucket) and the rows of the few
+    buckets that bracket each requested rank, and interpolates from exact
+    ranks with bit-identical arithmetic (equality pinned by
+    tests/test_percentiles.py and the oracle hash)."""
     from smartpy_arc_spark.operators.scale import distributed_exact_percentiles
 
     li = _t(spark, sf_dir, "lineitem")

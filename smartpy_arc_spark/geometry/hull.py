@@ -57,7 +57,9 @@ def convex_hulls(
             upper.append(p)
         return lower[:-1] + upper[:-1]  # CCW, starts at smallest point
 
-    def compute(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # no type hints: a partly-hinted function makes pyspark warn that it
+    # cannot infer the eval type before it falls back to grouped-map
+    def compute(key, pdf):
         points = list(zip(pdf["_x"].astype(float), pdf["_y"].astype(float)))
         h = hull_of(points)
         k = len(h)

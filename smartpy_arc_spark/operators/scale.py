@@ -402,14 +402,94 @@ def distributed_ntile(
     )
 
 
+REFINE_CAP = 1 << 22  # rows a bracketing bucket may carry to the final pass
+HIST_ROW_CAP = 1 << 16  # level-0 histogram rows the driver may collect
+_PCT_BITS = (4, 16, 28, 40)  # mantissa bits each refinement level resolves
+_PCT_TOP = 2101  # octave + 1075 <= 2099, so TOP << bits > any finite bucket
+
+
+def _pct_bucket(v: F.Column, level: int) -> F.Column:
+    """Order-preserving bucket of double ``v`` at refinement ``level``:
+    the sign-mirrored binary octave times ``2**_PCT_BITS[level]`` mantissa
+    slices, with one bucket each for ±0, ±Inf and NaN (Spark's largest
+    double) and NULL for NULL.
+
+    The octave ``floor(log2|v|)`` is non-decreasing in ``|v|`` (the JVM
+    ``log`` is semi-monotonic); a 1-ulp ``log2`` only clamps a value into
+    the adjacent slice.  Scaling by powers of two is exact (subnormals are
+    prescaled so the scale never overflows), so the slice at a deeper
+    level refines the slice above it: every level-d+1 bucket lies inside
+    one level-d bucket, and equal values share a bucket at every level."""
+    bits = _PCT_BITS[level]
+    top = F.lit(_PCT_TOP << bits).cast("long")
+    av = F.abs(v)
+    e = F.floor(F.log2(av))
+    frac = F.when(  # 2**-e overflows for subnormals: prescale them
+        e < -1000,
+        av * F.lit(2.0 ** 100) * F.pow(F.lit(2.0), (-e - 100).cast("double")),
+    ).otherwise(av * F.pow(F.lit(2.0), (-e).cast("double"))) - F.lit(1.0)
+    m = F.least(
+        F.greatest(F.floor(frac * F.lit(float(1 << bits))), F.lit(0).cast("long")),
+        F.lit((1 << bits) - 1).cast("long"),
+    )
+    mag = F.shiftleft(e + F.lit(1075), bits) + m + F.lit(1).cast("long")
+    return (  # a NULL v falls through to -mag, which is NULL
+        F.when(F.isnan(v), top + 1)
+        .when(v == F.lit(float("inf")), top)
+        .when(v == F.lit(float("-inf")), -top)
+        .when(v == F.lit(0.0), F.lit(0).cast("long"))
+        .when(v > 0, mag)
+        .otherwise(-mag)
+    )
+
+
+def _pct_walk(hist: dict, before: int, targets: list) -> list:
+    """Buckets of one histogram, in value order, that hold the sorted
+    1-based rank ``targets``: ``(bucket, rows before it, its rows, its
+    targets)``, where ``before`` counts the rows ahead of the histogram."""
+    out, i = [], 0
+    for b in sorted(hist):
+        j = i
+        while j < len(targets) and targets[j] <= before + hist[b]:
+            j += 1
+        if j > i:
+            out.append((b, before, hist[b], targets[i:j]))
+        i, before = j, before + hist[b]
+    return out
+
+
+def _lit_lookup(entries: dict, *key: F.Column) -> F.Column:
+    """``entries[key]`` per row, NULL where absent, for int or int-tuple
+    keys and int or float values.  A tuple key nests one literal map per
+    component, so a lookup scans only the maps along its path.  The maps
+    are one SQL expression: two JVM calls however many entries there are
+    (a map of ``F.lit`` pairs costs several per entry)."""
+    nested: dict = {}
+    for k, v in entries.items():
+        k = k if isinstance(k, tuple) else (k,)
+        d = nested
+        for part in k[:-1]:
+            d = d.setdefault(part, {})
+        d[k[-1]] = v
+
+    def sql(x) -> str:
+        if isinstance(x, dict):
+            return "map(" + ", ".join(
+                f"{k}L, {sql(v)}" for k, v in x.items()
+            ) + ")"
+        return f"{x!r}D" if isinstance(x, float) else f"{x}L"
+
+    col = F.expr(sql(nested))
+    for c in key:
+        col = col[c.cast("long")]
+    return col
+
+
 def distributed_exact_percentiles(
     df: DataFrame,
     specs: list[tuple[str, list[float], str]],
     *,
     group_col: str | None = None,
-    n_buckets: int = 4096,
-    refine_cap: int = 1 << 22,
-    max_refine: int = 3,
 ) -> DataFrame:
     """Bit-exact replica of ``percentile(col, array(*fracs))`` [per
     ``group_col``] WITHOUT the exact-percentile buffer (guide §5).
@@ -419,37 +499,30 @@ def distributed_exact_percentiles(
     column, merged through ONE final exchange — at 100 TB the final
     aggregation task for a hot group materializes the whole column's
     value domain in memory: an executor OOM, not a slow query.  This
-    primitive keeps the same exact semantics with BOUNDED state
-    everywhere, via driver-coordinated histogram bisection:
+    primitive keeps the same exact semantics with bounded state, by
+    driver-coordinated histogram bisection on one bucket map,
+    ``_pct_bucket``, at four nested levels (16, 2^16, 2^28 and 2^40
+    mantissa slices per octave):
 
-      1. one pass melts the requested columns and histograms each
-         (group, column) on a FIXED order-preserving bucket map — the
-         float's binary octave ``floor(log2|v|)`` (the JVM guarantees
-         ``log`` is semi-monotonic, so the octave is non-decreasing in
-         ``|v|``) refined 16-way by mantissa slice, sign-mirrored, with
-         dedicated buckets for ±0/±Inf/NaN/NULL — all codegen, no
-         Python, no sort, no prior min/max pass, no range-exchange
-         sampling.  The bounded collect (#groups × #cols × occupied
-         octave-slices) gives the driver every group's N (→ the rank
-         targets ``position = (N-1)·frac``), the group list (NULL rows
-         carry all-NULL groups), and the exact in-group rank range of
-         every bucket, locating the ≤ 2 buckets that bracket each
-         requested fraction;
-      2. buckets still holding more than ``refine_cap`` rows are
-         re-histogrammed into ``n_buckets`` equal-width sub-buckets
-         within their own bounds (≤ ``max_refine`` filtered passes; each
-         round multiplies the resolution, so mass that stays over the
-         cap is tie-mass, which collapses at step 3 anyway);
-      3. one final pass keeps ONLY rows in bracketing buckets (for
-         continuous data a few octave-slices of the input): a row_number
-         window over the survivor set plus a literal
-         count-of-skipped-rows map restores exact global in-group ranks
+      1. one pass melts the requested columns and counts rows per
+         (group, column, level-0 bucket) — codegen only, no sort, no
+         min/max pass.  The driver collects it (at most ``HIST_ROW_CAP``
+         rows) and learns every group's N, hence the rank targets
+         ``(N-1)·frac``, the group list (NULL rows keep all-NULL groups)
+         and the exact rank range of every bucket;
+      2. a bucket that brackets a target and holds more than
+         ``REFINE_CAP`` rows is re-counted at the next level: the same
+         histogram pass, filtered to the fat buckets.  Because the levels
+         nest, the children partition their parent in value order, so
+         one walk locates the targets at every level.  Keys are
+         (group, column, bucket) structs, never multiplied together.
+         Mass still over the cap at the last level is tie mass;
+      3. one final pass keeps ONLY rows in bracketing buckets: a
+         row_number window over the survivors plus a literal
+         skipped-rows offset per bucket restores exact in-group ranks,
          and one conditional-min aggregate resolves the brackets and
-         directly emits the one-row-per-group output (a driver-collect
-         variant of this step measured SLOWER — createDataFrame of the
-         literal result alone cost ~0.28 s — and was removed);
-      4. the interpolation replicates ``Percentile.getPercentile``'s
-         arithmetic exactly:
+         emits the one-row-per-group output;
+      4. the interpolation replicates ``Percentile.getPercentile``:
 
              position = (N-1).toDouble * frac            (Long * Double)
              lower, higher = floor(position), ceil(position)
@@ -459,130 +532,59 @@ def distributed_exact_percentiles(
                       lowerKey                      if higherKey == lowerKey
                       (higher-position)*lowerKey + (position-lower)*higherKey
 
-         with every float op the same separately-rounded IEEE double the
-         builtin performs: the two coefficients are computed driver-side
-         from the identical Long→Double conversions, and the
-         multiply-add runs in codegen in the same order.  Bucket
-         boundaries only steer which rows reach the final pass — the
-         bracket VALUES come from exact integer ranks, so neither
-         boundary rounding nor the off-by-an-octave a 1-ulp ``log2``
-         can produce may change a result bit.  Bit-equality vs the
-         builtin is pinned by tests/test_round12_opt.py.
+         with the two coefficients computed driver-side from the same
+         Long→Double conversions and the multiply-add run in codegen in
+         the same order.  Buckets only steer which rows reach the final
+         pass; the bracket VALUES come from exact integer ranks, so a
+         result bit never depends on where a bucket edge falls.
+         Bit-equality with the builtin is pinned by
+         tests/test_percentiles.py.
 
-    Scale shape: 2 + #refine column-pruned scans, every shuffle bounded
-    by #groups × #cols × #occupied buckets, driver state likewise, and
-    no checkpoint / cache of anything input-sized.  ``specs`` is a list
-    of ``(value_col, fracs, out_col)``; the output has one row per group
-    present in ``df`` (groups whose values are all NULL yield NULL, and an
-    empty ``fracs`` yields NULL for every group, like the builtin) and
-    one ``array<double>`` column per spec.  EAGER:
-    collects the bounded histogram rows at construction time (the
-    grand_totals discipline) — group cardinality must be bounded,
-    exactly as the builtin's own per-group final buffers already
-    require.  NULL group keys are rejected (create_map literals cannot
-    key on NULL); ±0.0 values follow Spark SQL grouping normalization
-    rather than the builtin's raw-key map, which only diverges on data
-    containing both -0.0 and +0.0.
+    Scale shape: 2 column-pruned scans plus one filtered scan per
+    refinement level used (at most 3); every shuffle and the driver
+    state are bounded by #groups × #cols × occupied buckets; nothing
+    input-sized is cached or checkpointed.  ``specs`` is a list of
+    ``(value_col, fracs, out_col)``; the output has one row per group
+    present in ``df`` (groups whose values are all NULL yield NULL, and
+    an empty ``fracs`` yields NULL for every group, like the builtin)
+    and one ``array<double>`` column per spec.  EAGER: collects the
+    histograms at construction time.  Raises ``ValueError`` for NULL
+    group keys (literal maps cannot key on NULL) and when the level-0
+    histogram exceeds ``HIST_ROW_CAP`` rows.  ±0.0 follow Spark SQL
+    grouping normalization rather than the builtin's raw-key map, which
+    only diverges on data holding both -0.0 and +0.0.
     """
     import math
 
     from pyspark.sql import Window
 
-    ncols = len(specs)
-    if group_col is not None:
-        sel = df.select(F.col(group_col).alias("__g"), *[
-            F.col(c).alias(f"__v{i}") for i, (c, _, _) in enumerate(specs)
-        ])
-    else:
-        sel = df.select(F.lit(0).alias("__g"), *[
-            F.col(c).alias(f"__v{i}") for i, (c, _, _) in enumerate(specs)
-        ])
-    # melt: one scan feeds every requested column's histogram
-    melted = sel.select(
-        "__g",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("__wc"),
-                    F.col(f"__v{i}").cast("double").alias("__v"),
-                )
-                for i in range(len(specs))
-            ])
-        ).alias("__e"),
-    ).select("__g", F.col("__e.__wc").alias("__wc"), F.col("__e.__v").alias("__v"))
+    g_expr = F.col(group_col) if group_col is not None else F.lit(0)
+    melted = df.select(
+        g_expr.alias("__g"),
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("__wc"), F.col(c).cast("double").alias("__v"))
+            for i, (c, _, _) in enumerate(specs)
+        ])).alias("__e"),
+    ).select("__g", "__e.__wc", "__e.__v")
+    g_type = melted.schema["__g"].dataType
 
-    # ---- fixed order-preserving double → bucket map (sign-mirrored
-    # octave × 16 mantissa slices).  MAG ≤ (1075+1024)·16; buckets:
-    #   -NULLB (null marker, kept only for group presence)
-    #   -INFB < -mag-1 < 0 (±0.0) < mag+1 < INFB < NANB (NaN is Spark's
-    #   largest double).  A 1-ulp-low log2 at an octave boundary only
-    #   shifts the value into the adjacent lower slice — the map stays
-    #   non-decreasing, which is all correctness needs.
-    MSUB = 16
-    INFB = (1075 + 1025) * MSUB + 2
-    NANB = INFB + 1
-    NULLB = -(NANB + 1)
-    KB = 2 * NANB + 3  # bucket values span (-NANB-1, NANB]
+    def _bucket_hist(rows: DataFrame, level: int, by: str) -> DataFrame:
+        b = _pct_bucket(F.col("__v"), level).alias("__b")
+        return rows.groupBy(by, "__wc", b).agg(F.count(F.lit(1)).alias("__n"))
 
-    def _bucket(vcol: F.Column) -> F.Column:
-        av = F.abs(vcol)
-        e = F.floor(F.log2(av))
-        m = F.floor(
-            (av * F.pow(F.lit(2.0), (-e).cast("double")) - F.lit(1.0))
-            * F.lit(float(MSUB))
+    # ---- level 0: the only unfiltered histogram, collected under a cap
+    hist0 = _bucket_hist(melted, 0, "__g").limit(HIST_ROW_CAP + 1).collect()
+    if len(hist0) > HIST_ROW_CAP:
+        raise ValueError(
+            f"distributed_exact_percentiles: the histogram over group column "
+            f"{group_col!r} has more than {HIST_ROW_CAP} (group, column, "
+            f"bucket) rows; use percentile_approx, or fewer groups"
         )
-        m = F.greatest(
-            F.lit(0).cast("long"), F.least(m, F.lit(MSUB - 1).cast("long"))
-        )
-        mag = (
-            F.greatest((e + F.lit(1075)).cast("long"), F.lit(0).cast("long"))
-            * MSUB + m
-        )
-        return (
-            F.when(vcol.isNull(), F.lit(NULLB).cast("long"))
-            .when(F.isnan(vcol), F.lit(NANB).cast("long"))
-            .when(vcol == F.lit(float("inf")), F.lit(INFB).cast("long"))
-            .when(vcol == F.lit(float("-inf")), F.lit(-INFB).cast("long"))
-            .when(vcol == F.lit(0.0), F.lit(0).cast("long"))
-            .when(vcol > 0, mag + 1)
-            .otherwise(-(mag + 1))
-        )
-
-    fixed_b = _bucket(F.col("__v"))
-
-    def _fixed_bounds(b: int) -> tuple[float, float]:
-        """Approximate [lo, hi] of a fixed bucket — only steers the
-        refinement sub-map (clamped), never the resolved values."""
-        if b == 0:
-            return (0.0, 0.0)
-        neg, magv = b < 0, abs(b) - 1
-        if magv >= INFB - 1:
-            return (0.0, 0.0)  # ±Inf / NaN buckets: single value, no split
-        ex, sl = magv // MSUB - 1075, magv % MSUB
-        lo = math.ldexp(1.0 + sl / MSUB, ex)
-        hi = math.ldexp(1.0 + (sl + 1) / MSUB, ex)
-        return (-hi, -lo) if neg else (lo, hi)
-
-    # ---- pass 1: the fixed histogram (the ONLY unfiltered pass).
-    # Grouped on the direct numeric (wc·KB + bucket) key per column —
-    # no struct melt on this pass, just an explode of ncols longs.
-    wbs = [
-        F.lit(i * KB).cast("long")
-        + _bucket(F.col(f"__v{i}").cast("double"))
-        + F.lit(NANB + 1).cast("long")
-        for i in range(ncols)
-    ]
-    hist1 = (
-        sel.select("__g", F.explode(F.array(*wbs)).alias("__wb"))
-        .groupBy("__g", "__wb")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .collect()
-    )
-    if any(r["__g"] is None for r in hist1):
+    if any(r["__g"] is None for r in hist0):
         raise ValueError(
             "distributed_exact_percentiles: NULL group keys unsupported"
         )
-    if not hist1 and group_col is None:
+    if not hist0 and group_col is None:
         # the ungrouped form emits exactly one row even on empty input,
         # like a global agg
         return df.sparkSession.range(1).select(*[
@@ -590,216 +592,82 @@ def distributed_exact_percentiles(
             for (_, _, out_col) in specs
         ])
 
-    groups: list = []
-    seen: set = set()
-    b1: dict[tuple, dict[int, int]] = {}  # (g, wc) -> bucket -> count
-    for r in hist1:
-        if r["__g"] not in seen:
-            seen.add(r["__g"])
-            groups.append(r["__g"])
-        wc, b = divmod(int(r["__wb"]), KB)
-        b -= NANB + 1
-        if b != NULLB:
-            b1.setdefault((r["__g"], wc), {})[b] = int(r["__cnt"])
+    # groups are numbered on the driver; every other literal map keys on
+    # the number, so it is built from one SQL string (_lit_lookup)
+    groups = list(dict.fromkeys(r["__g"] for r in hist0))
     gid = {g: i for i, g in enumerate(groups)}
-    n_gw = {gw: sum(bs.values()) for gw, bs in b1.items()}
+    gcol = F.create_map(
+        *[x for g, i in gid.items() for x in (F.lit(g), F.lit(i))]
+    )[F.col("__g")]
+    segs: dict[tuple, dict[int, int]] = {}  # (gid, wc) -> bucket -> rows
+    for r in hist0:
+        if r["__b"] is not None:  # NULL values only mark group presence
+            segs.setdefault((gid[r["__g"]], r["__wc"]), {})[r["__b"]] = r["__n"]
+    n_gw = {gw: sum(bs.values()) for gw, bs in segs.items()}
 
-    def _imap(d: dict, vcast: str) -> F.Column | None:
-        """int64-keyed literal map (None for empty — an argless
-        create_map() types its keys VOID and fails analysis)."""
-        if not d:
-            return None
-        return F.create_map(*[
-            x
-            for k, v in d.items()
-            for x in (F.lit(k).cast("long"), F.lit(v).cast(vcast))
-        ])
-
-    def _lit_map(d: dict, cast: str) -> F.Column:
-        return F.create_map(
-            *[
-                x
-                for k, v in d.items()
-                for x in (F.lit(k), F.lit(v).cast(cast))
-            ]
+    def _lookup(level: int, entries: dict) -> F.Column:
+        """Each row's value in ``entries``, keyed by (gid, column, bucket
+        at ``level``); NULL for rows outside it."""
+        return _lit_lookup(
+            entries, gcol, F.col("__wc"), _pct_bucket(F.col("__v"), level)
         )
 
     # rank targets per (group, column): the integer ranks (1-based) of the
     # two values bracketing every requested fraction
     targets: dict[tuple, list] = {}
-    for gw, n in n_gw.items():
+    for (gi, wc), n in n_gw.items():
         ts: set = set()
-        for p in specs[gw[1]][1]:
+        for p in specs[wc][1]:
             pos = float(n - 1) * float(p)
-            ts.add(math.floor(pos) + 1)
-            ts.add(math.ceil(pos) + 1)
+            ts.update((math.floor(pos) + 1, math.ceil(pos) + 1))
         if ts:
-            targets[gw] = sorted(ts)
+            targets[(gi, wc)] = sorted(ts)
 
-    if gid:
-        gmap = _lit_map(gid, "long")
-
-    # refinement item keys: key1 = (gid·ncols + wc)·KB + (b + NANB + 1),
-    # then key_{r+1} = key_r·n_buckets + sub-bucket — membership at any
-    # depth is recomputable in codegen from per-round (lo, scale) maps
-    round_maps: list[tuple[dict, dict]] = []
-
-    def key_expr(depth: int) -> F.Column:
-        k = (
-            gmap[F.col("__g")] * F.lit(ncols).cast("long") + F.col("__wc")
-        ) * KB + (fixed_b + F.lit(NANB + 1).cast("long"))
-        for lo_m, sc_m in round_maps[:depth]:
-            lo_l = _imap(lo_m, "double")[k]
-            sc_l = _imap(sc_m, "double")[k]
-            idx = F.floor((F.col("__v") - lo_l) * sc_l)
-            idx = F.greatest(
-                F.lit(0).cast("long"),
-                F.least(idx, F.lit(n_buckets - 1).cast("long")),
-            )
-            idx = F.when(
-                F.isnan(F.col("__v")), F.lit(n_buckets - 1).cast("long")
-            ).otherwise(idx)
-            k = k * n_buckets + idx
-        return k
-
-    def _scale(width: float) -> float:
-        if width > 0 and math.isfinite(width):
-            return float(n_buckets) / width
-        return 0.0  # unsplittable segment: one bucket
-
-    # walk the fixed histogram: group each (group, column)'s targets by
-    # the bucket containing them; fat splittable buckets become
-    # refinement items, the rest resolve directly
-    items = []  # active segments: (key, g, wc, lo, width, before, targets)
-    finals = []  # resolved buckets: (key, depth, g, wc, before, cnt)
-    for gw, ts in targets.items():
-        bs = b1[gw]
-        blist = sorted(bs)
-        cum_before: dict[int, int] = {}
-        acc = 0
-        for b in blist:
-            cum_before[b] = acc
-            acc += bs[b]
-        by_bucket: dict[int, list] = {}
-        bi = 0
-        for t in ts:
-            while bi < len(blist) and (
-                cum_before[blist[bi]] + bs[blist[bi]] < t
-            ):
-                bi += 1
-            by_bucket.setdefault(blist[bi], []).append(t)
-        key0 = gid[gw[0]] * ncols + gw[1]
-        for b, bts in by_bucket.items():
-            key1 = key0 * KB + (b + NANB + 1)
-            lo, hi = _fixed_bounds(b)
-            if max_refine >= 1 and bs[b] > refine_cap and hi > lo:
-                items.append({
-                    "key": key1, "g": gw[0], "wc": gw[1],
-                    "lo": lo, "width": hi - lo,
-                    "before": cum_before[b], "targets": bts,
-                })
-            else:
-                finals.append({
-                    "key": key1, "depth": 0, "g": gw[0], "wc": gw[1],
-                    "before": cum_before[b], "cnt": bs[b],
-                })
-
-    # ---- refinement rounds (rare: only buckets over refine_cap) ----
-    depth = 0
-    while items:
-        depth += 1
-        lo_m = {it["key"]: it["lo"] for it in items}
-        sc_m = {it["key"]: _scale(it["width"]) for it in items}
-        round_maps.append((lo_m, sc_m))
-        active = _imap({it["key"]: 1 for it in items}, "int")
-        hist = (
-            melted.where(
-                F.col("__v").isNotNull()
-                & active[key_expr(depth - 1)].isNotNull()
-            )
-            .groupBy(key_expr(depth).alias("__k"))
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .collect()
-        )
-        buckets: dict[int, dict[int, int]] = {}
-        for r in hist:
-            k = int(r["__k"])
-            buckets.setdefault(k // n_buckets, {})[k % n_buckets] = int(
-                r["__cnt"]
-            )
-        nxt = []
-        for it in items:
-            bs = buckets.get(it["key"], {})
-            blist = sorted(bs)
-            cum_before = {}
-            acc = 0
-            for b in blist:
-                cum_before[b] = acc
-                acc += bs[b]
-            by_bucket = {}
-            bi = 0
-            for t in it["targets"]:
-                t_local = t - it["before"]
-                while bi < len(blist) and (
-                    cum_before[blist[bi]] + bs[blist[bi]] < t_local
-                ):
-                    bi += 1
-                by_bucket.setdefault(blist[bi], []).append(t)
-            sub_w = it["width"] / n_buckets if _scale(it["width"]) else 0.0
-            for b, bts in by_bucket.items():
-                gb = it["before"] + cum_before[b]
-                sub_lo = it["lo"] + b * sub_w
-                sub_hi = it["lo"] + (b + 1) * sub_w
+    # ---- walk each level; fat bracketing buckets go one level deeper
+    # segment: ((gid, wc), rows ahead of it in (gid, wc), targets, histogram)
+    segments = [(gw, 0, ts, segs[gw]) for gw, ts in targets.items()]
+    finals: list[tuple] = []  # (gid, wc, before, rows, level, bucket)
+    level = 0
+    while segments:
+        fat: dict[tuple, tuple] = {}  # (gid, wc, b) -> (before, targets)
+        top = _PCT_TOP << _PCT_BITS[level]
+        for (gi, wc), before, ts, hist in segments:
+            for b, b_before, rows, b_ts in _pct_walk(hist, before, ts):
                 if (
-                    depth < max_refine
-                    and bs[b] > refine_cap
-                    and sub_hi > sub_lo
+                    rows > REFINE_CAP
+                    and level + 1 < len(_PCT_BITS)
+                    and 0 < abs(b) < top  # ±0, ±Inf, NaN hold one value
                 ):
-                    nxt.append({
-                        "key": it["key"] * n_buckets + b,
-                        "g": it["g"], "wc": it["wc"],
-                        "lo": sub_lo, "width": sub_hi - sub_lo,
-                        "before": gb, "targets": bts,
-                    })
+                    fat[(gi, wc, b)] = (b_before, b_ts)
                 else:
-                    finals.append({
-                        "key": it["key"] * n_buckets + b, "depth": depth,
-                        "g": it["g"], "wc": it["wc"],
-                        "before": gb, "cnt": bs[b],
-                    })
-        items = nxt
+                    finals.append((gi, wc, b_before, rows, level, b))
+        if not fat:
+            break
+        # the filter map's value is the parent's index in ``fat``
+        parent = _lookup(level, {k: i for i, k in enumerate(fat)})
+        sub: dict[int, dict[int, int]] = {}
+        for r in _bucket_hist(
+            melted.withColumn("__p", parent).where(F.col("__p").isNotNull()),
+            level + 1, "__p",
+        ).collect():
+            sub.setdefault(r["__p"], {})[r["__b"]] = r["__n"]
+        segments = [
+            ((gi, wc), before, ts, sub[i])
+            for i, ((gi, wc, _), (before, ts)) in enumerate(fat.items())
+        ]
+        level += 1
 
-    # rank-restoring offset per final bucket: the final window below
-    # numbers ALL of a group's surviving rows in (column, value) order,
-    # so a row's exact in-(group, column) rank = row_number − (surviving
-    # rows of earlier columns in this group) + (dropped rows of this
-    # column ordered before its bucket) — both per-bucket constants the
-    # driver folds into one literal map
-    miss: dict[int, dict[int, int]] = {}
-    byg: dict = {}
-    for fb in finals:
-        byg.setdefault(fb["g"], {}).setdefault(fb["wc"], []).append(fb)
-    for g, bywc in byg.items():
-        surv_before_wc = 0
-        for wc in sorted(bywc):
-            fbs = bywc[wc]
-            fbs.sort(key=lambda fb: fb["before"])
-            kept = 0
-            for fb in fbs:
-                miss.setdefault(fb["depth"], {})[fb["key"]] = (
-                    fb["before"] - kept - surv_before_wc
-                )
-                kept += fb["cnt"]
-            surv_before_wc += kept
-    miss_exprs = [
-        _imap(m_, "long")[key_expr(d)] for d, m_ in sorted(miss.items())
-    ]
-    if miss_exprs:
-        miss_col = (
-            F.coalesce(*miss_exprs) if len(miss_exprs) > 1 else miss_exprs[0]
-        )
-    else:
-        miss_col = F.lit(None).cast("long")
+    # rank-restoring offset per final bucket: the final window numbers ALL
+    # of a group's surviving rows in (column, value) order, so a row's
+    # exact in-(group, column) rank = row_number + (rows of its column
+    # ahead of its bucket) − (surviving rows of its group ahead of it)
+    miss: dict[int, dict] = {}
+    ahead: dict[int, int] = {}
+    for gi, wc, before, rows, lvl, b in sorted(finals):
+        miss.setdefault(lvl, {})[(gi, wc, b)] = before - ahead.get(gi, 0)
+        ahead[gi] = ahead.get(gi, 0) + rows
+    lookups = [_lookup(lvl, m) for lvl, m in sorted(miss.items())]
+    miss_col = F.coalesce(*lookups) if lookups else F.lit(None).cast("long")
 
     # ---- final pass: survivors only, exact in-group ranks, brackets.
     # Ranks come from a row_number over the RAW survivor rows — no
@@ -811,7 +679,7 @@ def distributed_exact_percentiles(
     # base is folded into the miss map above), so the brackets aggregate
     # keyed by group reuses the window's hash(group) exchange: one
     # exchange for the whole tail.  A partition is one group's surviving
-    # rows — bounded by #cols × #targets × refine_cap — and a sort
+    # rows — bounded by #cols × #targets × REFINE_CAP — and a sort
     # window spills rather than buffering (never the builtin's in-memory
     # value map).
     survivors = (
@@ -824,51 +692,35 @@ def distributed_exact_percentiles(
         "cum___cnt", F.row_number().over(w) + F.col("__miss")
     )
 
-    gcol = F.col("__g")
     cig = F.col("cum___cnt")  # already the exact in-group rank
     mins, val_exprs = [], []
     for i, (_, fracs, out_col) in enumerate(specs):
-        rows_i = [
-            (g, n_gw[(g, i)]) for g in groups if n_gw.get((g, i), 0) > 0
-        ]
+        rows_i = [(gi, n) for (gi, wc), n in n_gw.items() if wc == i and n]
         elems = []
         for j, p in enumerate(fracs):
             lo_r, hi_r, c_lo, c_hi, interp = {}, {}, {}, {}, {}
-            for g, n in rows_i:
+            for gi, n in rows_i:
                 pos = float(n - 1) * float(p)
                 lo, hi = math.floor(pos), math.ceil(pos)
-                lo_r[g] = lo + 1
-                hi_r[g] = hi + 1
-                interp[g] = 1 if hi != lo else 0
-                c_lo[g] = float(hi) - pos
-                c_hi[g] = pos - float(lo)
+                lo_r[gi] = lo + 1
+                hi_r[gi] = hi + 1
+                interp[gi] = 1 if hi != lo else 0
+                c_lo[gi] = float(hi) - pos
+                c_hi[gi] = pos - float(lo)
             lo_v = F.col(f"__lo_{i}_{j}")
             hi_v = F.col(f"__hi_{i}_{j}")
             if rows_i:
-                mins.append(
-                    F.min(
-                        F.when(
-                            (F.col("__wc") == i)
-                            & (cig >= _lit_map(lo_r, "long")[gcol]),
-                            F.col("__v"),
-                        )
-                    ).alias(f"__lo_{i}_{j}")
-                )
-                mins.append(
-                    F.min(
-                        F.when(
-                            (F.col("__wc") == i)
-                            & (cig >= _lit_map(hi_r, "long")[gcol]),
-                            F.col("__v"),
-                        )
-                    ).alias(f"__hi_{i}_{j}")
-                )
+                for name, ranks in (("lo", lo_r), ("hi", hi_r)):
+                    mins.append(F.min(F.when(
+                        (F.col("__wc") == i) & (cig >= _lit_lookup(ranks, gcol)),
+                        F.col("__v"),
+                    )).alias(f"__{name}_{i}_{j}"))
                 elems.append(
-                    F.when(_lit_map(interp, "int")[gcol] == 0, lo_v)
+                    F.when(_lit_lookup(interp, gcol) == 0, lo_v)
                     .when(lo_v == hi_v, lo_v)
                     .otherwise(
-                        _lit_map(c_lo, "double")[gcol] * lo_v
-                        + _lit_map(c_hi, "double")[gcol] * hi_v
+                        _lit_lookup(c_lo, gcol) * lo_v
+                        + _lit_lookup(c_hi, gcol) * hi_v
                     )
                 )
             else:
@@ -880,9 +732,9 @@ def distributed_exact_percentiles(
         # so does every group of an empty-fracs spec, like percentile(c,
         # array())
         if rows_i and fracs:
-            present = _lit_map({g: 1 for g, _ in rows_i}, "int")
+            present = _lit_lookup({gi: 1 for gi, _ in rows_i}, gcol)
             val_exprs.append(
-                F.when(present[gcol] == 1, F.array(*elems))
+                F.when(present == 1, F.array(*elems))
                 .otherwise(F.lit(None).cast("array<double>"))
                 .alias(out_col)
             )
@@ -896,12 +748,12 @@ def distributed_exact_percentiles(
     # groups with no rank target (every value NULL, or non-NULL only in
     # empty-fracs specs) have no surviving rows; their one all-NULL
     # output row is appended from the (bounded) pass-1 group list
-    targeted = {g for g, _ in targets}
-    absent = [g for g in groups if g not in targeted]
+    targeted = {gi for gi, _ in targets}
+    absent = [g for g in groups if gid[g] not in targeted]
     if absent:
         from pyspark.sql.types import StructField, StructType
 
-        g_field = StructField("__g", sel.schema[0].dataType)
+        g_field = StructField("__g", g_type)
         extra = df.sparkSession.createDataFrame(
             [(g,) for g in absent], StructType([g_field])
         ).select(
@@ -916,6 +768,7 @@ def distributed_exact_percentiles(
     if group_col is not None:
         return out.withColumnRenamed("__g", group_col)
     return out.drop("__g")
+
 
 
 def skew_report(

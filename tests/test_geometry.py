@@ -383,6 +383,7 @@ def test_write_shapefile_dataset_roundtrip(tmp_path, spark):
     assert got == {i: pytest.approx(2.0 * (i + 1)) for i in range(20)}
 
 
+@pytest.mark.filterwarnings("error:Cannot infer the eval type")
 def test_convex_hull_matches_bruteforce(spark):
     """Monotone chain vs brute force (a point is a hull vertex iff it is
     not strictly inside the hull of the others); exact square case."""

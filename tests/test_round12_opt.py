@@ -1,124 +1,7 @@
 """Round-12 optimization equivalence pins: restructured operators must
 produce bit-identical output to their pre-optimization composition."""
 
-import struct
-
-import pyspark.sql.functions as F
 import pytest
-
-
-def _bits(x):
-    return None if x is None else struct.pack(">d", x).hex()
-
-
-def _check_percentiles(spark, rows, fracs_a, fracs_b):
-    """distributed_exact_percentiles must match the builtin exact
-    percentile() BIT-FOR-BIT (same IEEE doubles, not just approximately)
-    on the default shape AND with forced bucket refinement rounds."""
-    from smartpy_arc_spark.operators.scale import distributed_exact_percentiles
-
-    df = spark.createDataFrame(rows, "g string, a double, b double")
-    fa = ",".join(map(str, fracs_a))
-    fb = ",".join(map(str, fracs_b))
-    ref = {
-        r["g"]: (r["pa"], r["pb"])
-        for r in df.groupBy("g").agg(
-            F.expr(f"percentile(a, array({fa}))").alias("pa"),
-            F.expr(f"percentile(b, array({fb}))").alias("pb"),
-        ).collect()
-    }
-    for kw in (
-        {},                                  # default: fixed octave map only
-        {"refine_cap": 4, "n_buckets": 8},   # forced refinement rounds
-    ):
-        new = {
-            r["g"]: (r["pa"], r["pb"])
-            for r in distributed_exact_percentiles(
-                df, [("a", fracs_a, "pa"), ("b", fracs_b, "pb")],
-                group_col="g", **kw
-            ).collect()
-        }
-        assert set(ref) == set(new), kw
-        for g in ref:
-            for k in (0, 1):
-                ra, na = ref[g][k], new[g][k]
-                if ra is None or na is None:
-                    assert ra == na, (kw, g, k, ra, na)
-                    continue
-                assert [_bits(x) for x in ra] == [_bits(x) for x in na], (
-                    kw, g, k,
-                )
-
-
-def test_exact_percentiles_bit_equal_ties(spark):
-    import random
-
-    random.seed(7)
-    rows = [
-        (random.choice("ABCD"), float(random.randint(0, 30)),
-         random.random() * 100)
-        for _ in range(2000)
-    ]
-    _check_percentiles(spark, rows, [0.5, 0.9, 0.25, 0.0, 1.0], [0.1, 0.37])
-
-
-def test_exact_percentiles_bit_equal_edge_groups(spark):
-    # singleton groups, all-null columns, mixed-null groups
-    rows = [
-        ("X", 1.0, 2.0),
-        ("Y", 3.0, None),
-        ("Y", 5.0, None),
-        ("Z", None, None),
-        ("W", -7.25, 0.0),
-    ]
-    _check_percentiles(spark, rows, [0.5, 0.9], [0.25, 1.0])
-
-
-def test_exact_percentiles_bit_equal_empty_fracs(spark):
-    # group "1" is non-NULL only in the empty-fracs spec: it must keep its
-    # row, and an empty-fracs spec yields NULL, not []
-    rows = [("1", 1.0, None), ("1", 2.0, None), ("2", 3.0, 4.0)]
-    _check_percentiles(spark, rows, [], [0.5])
-    _check_percentiles(spark, rows, [], [])
-
-
-def test_exact_percentiles_bit_equal_constant(spark):
-    rows = [("S", 42.0, 7.0) for _ in range(50)]
-    _check_percentiles(spark, rows, [0.3, 0.6], [0.5])
-
-
-def test_exact_percentiles_ungrouped_and_empty(spark):
-    from smartpy_arc_spark.operators.scale import distributed_exact_percentiles
-
-    df = spark.createDataFrame(
-        [(float(i % 13), float(i % 7)) for i in range(500)],
-        "a double, b double",
-    )
-    ref = df.agg(
-        F.expr("percentile(a, array(0.5,0.9))").alias("pa"),
-        F.expr("percentile(b, array(0.25))").alias("pb"),
-    ).collect()[0]
-    new = distributed_exact_percentiles(
-        df, [("a", [0.5, 0.9], "pa"), ("b", [0.25], "pb")]
-    ).collect()
-    assert len(new) == 1
-    assert [_bits(x) for x in ref["pa"]] == [_bits(x) for x in new[0]["pa"]]
-    assert [_bits(x) for x in ref["pb"]] == [_bits(x) for x in new[0]["pb"]]
-    # empty input: the ungrouped form still emits one all-NULL row,
-    # exactly like a global agg
-    empty = spark.createDataFrame([], "a double, b double")
-    out = distributed_exact_percentiles(empty, [("a", [0.5], "pa")]).collect()
-    assert len(out) == 1 and out[0]["pa"] is None
-
-
-def test_percentiles_query_plan_has_no_exact_percentile_buffer(spark, sf_dir):
-    """The headline `percentiles` query must not plan the full-column
-    ObjectHashAggregate percentile buffer (guide §5 scale cliff)."""
-    import __spark_entry__ as mod
-
-    df = mod.queries()["percentiles"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "percentile(" not in plan
 
 
 def _baskets():
