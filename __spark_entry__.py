@@ -7793,7 +7793,7 @@ def q_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤6), each with the per-component (w,s,d)-min edge pick and an 8-step
     min-hook + pointer-jump label merge; post-convergence rounds are the
     identity.  The operator instead finishes with Kruskal on the driver
-    once the remaining edges fit under ``LOCAL_FINISH_EDGES`` (this
+    once the remaining edges fit under ``_ckpt.COLLECT_ROW_CAP`` (this
     graph's ~1.8k edges at sf0.01 fit before round 1); under the strict
     order the forest is unique, so both return the same edges.  Also
     pinned against a Kruskal reference in tests."""

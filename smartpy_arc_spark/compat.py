@@ -102,7 +102,7 @@ def arc_to_pandas(
         fill_nulls=fill_nulls, str_fill=str_fill, num_fill=num_fill,
         date_fill=date_fill, spatial=spatial,
     )
-    pdf = df.toPandas()
+    pdf = df.toPandas()  # bounded: by the caller (arc_to_pandas)
     if index_fld:
         # rename may have changed the column's name; resolve post-rename
         name = flds.get(index_fld, index_fld) if isinstance(flds, Mapping) else index_fld
@@ -151,6 +151,7 @@ def arc_to_pandas_a(data, flds=None, where: str | None = None,
         flds=flds, where=where,
         drop_geometry=geometry_encoding is None,
     )
+    # bounded: by the caller, a user-facing pandas conversion
     return _apply_geometry_encoding(df, geometry_encoding).toPandas()
 
 
@@ -327,6 +328,7 @@ def get_df(name: str, aprx: str = "CURRENT", map=None, **kw):
     """pro_utils.py:133-168 — unique catalog lookup → pandas frame."""
     from smartpy_arc_spark.sources.catalog import get_df as _gd
 
+    # bounded: by the caller, a user-facing pandas conversion
     return _gd(_spark(), name, **kw).toPandas()
 
 
@@ -379,6 +381,7 @@ def pandas_to_array(df, keep_index: bool = True, cols=None):
     writes go through ``pandas_to_arc``/``write_table``)."""
     import pandas as pd
 
+    # bounded: by the caller, a user-facing pandas conversion
     pdf = df.toPandas() if isinstance(df, DataFrame) else pd.DataFrame(df)
     if cols is not None:
         pdf = pdf[list(cols)]

@@ -59,6 +59,7 @@ def copy_oids(df: DataFrame, fld_name: str, order_by: list[str] | None = None) -
         pid = F.shiftright(F.col("__mid"), 33)
         local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
         counts = (
+            # bounded: one row per partition
             part.groupBy(pid.alias("__pid")).agg(F.count("*").alias("__n")).collect()
         )
         offsets: dict[int, int] = {}

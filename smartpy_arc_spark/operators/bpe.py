@@ -110,7 +110,7 @@ def learn_bpe_merges(
             .agg(F.sum("freq").alias("n"))
             .orderBy(F.desc("n"), F.col("p.l"), F.col("p.r"))
             .limit(1)
-            .collect()
+            .collect()  # bounded: limit(1)
         )
         if not top or top[0]["n"] < 2:
             break

@@ -15,8 +15,8 @@ lineage so round N doesn't replay rounds 1..N-1.
 This is the designated "iterative algorithm" surface of the engine: state
 lives in a (node, label) DataFrame at any scale.  The one driver-side graph
 is bounded by construction: ``minimum_spanning_forest`` probes each
-Borůvka round's remaining edges with a ``limit(LOCAL_FINISH_EDGES + 1)``
-collect and, once they fit (≤ 2^16 rows, ~2.6 MB), finishes the forest
+Borůvka round's remaining edges with ``_ckpt.collect_if_fits`` and, once
+they fit (≤ ``COLLECT_ROW_CAP`` = 2^16 rows, ~2.6 MB), finishes the forest
 with Kruskal on the driver instead of paying ~15 jobs per further round;
 the picked edges return as an Arrow-built DataFrame.
 """
@@ -27,7 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smartpy_arc_spark.operators._ckpt import sized_local_checkpoint
+from smartpy_arc_spark.operators._ckpt import (
+    collect_if_fits,
+    sized_local_checkpoint,
+)
 
 
 def connected_components(
@@ -1282,17 +1285,6 @@ def clustering_coefficient(
     )
 
 
-# Borůvka hands the rest of the forest to a driver-side Kruskal once a
-# round's inter-component edge list fits under this many rows.  The probe
-# is a ``limit(LOCAL_FINISH_EDGES + 1)`` collect, so the driver never
-# holds more than ~2.6 MB (five longs per row) whatever the input size;
-# below the bound, sorting the remainder locally is cheaper than the
-# ~15 jobs of one more distributed round (hook, pointer doubling,
-# relabel).  A constant, not an option: the output does not depend on
-# it, only the job count does.
-LOCAL_FINISH_EDGES = 1 << 16
-
-
 def _kruskal_finish(rows: list) -> list[tuple[int, int, int]]:
     """Spanning forest of the contracted multigraph: Kruskal over
     ``(w, s, d, cs, cd)`` rows under the strict ``(w, s, d)`` order (a
@@ -1335,9 +1327,12 @@ def minimum_spanning_forest(
     cycle — the classic Borůvka tie rule), so the output forest is
     deterministic even with duplicate weights.
 
-    Each round first probes its inter-component edge list with a
-    ``limit(LOCAL_FINISH_EDGES + 1)`` collect.  When the probe holds
-    every remaining edge, Kruskal on the driver finishes the forest and
+    Each round first probes its inter-component edge list with
+    ``collect_if_fits``: below its row cap, sorting the remainder on the
+    driver is cheaper than the ~15 jobs of one more distributed round
+    (hook, pointer doubling, relabel), and the output does not depend on
+    the cap, only the job count does.  When the probe holds every
+    remaining edge, Kruskal on the driver finishes the forest and
     the loop stops: under the strict order the minimum spanning forest
     is unique, every edge Borůvka already picked belongs to it, and the
     rest is the spanning forest of the contracted multigraph, which
@@ -1385,12 +1380,8 @@ def minimum_spanning_forest(
                 )
                 .where(F.col("cs") != F.col("cd"))
             )
-        probe = (
-            annotated.select("w", "s", "d", "cs", "cd")
-            .limit(LOCAL_FINISH_EDGES + 1)
-            .collect()
-        )
-        if len(probe) <= LOCAL_FINISH_EDGES:
+        probe = collect_if_fits(annotated.select("w", "s", "d", "cs", "cd"))
+        if probe is not None:
             rest = _kruskal_finish(probe)
             break
         if comp is None:
@@ -1404,8 +1395,8 @@ def minimum_spanning_forest(
         incident = annotated.select(
             F.col("cs").alias("comp"), pick.alias("e")
         ).union(annotated.select(F.col("cd").alias("comp"), pick.alias("e")))
-        # non-empty: the probe above found more than LOCAL_FINISH_EDGES
-        # inter-component edges
+        # non-empty: the probe above found more inter-component edges
+        # than the driver may collect
         chosen = (
             incident.groupBy("comp")
             .agg(F.min("e").alias("e"))

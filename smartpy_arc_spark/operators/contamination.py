@@ -46,12 +46,6 @@ def _space_tokens(text: Column) -> Column:
     return F.filter(F.split(text, " ", -1), lambda t: t != F.lit(""))
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Inline-expression form of :func:`word_ngrams_of_tokens` for
-    one-off use on short strings; hot paths stage the tokens first."""
-    return word_ngrams_of_tokens(_space_tokens(text), n)
-
-
 def chunk_documents(
     df: DataFrame,
     *,

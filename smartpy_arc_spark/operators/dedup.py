@@ -145,11 +145,6 @@ def _shingle_hashes(
     raise ValueError(f"shingle mode {mode!r} (expected 'char' or 'word')")
 
 
-def _seeded_hash(col: Column, seed: int) -> Column:
-    """Deterministic 64-bit hash family member: xxhash64 with a seed prefix."""
-    return F.xxhash64(F.concat(F.lit(f"s{seed}:"), col))
-
-
 # fixed 64-bit constants for the xorshift hash family (seeded once)
 import numpy as _np
 

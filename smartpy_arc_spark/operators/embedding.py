@@ -124,7 +124,7 @@ def pca_components(
     The covariance accumulates distributed (see ``covariance_matrix``);
     only the d×d eigenproblem runs on the driver.
     """
-    rows = covariance_matrix(df, vec_col=vec_col).collect()
+    rows = covariance_matrix(df, vec_col=vec_col).collect()  # bounded: d×d
     d = max(r["j"] for r in rows) + 1
     cov = np.zeros((d, d))
     for r in rows:
@@ -143,7 +143,7 @@ def pca_components(
         df.select(F.posexplode(F.col(vec_col).cast("array<double>")).alias("p", "x"))
         .groupBy("p")
         .agg(F.avg("x").alias("m"))
-        .collect()
+        .collect()  # bounded: d rows
     )
     mean = np.zeros(d)
     for r in mean_rows:
@@ -252,7 +252,7 @@ def mmr_select(
             ).alias("m")
         )
         .orderBy("pos")
-        .collect()
+        .collect()  # bounded: d rows
     ]
     c_lit = F.array(*[F.lit(float(x)) for x in centroid])
     c_norm = sum(x * x for x in centroid) ** 0.5
@@ -290,7 +290,7 @@ def mmr_select(
             remaining.withColumn("mmr", mmr)
             .orderBy(F.desc("mmr"), F.col("id"))
             .limit(1)
-            .collect()
+            .collect()  # bounded: limit(1)
         )
         if not top:
             break
@@ -825,6 +825,7 @@ def whiten_embeddings(
     n = float(mrow["n"])
     mu = np.array([mrow[f"s{i}"] for i in range(dim)]) / n
     cov = np.zeros((dim, dim))
+    # bounded: dim × dim
     for r in covariance_matrix(df, vec_col=emb_col).collect():
         cov[r.i, r.j] = cov[r.j, r.i] = r.cov
     lam, u = np.linalg.eigh(cov)

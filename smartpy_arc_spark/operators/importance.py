@@ -64,19 +64,6 @@ def _hashed_features_of_tokens(toks: Column, *, m: int) -> Column:
     )
 
 
-def hashed_ngram_features(text: Column, *, m: int) -> Column:
-    """Array of hash-bucket ids (one per word uni+bigram of ``text``).
-
-    Bucket id = first 8 hex chars of md5(gram) mod ``m`` — deterministic
-    and engine-portable (cf. DSIR §2.2's hashed n-gram featurization).
-
-    Inline-expression form for one-off use; the aggregate passes inside
-    :func:`dsir_importance_weights` stage the token array first and call
-    :func:`_hashed_features_of_tokens` (see its note on lambda CSE).
-    """
-    return _hashed_features_of_tokens(_tokens(text), m=m)
-
-
 def _explode_features(df: DataFrame, text_col: str, id_cols: list, *, m: int) -> DataFrame:
     """(ids..., bucket) rows with the tokenizer staged behind a projection
     boundary so feature extraction is O(len) per document."""

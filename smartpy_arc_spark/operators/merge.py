@@ -36,6 +36,7 @@ def merge_upsert(
     """
     if validate:
         dup = (
+            # bounded: limit(1)
             updates.groupBy(key).count().where(F.col("count") > 1).limit(1).collect()
         )
         if dup:
@@ -123,7 +124,7 @@ def cdc_apply(
         .agg(F.count("*").alias("__n"))
         .where(F.col("__n") > 1)
         .limit(1)
-        .collect()
+        .collect()  # bounded: limit(1)
     )
     if dup:
         raise ValueError(

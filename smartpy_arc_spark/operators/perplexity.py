@@ -29,22 +29,8 @@ extension surface (SURVEY.md §7).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def char_trigrams(text: Column) -> Column:
-    """Array of character trigrams of ``lower(text)`` (whitespace
-    collapsed to single spaces so layout doesn't shift the distribution).
-    Documents shorter than 3 chars yield an empty array."""
-    t = F.regexp_replace(F.lower(text), r"\s+", " ")
-    return F.when(
-        F.length(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.length(t) - 2),
-            lambda i: F.substring(t, i, 3),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def _tri_exploded(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smartpy_arc_spark.operators import _ckpt
 from smartpy_arc_spark.sources.scan import read_parquet
 
 
@@ -255,7 +256,7 @@ def bloom_prefilter_join(
         )
         .groupBy("word")
         .agg(F.bit_or("bit").alias("bits"))
-        .collect()
+        .collect()  # bounded: num_bits / 64 words
     )
     words = [0] * (num_bits // 64)
     for r in set_words:
@@ -328,7 +329,7 @@ def partitioned_cumsum(
         part = part.localCheckpoint()
     totals = part.groupBy("__pid").agg(
         *[F.sum(c).alias(c) for c in sum_cols]
-    ).collect()
+    ).collect()  # bounded: one row per partition
     offsets: dict[str, dict[int, float]] = {c: {} for c in sum_cols}
     acc = {c: 0 for c in sum_cols}
     for r in sorted(totals, key=lambda r: r["__pid"]):
@@ -403,7 +404,6 @@ def distributed_ntile(
 
 
 REFINE_CAP = 1 << 22  # rows a bracketing bucket may carry to the final pass
-HIST_ROW_CAP = 1 << 16  # level-0 histogram rows the driver may collect
 _PCT_BITS = (4, 16, 28, 40)  # mantissa bits each refinement level resolves
 _PCT_TOP = 2101  # octave + 1075 <= 2099, so TOP << bits > any finite bucket
 
@@ -506,8 +506,9 @@ def distributed_exact_percentiles(
 
       1. one pass melts the requested columns and counts rows per
          (group, column, level-0 bucket) — codegen only, no sort, no
-         min/max pass.  The driver collects it (at most ``HIST_ROW_CAP``
-         rows) and learns every group's N, hence the rank targets
+         min/max pass.  The driver collects it
+         (``_ckpt.collect_if_fits``, at most ``COLLECT_ROW_CAP`` rows)
+         and learns every group's N, hence the rank targets
          ``(N-1)·frac``, the group list (NULL rows keep all-NULL groups)
          and the exact rank range of every bucket;
       2. a bucket that brackets a target and holds more than
@@ -550,7 +551,7 @@ def distributed_exact_percentiles(
     and one ``array<double>`` column per spec.  EAGER: collects the
     histograms at construction time.  Raises ``ValueError`` for NULL
     group keys (literal maps cannot key on NULL) and when the level-0
-    histogram exceeds ``HIST_ROW_CAP`` rows.  ±0.0 follow Spark SQL
+    histogram exceeds ``COLLECT_ROW_CAP`` rows.  ±0.0 follow Spark SQL
     grouping normalization rather than the builtin's raw-key map, which
     only diverges on data holding both -0.0 and +0.0.
     """
@@ -573,12 +574,12 @@ def distributed_exact_percentiles(
         return rows.groupBy(by, "__wc", b).agg(F.count(F.lit(1)).alias("__n"))
 
     # ---- level 0: the only unfiltered histogram, collected under a cap
-    hist0 = _bucket_hist(melted, 0, "__g").limit(HIST_ROW_CAP + 1).collect()
-    if len(hist0) > HIST_ROW_CAP:
+    hist0 = _ckpt.collect_if_fits(_bucket_hist(melted, 0, "__g"))
+    if hist0 is None:
         raise ValueError(
             f"distributed_exact_percentiles: the histogram over group column "
-            f"{group_col!r} has more than {HIST_ROW_CAP} (group, column, "
-            f"bucket) rows; use percentile_approx, or fewer groups"
+            f"{group_col!r} has more than {_ckpt.COLLECT_ROW_CAP} (group, "
+            f"column, bucket) rows; use percentile_approx, or fewer groups"
         )
     if any(r["__g"] is None for r in hist0):
         raise ValueError(
@@ -649,7 +650,7 @@ def distributed_exact_percentiles(
         for r in _bucket_hist(
             melted.withColumn("__p", parent).where(F.col("__p").isNotNull()),
             level + 1, "__p",
-        ).collect():
+        ).collect():  # bounded: 2^12 child buckets per fat parent
             sub.setdefault(r["__p"], {})[r["__b"]] = r["__n"]
         segments = [
             ((gi, wc), before, ts, sub[i])

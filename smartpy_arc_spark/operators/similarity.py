@@ -11,14 +11,14 @@ Two tiers:
     only their buckets instead of the full corpus.
 
 Routing rule for near-duplicate / threshold-join jobs: a bounded query
-side (broadcastable, ≤~1e5 rows) may use the exact tier (broadcast
+side (broadcastable, ≤ 2^16 rows) may use the exact tier (broadcast
 threshold join / ``knn_cosine_bruteforce`` / ``knn_classify``) — cost is
 linear in the corpus.  An UNBOUNDED-×-unbounded job must go through the
 candidate-bounding tiers instead: ``ann_lsh_topk`` (SRP buckets),
 ``ivf_search``/``ivfpq_search`` (trained coarse quantizer), or
 ``semdedup.semdedup`` (cluster-then-intra-cluster).  The exact tiers
-fail fast on oversized sides (``_assert_bounded``) rather than OOMing
-the driver.
+fail fast on oversized sides (``_ckpt.collect_if_fits``) rather than
+OOMing the driver.
 
 All dot products are built-in higher-order functions (``zip_with`` +
 ``aggregate``) over ``array<double>`` — JVM-side, no Python, no UDF.
@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from smartpy_arc_spark.operators import _ckpt
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -45,38 +47,14 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _assert_bounded(df: DataFrame, limit: int, what: str) -> DataFrame:
-    """Fail fast before collecting/broadcasting an unbounded side.
-
-    NOTE: this runs an EAGER Spark job at plan-construction time — calling
-    an operator that guards a side triggers one job before the operator's
-    own action, a deliberate trade (a cheap bounded count now vs a silent
-    driver OOM later).  To avoid paying the guarded side's upstream plan
-    twice, the side is persisted (memory-and-disk) before the count, so
-    the later collect/broadcast reuses the partitions the guard already
-    computed; the returned (persisted) frame is what callers must use.
-    The cached side is ≤ ``limit`` rows by contract, so the footprint is
-    bounded and LRU-evictable.
-
-    ``limit(n+1).count()`` touches at most ``limit+1`` rows (Spark stops the
-    scan at the limit), so the guard itself stays cheap even when the caller
-    accidentally hands us the 100 TB corpus.  Raising here turns a silent
-    driver OOM into an actionable routing error: oversized scoring sets
-    belong on the distributed paths (``ivf_search`` / ``ann_lsh_topk``).
-    """
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    n = df.limit(limit + 1).count()
-    if n > limit:
-        df.unpersist()
-        raise ValueError(
-            f"{what} has more than {limit} rows; this operator collects/"
-            f"broadcasts that side to the driver by contract. Route the "
-            f"oversized side through the distributed tier instead "
-            f"(ivf_search / ivfpq_search / ann_lsh_topk), or window it."
-        )
-    return df
+def _oversized(what: str) -> ValueError:
+    """The routing error for a side over the driver-collect cap."""
+    return ValueError(
+        f"{what} has more than {_ckpt.COLLECT_ROW_CAP} rows; this operator "
+        f"collects/broadcasts that side to the driver by contract. Route the "
+        f"oversized side through the distributed tier instead "
+        f"(ivf_search / ivfpq_search / ann_lsh_topk), or window it."
+    )
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -263,6 +241,7 @@ def train_ivf_codebook(
     spark = corpus.sparkSession
     cents = [
         (int(r["_id"]), [float(x) for x in r["_cv"]])
+        # bounded: limit(n_centroids)
         for r in c.orderBy("_id").limit(n_centroids).collect()
     ]
     for _ in range(n_iters):
@@ -288,6 +267,7 @@ def train_ivf_codebook(
                 ).alias("_cent")
             )
         )
+        # bounded: one row per centroid
         new = {int(r["centroid_id"]): [float(x) for x in r["_cent"]] for r in means.collect()}
         cents = [(cid, new.get(cid, vec)) for cid, vec in cents]
     return spark.createDataFrame(cents, "centroid_id long, _cent array<double>")
@@ -564,7 +544,7 @@ def train_pq_codebooks(
         corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_cv"))
         .orderBy("_id")
         .limit(k)
-        .collect()
+        .collect()  # bounded: limit(k)
     )
     # codebooks[s][c] = centroid c of subspace s
     books = [
@@ -597,7 +577,7 @@ def train_pq_codebooks(
                 "sub", "cid",
                 F.transform("ps", lambda p: p["mx"]).alias("_cent"),
             )
-            .collect()
+            .collect()  # bounded: m × k centroids
         )
         for r in means:
             books[r["sub"]][r["cid"]] = [float(x) for x in r["_cent"]]
@@ -666,7 +646,6 @@ def pq_search(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: each query precomputes its
     (m × n_centroids) distance table — a per-row literal-shaped array —
@@ -674,13 +653,13 @@ def pq_search(
     HOF over the broadcast query side and the compact code column.  No
     shuffle on the corpus; TakeOrdered per query yields top-k.
 
-    The query side broadcasts, so it must be bounded: ``max_queries``
-    is enforced up front (fail fast, not a driver OOM mid-job).  NOTE:
-    the guard is an EAGER job — calling ``pq_search`` runs the query
-    side once at plan-construction time and returns it persisted (see
-    ``_assert_bounded``), so lazy-plan callers pay that job early, not
-    twice."""
-    queries = _assert_bounded(queries, max_queries, "pq_search query side")
+    The query side broadcasts, so it must be bounded: it is collected at
+    construction through ``_ckpt.collect_if_fits`` (fail fast, not a
+    driver OOM mid-job) and broadcast from those rows."""
+    side = queries.select(id_col, vec_col)
+    rows = _ckpt.collect_if_fits(side)
+    if rows is None:
+        raise _oversized("pq_search query side")
     m = len(books)
     sub_d = len(books[0][0])
     qv = F.col(vec_col).cast("array<double>")
@@ -700,7 +679,7 @@ def pq_search(
             for s in range(m)
         ]
     )
-    q = queries.select(
+    q = queries.sparkSession.createDataFrame(rows, side.schema).select(
         F.col(id_col).alias("query_id"), table.alias("_tbl")
     )
     joined = codes.crossJoin(F.broadcast(q))
@@ -756,6 +735,7 @@ def ivfpq_search(
     )
     seeds = [
         (int(r["_nid"]), [float(x) for x in r["_cv"]])
+        # bounded: limit(n_centroids)
         for r in c.orderBy("_nid").limit(n_centroids).collect()
     ]
     spark = corpus.sparkSession
@@ -961,7 +941,6 @@ def knn_classify(
     k: int = 5,
     test_pred=None,
     scale: int = 1_000_000,
-    max_test: int = 100_000,
 ) -> DataFrame:
     """k-nearest-neighbor classification by majority vote over exact
     integer squared-L2 distances — the label-propagation baseline every
@@ -980,10 +959,9 @@ def knn_classify(
     numpy-matmul pass over the reference set emits only each
     partition's local top-k per test point (k·n_test rows per
     partition, never the full pairs matrix), then a global top-k merge
-    and the vote.  The big side never shuffles.  NOTE: the
-    ``max_test`` guard is an EAGER job — calling ``knn_classify`` runs
-    the test split once at plan-construction time and reuses it
-    persisted (see ``_assert_bounded``).
+    and the vote.  The big side never shuffles.  The test split is
+    collected at construction through ``_ckpt.collect_if_fits``; a split
+    over its row cap raises.
 
     Returns ``(id, true_label, pred_label, correct)`` per test row.
     """
@@ -1005,9 +983,9 @@ def knn_classify(
     test = base.where(pred)
     train = base.where(~pred)
 
-    test = _assert_bounded(test, max_test, "knn_classify test side")
-    trows = test.collect()  # bounded scoring set, from the guard's cache
-    test.unpersist()
+    trows = _ckpt.collect_if_fits(test)
+    if trows is None:
+        raise _oversized("knn_classify test side")
     t_ids = np.array([r["id"] for r in trows], dtype=np.int64)
     t_labels = np.array([r["label"] for r in trows], dtype=np.int64)
     t_mat = np.array([r["q"] for r in trows], dtype=np.int64)

@@ -495,6 +495,7 @@ def pareto_frontier_2d(
         # the two passes must agree on the partition layout anyway
         .localCheckpoint(eager=True)
     )
+    # bounded: one row per partition
     totals = part.groupBy("__pid").agg(F.max("y").alias("pmax")).collect()
     offsets: dict[int, int] = {}
     best = None

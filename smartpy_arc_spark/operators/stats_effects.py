@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from smartpy_arc_spark.operators import _ckpt
 from smartpy_arc_spark.operators._stats_common import _check_e4_scale
 from smartpy_arc_spark.operators.stats_tests import mann_whitney_u
 
@@ -127,6 +128,8 @@ def conformal_interval(
     are deterministic in any IEEE engine.
 
     Returns one row ``(n_train, n_cal, n_test, qhat_e4, n_covered)``.
+    Raises ``ValueError`` when ``group_col`` has more groups than the
+    driver may collect (``_ckpt.COLLECT_ROW_CAP``).
     """
     from smartpy_arc_spark.operators.scale import partitioned_cumsum
 
@@ -147,15 +150,20 @@ def conformal_interval(
     # §2.1/§5.3) turns both joins into map-literal lookups and derives
     # n_train from the same rows — dropping the separate full-base count
     # job and both broadcast-exchange materializations
-    train_rows = (
+    train_rows = _ckpt.collect_if_fits(
         base.where("b < 60")
         .groupBy("g")
         .agg(
             F.count("*").cast("long").alias("c"),
             F.sum("v").cast("long").alias("s"),
         )
-        .collect()
     )
+    if train_rows is None:
+        raise ValueError(
+            f"conformal_interval: group column {group_col!r} has more than "
+            f"{_ckpt.COLLECT_ROW_CAP} groups; the per-group train stats are "
+            f"collected to the driver"
+        )
     n_train = sum(r["c"] for r in train_rows)
     kv_c = [
         x

@@ -991,6 +991,7 @@ def wilcoxon_signed_rank(
         .agg(F.count("*").alias("n_v"), F.sum("pos").alias("n_pos_v"))
         .localCheckpoint(eager=True)
     )
+    # bounded: one row, the ad == 0 group
     zero_rows = vals_all.where(F.col("ad") == 0).select("n_v").collect()
     n_zero = int(zero_rows[0]["n_v"]) if zero_rows else 0
     gt: dict = {}

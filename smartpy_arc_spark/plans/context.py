@@ -30,10 +30,6 @@ def overwrite_default() -> bool:
     return _OVERWRITE_DEFAULT[-1]
 
 
-def qualified_fields_default() -> bool:
-    return _QUALIFIED_FIELDS[-1]
-
-
 class TempWork:
     """M1 ``TempWork`` (arc_utils.py:93-118): temporarily switch the current
     database (the workspace) and restore on exit."""

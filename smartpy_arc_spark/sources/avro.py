@@ -512,6 +512,7 @@ def write_avro_files(df: DataFrame, directory: str, *, codec: str = "deflate") -
         write_avro(out, data, sch, codec=codec, sync=sync)
         yield (idx, len(data))
 
+    # bounded: one (index, count) pair per partition
     counts = df.rdd.mapPartitionsWithIndex(_write_part).collect()
     # empty-partition files still carry the schema, which keeps reads
     # consistent; counts is one tiny row per partition

@@ -421,4 +421,5 @@ def scan_pandas(spark: SparkSession, workspace: str, class_name: str | None = No
     """``arc_to_pandas_a`` equivalent (arc_utils.py:956-988): scan then
     Arrow-backed conversion to pandas. Only for bounded results — the 100 TB
     path never materializes to the driver."""
+    # bounded: by the caller, a user-facing pandas conversion
     return scan(spark, workspace, class_name, **kw).toPandas()

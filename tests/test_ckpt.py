@@ -1,7 +1,9 @@
 """The size policy in ``operators/_ckpt.py``: the one estimator, the pin
-decision (``sized_local_checkpoint``) and the broadcast gate
-(``broadcast_if_small``), plus a guard that keeps them the only ones."""
+decision (``sized_local_checkpoint``), the broadcast gate
+(``broadcast_if_small``) and the driver-collect bound
+(``collect_if_fits``), plus guards that keep them the only ones."""
 
+import ast
 import os
 import re
 import warnings
@@ -190,34 +192,145 @@ def test_enrich_join_broadcast_cap_falls_back_to_shuffle(
     assert "BroadcastHashJoin" in _plan(hinted)
 
 
-# -------------------------------------------------------- structural guard
+# --------------------------------------------------------- driver collects
 
-# (pattern, files outside _ckpt.py allowed to contain it)
-_OWNED = {
-    "sizeInBytes": set(),
-    # similarity.py persists a bounded per-call frame, not an O(input) pin
-    "StorageLevel.": {os.path.join("operators", "similarity.py")},
-}
+def _vec_df(spark, n, dim=4):
+    rows = [(i, [float(i % 7)] * dim, i % 3) for i in range(n)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>, label long")
+
+
+def test_collect_if_fits_is_cheap_on_big_side(spark, monkeypatch):
+    """The probe must not scan the full side: limit(n + 1).collect()."""
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 100)
+    big = spark.range(0, 10_000_000)  # would be slow to fully count per-row
+    assert _ckpt.collect_if_fits(big) is None
+    # within bound: the rows themselves, up to and including the cap
+    assert len(_ckpt.collect_if_fits(big.limit(50))) == 50
+    assert len(_ckpt.collect_if_fits(big.limit(100))) == 100
+    assert _ckpt.collect_if_fits(big.limit(101)) is None
+
+
+def test_knn_classify_oversized_test_side_raises(spark, monkeypatch):
+    """An unbounded scoring set must fail fast with a routing error, not
+    collect to the driver."""
+    from smartpy_arc_spark.operators.similarity import knn_classify
+
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 10)
+    df = _vec_df(spark, 40)
+    with pytest.raises(ValueError, match="knn_classify test side"):
+        knn_classify(df, "vec_id", "embedding", "label", k=3).collect()
+
+
+def test_knn_classify_within_bound_still_works(spark, monkeypatch):
+    from smartpy_arc_spark.operators.similarity import knn_classify
+
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 10)
+    df = _vec_df(spark, 20)
+    out = knn_classify(df, "vec_id", "embedding", "label", k=3)
+    assert out.count() == 10  # odd ids are the default test split
+
+
+def test_pq_search_oversized_query_side_raises(spark, monkeypatch):
+    from smartpy_arc_spark.operators.similarity import pq_encode, pq_search
+
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 5)
+    df = _vec_df(spark, 30)
+    books = [
+        [[0.0, 0.0], [3.0, 3.0]],
+        [[0.0, 0.0], [6.0, 6.0]],
+    ]
+    codes = pq_encode(df, books, vec_col="embedding", id_col="vec_id")
+    with pytest.raises(ValueError, match="pq_search query side"):
+        pq_search(
+            df, codes, books, vec_col="embedding", id_col="vec_id", k=2,
+        ).collect()
+
+
+def test_conformal_interval_group_cap_raises(spark, monkeypatch):
+    """The per-group train stats are collected: a group column with more
+    groups than the cap raises, naming the column."""
+    from smartpy_arc_spark.operators.stats import conformal_interval
+
+    df = spark.createDataFrame(
+        [(i % 40, float(i % 13), i) for i in range(400)],
+        "g long, v double, k long",
+    )
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 10)
+    with pytest.raises(ValueError, match=r"group column 'g' has more than 10"):
+        conformal_interval(df, "g", "v", ["k"])
+
+
+# ------------------------------------------------------- structural guards
+
+_CKPT = os.path.join("operators", "_ckpt.py")
+
+# patterns no file outside _ckpt.py may contain
+_OWNED = ("sizeInBytes", "StorageLevel.")
+
+
+def _package_sources():
+    """``(path relative to the package, source)`` of every module but
+    _ckpt.py."""
+    for root, _dirs, files in os.walk(PKG):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, PKG)
+            if name.endswith(".py") and rel != _CKPT:
+                with open(path, encoding="utf-8") as fh:
+                    yield rel, fh.read()
+
+
+def _method_calls(text, *names):
+    return [
+        node
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in names
+    ]
 
 
 def test_size_policy_lives_only_in_ckpt():
     """No module but _ckpt.py sizes a frame or picks a storage level: a
     second estimator or another checkpoint wrapper fails here."""
     offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            rel = os.path.relpath(path, PKG)
-            if rel == os.path.join("operators", "_ckpt.py"):
-                continue
-            with open(path, encoding="utf-8") as fh:
-                text = fh.read()
-            for pattern, allowed in _OWNED.items():
-                if rel in allowed:
-                    continue
-                for m in re.finditer(re.escape(pattern), text):
-                    line = text.count("\n", 0, m.start()) + 1
-                    offenders.append(f"{rel}:{line}: {pattern}")
+    for rel, text in _package_sources():
+        for pattern in _OWNED:
+            for m in re.finditer(re.escape(pattern), text):
+                line = text.count("\n", 0, m.start()) + 1
+                offenders.append(f"{rel}:{line}: {pattern}")
+    assert not offenders, offenders
+
+
+def test_row_probe_lives_only_in_ckpt():
+    """A ``limit(n + 1)`` probe is a second driver-collect bound: outside
+    _ckpt.py, frames of unknown size go through ``collect_if_fits``."""
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, text in _package_sources()
+        for node in _method_calls(text, "limit")
+        if node.args
+        and isinstance(node.args[0], ast.BinOp)
+        and isinstance(node.args[0].op, ast.Add)
+        and isinstance(node.args[0].right, ast.Constant)
+        and node.args[0].right.value == 1
+    ]
+    assert not offenders, offenders
+
+
+def test_driver_collects_name_their_bound():
+    """Every ``.collect()`` / ``.toPandas()`` outside _ckpt.py carries a
+    ``# bounded:`` comment naming its bound, on the call's line or in the
+    comment lines right above it."""
+    offenders = []
+    for rel, text in _package_sources():
+        lines = text.splitlines()
+        for node in _method_calls(text, "collect", "toPandas"):
+            i = node.func.end_lineno - 1
+            notes = [lines[i]]
+            while i > 0 and lines[i - 1].lstrip().startswith("#"):
+                i -= 1
+                notes.append(lines[i])
+            if not any("# bounded:" in note for note in notes):
+                offenders.append(f"{rel}:{node.func.end_lineno}")
     assert not offenders, offenders

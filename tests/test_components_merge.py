@@ -7,7 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from smartpy_arc_spark.operators import components
+from smartpy_arc_spark.operators import _ckpt, components
 from smartpy_arc_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -77,7 +77,7 @@ def _kruskal(nodes, edges):
     return sorted(out)
 
 
-# LOCAL_FINISH_EDGES per MST path: the driver-side Kruskal finish alone
+# _ckpt.COLLECT_ROW_CAP per MST path: the driver-side Kruskal finish alone
 # (default bound), distributed Borůvka rounds then the finish, and
 # distributed rounds only
 _MST_BOUNDS = {"local": None, "mixed": 20, "distributed": 0}
@@ -90,7 +90,7 @@ def mst_path(request, monkeypatch):
     driver-side finish."""
     bound = _MST_BOUNDS[request.param]
     if bound is not None:
-        monkeypatch.setattr(components, "LOCAL_FINISH_EDGES", bound)
+        monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", bound)
     finished = []
     finish = components._kruskal_finish
 

@@ -8,7 +8,7 @@ import struct
 import pyspark.sql.functions as F
 import pytest
 
-from smartpy_arc_spark.operators import scale
+from smartpy_arc_spark.operators import _ckpt, scale
 
 
 def _bits(x, signed_zero=True):
@@ -172,10 +172,10 @@ def test_exact_percentiles_histogram_cap(spark, monkeypatch):
         [(g, float(v)) for g in range(5) for v in (1.0, 3.0, 9.0)],
         "g long, a double",
     )
-    monkeypatch.setattr(scale, "HIST_ROW_CAP", 10)
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 10)
     with pytest.raises(ValueError, match=r"group column 'g'.* 10 "):
         scale.distributed_exact_percentiles(df, [("a", [0.5], "p")], group_col="g")
-    monkeypatch.setattr(scale, "HIST_ROW_CAP", 15)
+    monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", 15)
     assert len(
         scale.distributed_exact_percentiles(
             df, [("a", [0.5], "p")], group_col="g"

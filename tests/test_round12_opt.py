@@ -58,7 +58,7 @@ _MST_CASE = (
     "s long, d long, w long",
     _mst,
 )
-# mst case -> components.LOCAL_FINISH_EDGES: the driver-side finish alone
+# mst case -> _ckpt.COLLECT_ROW_CAP: the driver-side finish alone
 # (default), distributed rounds before it (bound 20 < the 23 edges), and
 # distributed rounds only (0)
 _MST_BOUNDS = {"mst": None, "mst_mixed": 20, "mst_distributed": 0}
@@ -78,13 +78,11 @@ def test_identical_on_both_checkpoint_paths(spark, monkeypatch, tmp_path, case):
     whether their intermediates materialize (default) or recompute (cap
     exceeded).  Inputs go through parquet: a createDataFrame local has no
     leaf size, so the cap would never bite on it."""
-    from smartpy_arc_spark.operators import components
+    from smartpy_arc_spark.operators import _ckpt
     from smartpy_arc_spark.operators._ckpt import leaf_input_bytes
 
     if _MST_BOUNDS.get(case) is not None:
-        monkeypatch.setattr(
-            components, "LOCAL_FINISH_EDGES", _MST_BOUNDS[case]
-        )
+        monkeypatch.setattr(_ckpt, "COLLECT_ROW_CAP", _MST_BOUNDS[case])
     rows, schema, run = _CHECKPOINT_CASES[case]
     path = str(tmp_path / "in.parquet")
     spark.createDataFrame(rows, schema).write.parquet(path)
