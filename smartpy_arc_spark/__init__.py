@@ -17,7 +17,9 @@ Design rules (100 TB target):
   * Broadcast bounded sides only; LSH instead of all-pairs similarity.
 """
 
-from smartpy_arc_spark.session import get_spark
+from smartpy_arc_spark.session import get_spark, install_zip_reread_gate
+
+install_zip_reread_gate()
 
 from smartpy_arc_spark.sources.scan import scan, scan_pandas
 from smartpy_arc_spark.sources.inspect import (

@@ -20,8 +20,6 @@ computed inside whole-stage codegen with no Python and no extra scan.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from smartpy_arc_spark.operators import _ckpt
-from smartpy_arc_spark.operators._stats_common import _check_e4_scale
 from smartpy_arc_spark.operators.stats_tests import mann_whitney_u
 
 # cumulative Poisson(1) thresholds; LITERALS shared with the SQL oracle so
