@@ -161,6 +161,21 @@ def restore_null_sentinels(
     return df.select(exprs)
 
 
+def _compat_cast(df: DataFrame, long_to) -> DataFrame:
+    """The per-column loop of the C6 coercions: bool → int32, each long
+    column through ``long_to(name, column)``, every other column kept."""
+    exprs = []
+    for field in df.schema.fields:
+        c = F.col(field.name)
+        if isinstance(field.dataType, T.BooleanType):
+            exprs.append(c.cast(T.IntegerType()).alias(field.name))
+        elif isinstance(field.dataType, T.LongType):
+            exprs.append(long_to(field.name, c).alias(field.name))
+        else:
+            exprs.append(c.alias(field.name))
+    return df.select(exprs)
+
+
 def compat_cast_for_write(df: DataFrame) -> DataFrame:
     """C6 write-side coercions (arc_utils.py:786-805), applied column-wise:
 
@@ -171,6 +186,12 @@ def compat_cast_for_write(df: DataFrame) -> DataFrame:
         compares max and min rather than ``max(abs)``: ``abs`` of
         ``Long.MIN_VALUE`` overflows (an ANSI error, or a silent wrap to a
         negative value that would pass the test).
+
+    The range test runs as its own Spark job when this is called, so a
+    caller that then runs the frame computes its input twice.
+    ``sinks.write.write_table(compat_casts=True)`` avoids that: it checks
+    the range inside the write job and calls this function only when a
+    value does not fit.
 
     Timestamps are already µs in Spark (the reference's ns→µs step,
     arc_utils.py:801-802, is a no-op here).
@@ -186,15 +207,35 @@ def compat_cast_for_write(df: DataFrame) -> DataFrame:
         ]
         row = df.agg(*aggs).first()
         in_range = {c: bool(row[c]) if row[c] is not None else True for c in long_cols}
+    return _compat_cast(
+        df,
+        lambda name, c: c.cast(
+            T.IntegerType() if in_range.get(name, True) else T.DoubleType()
+        ),
+    )
 
-    exprs = []
-    for field in df.schema.fields:
-        c = F.col(field.name)
-        if isinstance(field.dataType, T.BooleanType):
-            exprs.append(c.cast(T.IntegerType()).alias(field.name))
-        elif isinstance(field.dataType, T.LongType):
-            target = T.IntegerType() if in_range.get(field.name, True) else T.DoubleType()
-            exprs.append(c.cast(target).alias(field.name))
-        else:
-            exprs.append(c.alias(field.name))
-    return df.select(exprs)
+
+# the message of the error a guarded cast raises; write_table falls back
+# to compat_cast_for_write on it and on nothing else
+COMPAT_CAST_GUARD = "compat_casts: an int64 value is outside ±2147483647"
+
+
+def _guarded_compat_cast(df: DataFrame) -> DataFrame:
+    """The C6 coercions of :func:`compat_cast_for_write` with the range
+    test moved into the plan: every long column becomes int32, and a
+    value outside ±2147483647 raises ``COMPAT_CAST_GUARD`` in the task
+    that meets it.  The bound is explicit because an ANSI cast to int
+    would accept -2147483648, which the reference sends to float64.  The
+    guard is NULL unless it raises, so the coalesce always yields the
+    cast, and the column keeps the nullability the plain cast gives it
+    (a non-nullable input stays a required parquet column)."""
+    return _compat_cast(
+        df,
+        lambda _name, c: F.coalesce(
+            F.when(
+                ~c.between(-INT32_MAX, INT32_MAX),
+                F.raise_error(F.lit(COMPAT_CAST_GUARD)),
+            ),
+            c.cast(T.IntegerType()),
+        ),
+    )

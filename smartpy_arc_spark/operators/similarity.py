@@ -64,7 +64,14 @@ def cosine(a: Column, b: Column) -> Column:
     number, so a 0/0 NaN would rank a zero vector as the top neighbor of
     every query; NULL sorts last under ``desc`` and drops out of top-k.
     """
-    denom = F.sqrt(_dot(a, a) * _dot(b, b))
+    return _cosine_from_norms(a, b, _dot(a, a), _dot(b, b))
+
+
+def _cosine_from_norms(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Column:
+    """:func:`cosine` with the squared norms ``a_n2 = _dot(a, a)`` and
+    ``b_n2 = _dot(b, b)`` given, so a caller can fold each once per
+    vector instead of once per pair."""
+    denom = F.sqrt(a_n2 * b_n2)
     return F.when(denom > 0, _dot(a, b) / denom)
 
 
@@ -180,21 +187,28 @@ def knn_cosine_bruteforce(
     """Exact cosine top-k: broadcast the bounded query set, scan the corpus
     once, rank per query with a deterministic tiebreak.
 
+    Each vector's squared norm is folded once, on its own side of the
+    join; a pair folds only its dot product.  The cosine is the same
+    double as :func:`cosine` gives: the same float ops in the same order
+    (``_cosine_from_norms``).
+
     Returns (query_id, neighbor_id, cos_sim rounded to 6, rk).
     """
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
+    ).withColumn("_qn2", _dot(F.col("_qv"), F.col("_qv")))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_cv"),
-    )
+    ).withColumn("_cn2", _dot(F.col("_cv"), F.col("_cv")))
     pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        cosine(F.col("_qv"), F.col("_cv")).alias("_cos"),
+        _cosine_from_norms(
+            F.col("_qv"), F.col("_cv"), F.col("_qn2"), F.col("_cn2")
+        ).alias("_cos"),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
     return (

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import sys
 import zipimport
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -75,6 +76,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set session confs for the body, then restore each prior value (or
+    unset a key that had none)."""
+    conf = spark.conf
+    prior = {k: conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 _PYFILE_SESSIONS: set[str] = set()

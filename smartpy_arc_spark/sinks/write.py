@@ -22,17 +22,31 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping, Sequence
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from smartpy_arc_spark.functions.scalar import compat_cast_for_write
+from smartpy_arc_spark.functions.scalar import (
+    COMPAT_CAST_GUARD,
+    _guarded_compat_cast,
+    compat_cast_for_write,
+)
 from smartpy_arc_spark.meta import tag_geometry
+from smartpy_arc_spark.session import ensure_worker_imports, scoped_conf
 from smartpy_arc_spark.sources.scan import read_parquet
 
 
 def _out_path(workspace: str, name: str, fmt: str = "parquet") -> str:
     return os.path.join(workspace, f"{name}.{fmt}")
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop file system Spark's
+    writer checks (a driver-side call, no job)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(jpath)
 
 
 def write_table(
@@ -57,35 +71,64 @@ def write_table(
       (arc_utils.py:870-872).
     * ``compat_casts=True`` applies the reference's write-side coercions
       (bool→int32, in-range int64→int32 else float64; §1.2) — opt-in because
-      the int downcast is lossy by design.
+      the int downcast is lossy by design.  The write casts every long
+      column to int32 under a range guard inside its own job, so input
+      that fits is computed once.  A value outside ±2147483647 trips the
+      guard and aborts the write; the write then runs again with the types
+      ``compat_cast_for_write`` picks (float64 for that column).  The
+      guard can trip in the job, after Spark's exists check, which may
+      leave the target directory behind, or while Spark optimizes the
+      write (a projection over a small local frame, such as one made from
+      pandas, is folded then), before that check.  So the second attempt
+      overwrites only when ``overwrite=True`` or the target did not exist
+      before the first; otherwise it fails as an existing target does.
+      That fallback costs one failed job plus the range aggregate plus the
+      second write, and the aborted tasks log ERROR lines; on a cluster
+      the failing task is first retried ``spark.task.maxFailures`` times.
+      Any other error propagates after one attempt.  With
+      ``overwrite=True`` the old target is deleted as the write job
+      starts, as the reference drops it before writing, so an error in
+      the input (or in the fallback) can leave the target lost.
     * ``x_col``/``y_col`` tag the output as a point feature class: the pair is
       kept and a geometry-role metadata tag records the point-from-XY
       encoding + CRS, mirroring NumPyArrayToFeatureClass(arr, path, [x, y],
       srs) (arc_utils.py:877-879).
     * ``get_df_back=True`` returns a DataFrame reading what was written (the
       reference's read-back cursor, arc_utils.py:883-893).
+    * ``fmt`` is parquet, orc or csv; any other value raises ``ValueError``
+      before a Spark job runs.
     """
-    out = df
-    if cols is not None:
-        out = out.select(list(cols))
-    if compat_casts:
-        out = compat_cast_for_write(out)
-    if x_col and y_col:
-        out = tag_geometry(out, x_col, crs=srs, encoding="POINT_XY")
+    if fmt not in ("parquet", "orc", "csv"):
+        raise ValueError(f"unsupported format {fmt!r}")
+    path = _out_path(workspace, output_table, fmt)
+    selected = df if cols is None else df.select(list(cols))
+
+    def save(out: DataFrame, mode: str) -> None:
+        if x_col and y_col:
+            out = tag_geometry(out, x_col, crs=srs, encoding="POINT_XY")
+        writer = out.write.mode(mode)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        if fmt == "csv":
+            writer = writer.option("header", True)
+        writer.format(fmt).save(path)
 
     mode = "overwrite" if overwrite else "errorifexists"
-    path = _out_path(workspace, output_table, fmt)
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    elif fmt == "csv":
-        writer.option("header", True).csv(path)
+    if not compat_casts:
+        save(selected, mode)
     else:
-        raise ValueError(f"unsupported format {fmt!r}")
+        # the second attempt may replace only what the first could write
+        retry_mode = (
+            "errorifexists"
+            if not overwrite and _path_exists(df.sparkSession, path)
+            else "overwrite"
+        )
+        try:
+            save(_guarded_compat_cast(selected), mode)
+        except (PySparkException, Py4JJavaError) as e:
+            if COMPAT_CAST_GUARD not in str(e):
+                raise
+            save(compat_cast_for_write(selected), retry_mode)
 
     if get_df_back:
         spark = df.sparkSession
@@ -191,8 +234,6 @@ def write_shapefile_dataset(
                 attrs, attr_fields, wkbs, crs_wkt=crs_wkt,
             )
 
-    from smartpy_arc_spark.session import ensure_worker_imports
-
     ensure_worker_imports(df.sparkSession)
     df.foreachPartition(_write_partition)
     return folder
@@ -249,13 +290,7 @@ def write_partitioned(
     Static overwrite (``dynamic=False``) truncates the whole table root —
     the default Spark behavior this helper exists to fence off.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "DYNAMIC" if dynamic else "STATIC",
-        )
+    with scoped_conf(df.sparkSession, {
+        "spark.sql.sources.partitionOverwriteMode": "DYNAMIC" if dynamic else "STATIC",
+    }):
         df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

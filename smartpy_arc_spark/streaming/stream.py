@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smartpy_arc_spark.operators._ckpt import stream_state_width
+from smartpy_arc_spark.session import scoped_conf
 
 # micro-batch counts of the most recent drain per runner, keyed by the
 # memory-sink query name — diagnostics for the dispatch-latency story
@@ -44,20 +45,51 @@ def _record_batches(q) -> None:
 last_drain_widths: dict[str, dict] = {}
 
 
-def _start_at_state_width(stream_df: DataFrame, name: str, start):
-    """Call ``start()`` with ``spark.sql.shuffle.partitions`` scoped to the
-    stream's state width (``_ckpt.stream_state_width``); the value is
-    captured when the stream starts and pinned in its checkpoint
-    thereafter."""
+def _fs_checkpoint_manager(spark: SparkSession) -> str:
+    """The class name of Spark's checkpoint manager on the FileSystem API.
+    The default one goes through Hadoop's FileContext, whose local rename
+    forks helper processes (4 ``readlink`` per renamed file) when Hadoop's
+    native library is absent.  Spark 4.1 moved the class into the
+    ``checkpointing`` package."""
+    major, minor = (int(v) for v in spark.version.split(".")[:2])
+    package = "org.apache.spark.sql.execution.streaming."
+    if (major, minor) >= (4, 1):
+        package += "checkpointing."
+    return package + "FileSystemBasedCheckpointFileManager"
+
+
+def _start_at_state_width_on_fs_checkpoints(stream_df: DataFrame, name: str, start):
+    """Call a memory-sink drain's ``start()`` with two settings scoped to
+    it, both captured when the stream starts (the stream clones the
+    session conf):
+
+    * ``spark.sql.shuffle.partitions`` at the stream's state width
+      (``_ckpt.stream_state_width``), pinned in its checkpoint thereafter;
+    * ``spark.sql.streaming.checkpointFileManagerClass`` at
+      ``_fs_checkpoint_manager``, for the offset and commit logs on the
+      driver and the state-store files the executor tasks write.  A
+      drain's checkpoint is a temporary directory that Spark deletes at
+      stop and nothing else reads, so it needs none of FileContext's
+      rename guarantees; the checksum files are written either way.
+    """
     width, source_bytes = stream_state_width(stream_df)
     last_drain_widths[name] = {"width": width, "source_bytes": source_bytes}
-    conf = stream_df.sparkSession.conf
-    prior = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
+    spark = stream_df.sparkSession
+    with scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.streaming.checkpointFileManagerClass": _fs_checkpoint_manager(spark),
+    }):
         return start()
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def _sink_frame(spark: SparkSession, name: str) -> DataFrame:
+    """The frame of a started memory-sink query, with the sink's temp view
+    dropped, so a drain leaves no view (and no rows) in the session
+    catalog.  The frame holds the sink itself and is planned when it
+    runs, so it reads every row the drain adds after this call."""
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,9 +414,19 @@ def run_stream_to_memory(
     stateful drains, where one task now holds every key: their walls
     stay flat (first_seen 1.87 → 1.90 s, sessionize 1.20 → 1.22 s)
     while their CPU falls by 37–58 %.
+
+    The drain's checkpoint (a temporary directory Spark deletes at stop)
+    goes through Spark's FileSystem-API checkpoint manager
+    (``_fs_checkpoint_manager``) instead of the FileContext default, whose
+    local renames fork 4 ``readlink`` processes per file when Hadoop's
+    native library is absent: the sf0.01 window-count drain forks 25
+    helper processes instead of 89 (the ``chmod`` calls of file creation
+    remain) and writes the same checkpoint and checksum files.  The
+    memory sink's temp view is dropped before the drain returns or
+    raises; the returned frame keeps the sink and reads its rows.
     """
     name = name or f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = _start_at_state_width(
+    q = _start_at_state_width_on_fs_checkpoints(
         stream_df,
         name,
         stream_df.writeStream.outputMode(output_mode)
@@ -393,9 +435,10 @@ def run_stream_to_memory(
         .trigger(availableNow=True)
         .start,
     )
+    out = _sink_frame(stream_df.sparkSession, name)
     q.awaitTermination()
     _record_batches(q)
-    return stream_df.sparkSession.table(name)
+    return out
 
 
 def stream_upsert_to_parquet(
@@ -412,7 +455,9 @@ def stream_upsert_to_parquet(
     here with a temp-dir swap).
 
     Batches must be key-deduplicated upstream (e.g. a watermarked
-    ``dropDuplicates``); merge_upsert enforces it."""
+    ``dropDuplicates``); merge_upsert enforces it.  The checkpoint is
+    durable (a caller may pass one and restart from it), so it keeps
+    Spark's default checkpoint manager, unlike the memory-sink drains."""
     import os
     import shutil
     import tempfile
@@ -640,11 +685,11 @@ def run_stream_until_idle(
     timestamp) with ``numInputRows == 0`` and the engine reporting no
     data available — strictly stronger evidence, and the tail shrinks
     from ~0.3 s of held polls to one 100 ms-cadence event.
-    The stateful-shuffle width is sized exactly as in
-    :func:`run_stream_to_memory`; the in-repo generator sources are
-    unsized, so they keep width 8.  Raises ``TimeoutError`` when
-    ``timeout_sec`` passes before idleness is proven, rather than return
-    the partial table the memory sink holds.
+    The stateful-shuffle width, the checkpoint manager and the dropped
+    temp view are as in :func:`run_stream_to_memory`; the in-repo
+    generator sources are unsized, so they keep width 8.  Raises
+    ``TimeoutError`` when ``timeout_sec`` passes before idleness is
+    proven, rather than return the partial table the memory sink holds.
     """
     import time
 
@@ -653,11 +698,10 @@ def run_stream_until_idle(
     # idle detection rides on no-data progress events, which by default
     # are only emitted every 10 s — scope the interval down so exhaustion
     # is observed promptly (value captured at stream start)
-    conf_key = "spark.sql.streaming.noDataProgressEventInterval"
-    prior = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "100ms")
-    try:
-        q = _start_at_state_width(
+    with scoped_conf(
+        spark, {"spark.sql.streaming.noDataProgressEventInterval": "100ms"}
+    ):
+        q = _start_at_state_width_on_fs_checkpoints(
             stream_df,
             name,
             stream_df.writeStream.outputMode(output_mode)
@@ -665,11 +709,7 @@ def run_stream_until_idle(
             .queryName(name)
             .start,
         )
-    finally:
-        if prior is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prior)
+    out = _sink_frame(spark, name)
     try:
         idle = 0
         last_ts = None
@@ -693,7 +733,7 @@ def run_stream_until_idle(
             f"stream {name}: not idle after {timeout_sec} s and "
             f"{last_drain_batches.get(name, 0)} micro-batches"
         )
-    return spark.table(name)
+    return out
 
 
 def streaming_ewma_anomaly(

@@ -1,0 +1,74 @@
+"""``operators/similarity.py::knn_cosine_bruteforce`` folds each vector's
+squared norm once, on its own side of the join: its cosines are the same
+doubles as the per-pair ``cosine()`` form, on the edge cases too."""
+
+import struct
+
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
+
+from smartpy_arc_spark.operators import similarity as sim
+
+VECS = [
+    (0, [1.0, 2.0, 3.0]),
+    (1, [0.1, -0.7, 1e-3]),
+    (2, [0.0, 0.0, 0.0]),  # zero norm
+    (3, [1.0, None, 2.0]),  # NULL element
+    (4, [1.0, 2.0]),  # shorter than the rest
+    (5, [3.3, 1e-9, -2.5]),
+    (6, [1e154, 1e154, 1.0]),  # squared norm overflows to inf
+    (7, None),
+]
+
+
+def _vectors(spark):
+    return spark.createDataFrame(VECS, "vec_id long, embedding array<double>")
+
+
+def _per_pair_knn(queries, corpus, k):
+    """The former body: ``cosine()`` folds both norms for every pair."""
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("_qv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("_cv"))
+    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", sim.cosine(F.col("_qv"), F.col("_cv")).alias("_cos"))
+    w = W.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
+    return (scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+            .select("query_id", "neighbor_id", F.round("_cos", 6).alias("cos_sim"), "rk"))
+
+
+def test_staged_norms_give_the_per_pair_doubles(spark):
+    v = _vectors(spark)
+    q = v.select(F.col("vec_id").alias("qi"), F.col("embedding").alias("a"))
+    q = q.withColumn("a_n2", sim._dot(F.col("a"), F.col("a")))
+    c = v.select(F.col("vec_id").alias("ci"), F.col("embedding").alias("b"))
+    c = c.withColumn("b_n2", sim._dot(F.col("b"), F.col("b")))
+    rows = c.crossJoin(q).select(
+        "qi", "ci",
+        sim.cosine(F.col("a"), F.col("b")).alias("per_pair"),
+        sim._cosine_from_norms(F.col("a"), F.col("b"), F.col("a_n2"),
+                               F.col("b_n2")).alias("staged"),
+    ).collect()
+    assert len(rows) == len(VECS) ** 2
+
+    def bits(x):  # NULL stays None; any last-bit change shows
+        return None if x is None else struct.pack("<d", x)
+
+    assert all(bits(r.staged) == bits(r.per_pair) for r in rows), [
+        (r.qi, r.ci, r.staged, r.per_pair) for r in rows
+        if bits(r.staged) != bits(r.per_pair)]
+    nulls = {(r.qi, r.ci) for r in rows if r.staged is None}
+    # zero norm, a NULL element, mismatched lengths, a NULL vector
+    assert {(2, 0), (3, 0), (4, 0), (7, 0)} <= nulls
+    assert (0, 1) not in nulls
+
+
+def test_knn_matches_the_per_pair_form(spark):
+    v = _vectors(spark)
+    queries = v.where("vec_id < 5")
+    got = sim.knn_cosine_bruteforce(queries, v, k=len(VECS)).collect()
+    want = _per_pair_knn(queries, v, k=len(VECS)).collect()
+    # compared as reprs, so NaN (the zero vector against the overflowing
+    # norm: 0 · inf) equals NaN
+    assert sorted(map(repr, got)) == sorted(map(repr, want))

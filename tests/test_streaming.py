@@ -7,6 +7,7 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from smartpy_arc_spark.operators._ckpt import stream_state_width
 from smartpy_arc_spark.streaming import stream as st
@@ -39,7 +40,7 @@ def test_sf0_01_events_drain_runs_at_width_1(spark, sf0_01):
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     counts = st.windowed_event_counts(st.read_events_stream(spark, sf0_01))
     name = f"w_{uuid.uuid4().hex[:8]}"
-    q = st._start_at_state_width(
+    q = st._start_at_state_width_on_fs_checkpoints(
         counts, name,
         counts.writeStream.outputMode("complete").format("memory")
         .queryName(name).trigger(availableNow=True).start,
@@ -123,3 +124,53 @@ def test_rows_identical_at_width_1_and_max(spark, sf_dir, advisory, build):
         assert st.last_drain_widths[name]["width"] == width
         got[width] = sorted(out.collect(), key=repr)
     assert got[1] and got[1] == got[cap]
+
+
+def _views(spark):
+    return {t.name for t in spark.catalog.listTables()}
+
+
+def test_to_memory_drain_leaves_no_view(spark, sf_dir):
+    """The memory sink's temp view is dropped; the returned frame still
+    reads the drained rows, the same as the batch aggregate."""
+    from smartpy_arc_spark.sources.scan import normalize_event_time, read_parquet
+
+    views = _views(spark)
+    out = st.run_stream_to_memory(
+        st.windowed_event_counts(st.read_events_stream(spark, sf_dir)))
+    assert _views(spark) == views
+    raw = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+    batch = st.windowed_event_counts(
+        raw.withColumn("ts", normalize_event_time(raw, "ts")))
+    got = sorted(out.collect(), key=repr)
+    assert got and got == sorted(batch.collect(), key=repr)
+    assert sorted(out.collect(), key=repr) == got
+
+
+def test_until_idle_drain_leaves_no_view(spark):
+    from smartpy_arc_spark.sources.seqgen import register_seqgen
+
+    register_seqgen(spark)
+    gen = (
+        spark.readStream.format("seqgen")
+        .option("n_total", 200).option("rows_per_batch", 100)
+        .option("n_users", 10).load()
+    )
+    agg = gen.groupBy("user_id").agg(F.count("*").alias("n"))
+    views = _views(spark)
+    out = st.run_stream_until_idle(agg)
+    assert _views(spark) == views
+    rows = out.collect()
+    assert len(rows) == 10 and sum(r.n for r in rows) == 200
+
+
+def test_until_idle_timeout_leaves_no_view(spark):
+    rate = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .load()
+    )
+    name = f"rate_{uuid.uuid4().hex[:8]}"
+    with pytest.raises(TimeoutError):
+        st.run_stream_until_idle(rate.groupBy().count(), name=name, timeout_sec=1)
+    assert name not in _views(spark)

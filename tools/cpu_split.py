@@ -1,29 +1,38 @@
 #!/usr/bin/env python
 """Split each contract query's CPU per call between the driver's Python,
-the JVM and the Python workers.
+the JVM, the JVM's helper processes and the Python workers.
 
     python tools/cpu_split.py geom_split wav_decode [--scale sf0.01] [--calls 5]
+    python tools/cpu_split.py enrich_join_inner --sink parquet
 
-Each named ``queries()`` entry runs into the noop sink, against the table
-set ``perfbench/data/<scale>``, first for ``WARMUP_CALLS`` untimed calls
-and then for ``--calls`` measured ones.  Per call, CPU seconds (user +
-system) are read from ``/proc/<pid>/stat`` over the whole process tree, as
-``perfbench/run.py::tree_cpu_s`` reads them, and split three ways:
+Each named ``queries()`` entry runs against the table set
+``perfbench/data/<scale>``, first for ``WARMUP_CALLS`` untimed calls and
+then for ``--calls`` measured ones.  With ``--sink noop`` (the default) a
+call runs the query into the noop sink.  With ``--sink parquet`` it runs
+the query as ``perfbench``'s ``etl_exchange`` pass does: written through
+``sinks.write.write_table(..., overwrite=True, compat_casts=True)``, read
+back through ``sources.scan.scan`` and run into the noop sink.  Per call,
+CPU seconds (user + system) are read from ``/proc/<pid>/stat`` over the
+whole process tree, as ``perfbench/run.py::tree_cpu_s`` reads them, and
+split four ways:
 
 - ``driver_s``: this Python process;
-- ``jvm_s``: the ``java`` process, and the short-lived helpers it forks
-  (Hadoop's local file system shells out for some file operations);
+- ``jvm_s``: the ``java`` process itself;
+- ``helpers_s``: the short-lived processes the JVM forks and reaps
+  (Hadoop's local file system runs ``chmod`` and ``readlink`` when its
+  native library is not loaded), and any still running;
 - ``workers_s``: the Python processes below the JVM, the pyspark daemon
   and its workers.
 
-A process that has exited counts towards the process that reaped it
-(the daemon reaps its workers).
+A Python process that has exited counts towards the process that reaped
+it (the daemon reaps its workers).
 
 ``jobs`` counts the Spark jobs a call submits, streaming ones included.
 The session runs as ``perfbench/run.py`` runs it: local[nproc], a 1 GB
 driver heap and a C1-only JVM.  Each query's medians are printed as a
 line to stderr; the last stdout line is one JSON object
-``{query: {"driver_s", "jvm_s", "workers_s", "jobs", "wall_s"}}``.
+``{query: {"driver_s", "jvm_s", "helpers_s", "workers_s", "jobs",
+"wall_s"}}``.
 """
 
 from __future__ import annotations
@@ -44,9 +53,10 @@ CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 def cpu_split(pid: int) -> dict[str, float]:
     """CPU seconds used so far by ``pid`` and every process below it,
-    split into the driver (``pid`` itself), the JVM and the Python
-    workers.  A process that is neither ``java`` nor Python counts
-    towards its parent's part."""
+    split into the driver (``pid`` itself), the JVM, the JVM's helpers
+    and the Python workers.  Everything the ``java`` process reaped and
+    every process below it that is neither ``java`` nor Python count as
+    helpers; below a Python worker, they count towards the workers."""
     children: dict[int, list[int]] = {}
     procs: dict[int, tuple[str, int, int]] = {}
     for entry in os.listdir("/proc"):
@@ -62,7 +72,7 @@ def cpu_split(pid: int) -> dict[str, float]:
         reaped = int(fields[13]) + int(fields[14])  # cutime cstime
         procs[int(entry)] = (head.split("(", 1)[1], own, reaped)
         children.setdefault(int(fields[1]), []).append(int(entry))
-    ticks = {"driver_s": 0, "jvm_s": 0, "workers_s": 0}
+    ticks = {"driver_s": 0, "jvm_s": 0, "helpers_s": 0, "workers_s": 0}
     todo = [(pid, "driver_s")]
     while todo:
         p, part = todo.pop()
@@ -70,8 +80,11 @@ def cpu_split(pid: int) -> dict[str, float]:
             continue
         comm, own, reaped = procs[p]
         if comm == "java":
-            part = "jvm_s"
-        elif p != pid and comm.startswith("python"):
+            ticks["jvm_s"] += own
+            ticks["helpers_s"] += reaped
+            todo.extend((c, "helpers_s") for c in children.get(p, []))
+            continue
+        if p != pid and comm.startswith("python"):
             part = "workers_s"
         ticks[part] += own + reaped
         todo.extend((c, part) for c in children.get(p, []))
@@ -84,6 +97,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--scale", default="sf0.01",
                     help="table set under perfbench/data (sf0.01 or sf0.001)")
     ap.add_argument("--calls", type=int, default=5, help="measured calls per query")
+    ap.add_argument("--sink", choices=("noop", "parquet"), default="noop",
+                    help="noop: run into the noop sink; parquet: write with "
+                    "compat casts, read back, run into the noop sink")
     args = ap.parse_args(argv)
     data_dir = os.path.join(ROOT, "perfbench", "data", args.scale)
     if not os.path.isdir(data_dir):
@@ -95,6 +111,8 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, ROOT)
     import __spark_entry__ as contract
     from smartpy_arc_spark import get_spark
+    from smartpy_arc_spark.sinks.write import write_table
+    from smartpy_arc_spark.sources.scan import scan
 
     qs = contract.queries()
     unknown = [q for q in args.queries if q not in qs]
@@ -111,13 +129,22 @@ def main(argv: list[str] | None = None) -> int:
     )
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     pid = os.getpid()
+    out_dir = os.path.join(work, "out")
+
+    def call(name: str) -> None:
+        df = qs[name](spark, data_dir)
+        if args.sink == "parquet":
+            write_table(df, out_dir, name, overwrite=True, compat_casts=True)
+            df = scan(spark, out_dir, name)
+        df.write.format("noop").mode("overwrite").save()
+
     out = {}
     try:
         for name in args.queries:
             samples = []
             for i in range(WARMUP_CALLS + args.calls):
                 c0, j0, t0 = cpu_split(pid), dag.numTotalJobs(), time.perf_counter()
-                qs[name](spark, data_dir).write.format("noop").mode("overwrite").save()
+                call(name)
                 wall_s, jobs = time.perf_counter() - t0, dag.numTotalJobs() - j0
                 c1 = cpu_split(pid)
                 if i >= WARMUP_CALLS:
