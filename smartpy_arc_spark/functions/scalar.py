@@ -1,12 +1,15 @@
 """Scalar computation / derived columns — C1-C6 (SURVEY.md §2.5).
 
-All implemented with built-in ``pyspark.sql.functions`` so they stay inside
-whole-stage codegen; no Python UDFs anywhere in this module.
+All implemented with Spark built-ins, as ``pyspark.sql.functions`` Columns
+or, for the per-column C4-C6 projections, as their SQL text
+(``sqltext.project``), so they stay inside whole-stage codegen; no Python
+UDFs anywhere in this module.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -14,6 +17,7 @@ from pyspark.sql import types as T
 
 from smartpy_arc_spark.meta import tag_oid
 from smartpy_arc_spark.sources.scan import _DATE_TYPES, _NUMERIC_TYPES, _fill_sentinels
+from smartpy_arc_spark.sqltext import ident, literal, project, select_sql
 
 
 def portable_hash64(c) -> "F.Column":
@@ -104,23 +108,35 @@ def clamp_timestamps(
 ) -> DataFrame:
     """C4 datetime sanitize (arc_utils.py:710-724): timestamps outside
     [lo, hi] → null.  Spark's µs timestamps are wider than pandas ns, so this
-    is a compat option, not a default."""
+    is a compat option, not a default.
+
+    Every clamped column is rewritten in one projection built from SQL
+    text (``sqltext.project``), so the frame is analyzed once, not once
+    per timestamp column; the bounds are cast to each column's own type
+    (TIMESTAMP or TIMESTAMP_NTZ)."""
     if cols is None:
         cols = [
             f.name
             for f in df.schema.fields
             if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
         ]
-    for c in cols:
-        col = F.col(c)
-        dt = df.schema[c].dataType  # honor TIMESTAMP vs TIMESTAMP_NTZ
-        df = df.withColumn(
-            c,
-            F.when(
-                col.between(F.lit(lo).cast(dt), F.lit(hi).cast(dt)), col
-            ).otherwise(F.lit(None).cast(dt)),
+    clamped = set(cols)
+    if not clamped:
+        return df
+    unknown = clamped - set(df.columns)
+    if unknown:
+        raise KeyError(f"clamp_timestamps: no column named {sorted(unknown)}")
+
+    def clamp(col: str, field: T.StructField) -> str | None:
+        if field.name not in clamped:
+            return None
+        dt = field.dataType
+        return (
+            f"CASE WHEN (({col} >= {literal(lo, dt)}) AND ({col} <= {literal(hi, dt)})) "
+            f"THEN {col} ELSE {literal(None, dt)} END"
         )
-    return df
+
+    return project(df, clamp)
 
 
 def fill_null_sentinels(df: DataFrame, **kw) -> DataFrame:
@@ -137,43 +153,38 @@ def restore_null_sentinels(
 ) -> DataFrame:
     """C5 reverse direction (arc_utils.py:739-745): sentinel → null, including
     the literal string ``'nan'``, for every type class ``_fill_sentinels``
-    fills.  Lossy by design — legitimate sentinel
-    values become null; provided for reference parity, not as a default."""
-    exprs = []
-    for field in df.schema.fields:
-        c = F.col(field.name)
+    fills, in one projection built from SQL text (``sqltext.project``).
+    Lossy by design — legitimate sentinel values become null; provided for
+    reference parity, not as a default."""
+
+    def restore(col: str, field: T.StructField) -> str | None:
         if isinstance(field.dataType, T.StringType):
-            exprs.append(
-                F.when(c.isin(str_fill, "nan"), F.lit(None)).otherwise(c).alias(field.name)
-            )
+            hit = f"{col} IN ({literal(str_fill)}, {literal('nan')})"
         elif isinstance(field.dataType, _NUMERIC_TYPES):
-            exprs.append(
-                F.when(c == F.lit(num_fill).cast(field.dataType), F.lit(None))
-                .otherwise(c).alias(field.name)
-            )
+            hit = f"({col} = {literal(num_fill, field.dataType)})"
         elif isinstance(field.dataType, _DATE_TYPES):
-            exprs.append(
-                F.when(c == F.lit(date_fill).cast(field.dataType), F.lit(None))
-                .otherwise(c).alias(field.name)
-            )
+            hit = f"({col} = {literal(date_fill, field.dataType)})"
         else:
-            exprs.append(c.alias(field.name))
-    return df.select(exprs)
+            return None
+        return f"CASE WHEN {hit} THEN NULL ELSE {col} END"
+
+    return project(df, restore)
 
 
-def _compat_cast(df: DataFrame, long_to) -> DataFrame:
-    """The per-column loop of the C6 coercions: bool → int32, each long
-    column through ``long_to(name, column)``, every other column kept."""
-    exprs = []
-    for field in df.schema.fields:
-        c = F.col(field.name)
+def _compat_cast(df: DataFrame, long_to: Callable[[str, str], str]) -> DataFrame:
+    """The per-column rule of the C6 coercions, as one projection built
+    from SQL text (``sqltext.project``): bool → int32, each long column
+    through ``long_to(name, col)``, which returns the SQL of its new
+    value given its quoted name ``col``, every other column kept."""
+
+    def cast(col: str, field: T.StructField) -> str | None:
         if isinstance(field.dataType, T.BooleanType):
-            exprs.append(c.cast(T.IntegerType()).alias(field.name))
-        elif isinstance(field.dataType, T.LongType):
-            exprs.append(long_to(field.name, c).alias(field.name))
-        else:
-            exprs.append(c.alias(field.name))
-    return df.select(exprs)
+            return f"CAST({col} AS INT)"
+        if isinstance(field.dataType, T.LongType):
+            return long_to(field.name, col)
+        return None
+
+    return project(df, cast)
 
 
 def compat_cast_for_write(df: DataFrame) -> DataFrame:
@@ -197,21 +208,17 @@ def compat_cast_for_write(df: DataFrame) -> DataFrame:
     arc_utils.py:801-802, is a no-op here).
     """
     long_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.LongType)]
-    in_range: dict[str, bool] = {}
+    too_wide: set[str] = set()
     if long_cols:
-        aggs = [
-            (
-                (F.max(c) <= F.lit(INT32_MAX)) & (F.min(c) >= F.lit(-INT32_MAX))
-            ).alias(c)
+        row = select_sql(df, [
+            f"(max({ident(c)}) <= {INT32_MAX}) AND (min({ident(c)}) >= {-INT32_MAX}) "
+            f"AS {ident(c)}"
             for c in long_cols
-        ]
-        row = df.agg(*aggs).first()
-        in_range = {c: bool(row[c]) if row[c] is not None else True for c in long_cols}
+        ]).first()
+        # NULL: an empty or all-null column, which fits
+        too_wide = {c for c in long_cols if row[c] is False}
     return _compat_cast(
-        df,
-        lambda name, c: c.cast(
-            T.IntegerType() if in_range.get(name, True) else T.DoubleType()
-        ),
+        df, lambda name, col: f"CAST({col} AS {'DOUBLE' if name in too_wide else 'INT'})"
     )
 
 
@@ -229,13 +236,13 @@ def _guarded_compat_cast(df: DataFrame) -> DataFrame:
     guard is NULL unless it raises, so the coalesce always yields the
     cast, and the column keeps the nullability the plain cast gives it
     (a non-nullable input stays a required parquet column)."""
+    guard = (
+        "coalesce(CASE WHEN NOT (({col} >= {lo}) AND ({col} <= {hi})) "
+        "THEN raise_error({msg}) END, CAST({col} AS INT))"
+    )
     return _compat_cast(
         df,
-        lambda _name, c: F.coalesce(
-            F.when(
-                ~c.between(-INT32_MAX, INT32_MAX),
-                F.raise_error(F.lit(COMPAT_CAST_GUARD)),
-            ),
-            c.cast(T.IntegerType()),
+        lambda _name, col: guard.format(
+            col=col, lo=-INT32_MAX, hi=INT32_MAX, msg=literal(COMPAT_CAST_GUARD)
         ),
     )

@@ -4,9 +4,10 @@ driver-collect decision.
 This module is the only place that sizes a frame (``sizeInBytes``) and the
 only place that decides whether an intermediate is pinned
 (:func:`sized_local_checkpoint`), a join side is broadcast
-(:func:`broadcast_if_small`), how wide a bounded stream's state is
-(:func:`stream_state_width`) or whether a frame of unknown row count may
-be collected (:func:`collect_if_fits`).  Operators and drains call these
+(:func:`broadcast_if_small`), how wide a bounded stream's state and
+result are (:func:`stream_state_width`, :func:`coalesce_to_bytes`) or
+whether a frame of unknown row count may be collected
+(:func:`collect_if_fits`).  Operators and drains call these
 functions; they do not size frames, pick storage levels, set widths or
 probe row counts themselves.
 
@@ -68,9 +69,13 @@ checkpoint-checksum sidecar, each local create forking ``chmod``).  A
 bounded drain therefore runs its stateful shuffle at the width AQE would
 have coalesced its source to,
 ``ceil(leaf bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
-clamped to ``[1, spark.sql.shuffle.partitions]``.  An unsized source keeps
-:data:`UNSIZED_STREAM_WIDTH`, the fixed width the drains ran at before
-they were sized.
+clamped to ``[1, spark.sql.shuffle.partitions]`` (:func:`bytes_width`).
+An unsized source keeps :data:`UNSIZED_STREAM_WIDTH`, the fixed width the
+drains ran at before they were sized.  A drain's result is sized by the
+same rule (:func:`coalesce_to_bytes`): the memory sink's frame plans as a
+local table scan cut into ``min(rows, defaultParallelism)`` partitions,
+so a few thousand rows would otherwise be written as that many files and
+read back by that many tasks.
 
 **Driver collects.**  A frame whose row count the caller cannot bound by
 construction is collected through :func:`collect_if_fits`: one
@@ -96,9 +101,11 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from smartpy_arc_spark.session import jclass
 
 BROADCAST_CAP_BYTES = 512 << 20
 COLLECT_ROW_CAP = 1 << 16
@@ -165,20 +172,37 @@ def broadcast_if_small(df: DataFrame, what: str) -> DataFrame:
     return F.broadcast(df)
 
 
+def bytes_width(spark: SparkSession, nbytes: int) -> int:
+    """The partition count AQE would coalesce ``nbytes`` to:
+    ``ceil(nbytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
+    clamped to ``[1, spark.sql.shuffle.partitions]``."""
+    target = jclass(spark, "org.apache.spark.network.util.JavaUtils").byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-nbytes // target)))
+
+
 def stream_state_width(df: DataFrame) -> tuple[int, int | None]:
     """``(width, source bytes)`` for a bounded stream's stateful shuffle:
-    ``ceil(leaf bytes / advisoryPartitionSizeInBytes)`` clamped to
-    ``[1, spark.sql.shuffle.partitions]``, or
+    :func:`bytes_width` of its leaf bytes, or
     ``(UNSIZED_STREAM_WIDTH, None)`` for an unsized source."""
     est = leaf_input_bytes(df)
     if est is None:
         return UNSIZED_STREAM_WIDTH, None
-    spark = df.sparkSession
-    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, -(-est // target))), est
+    return bytes_width(df.sparkSession, est), est
+
+
+def coalesce_to_bytes(df: DataFrame) -> tuple[DataFrame, int | None]:
+    """``(df.coalesce(w), w)`` with ``w`` the :func:`bytes_width` of the
+    frame's leaf bytes, or ``(df, None)`` for an unsized frame.
+    ``coalesce`` adds no shuffle, keeps the partitions' concatenation
+    order and never widens."""
+    est = leaf_input_bytes(df)
+    if est is None:
+        return df, None
+    width = bytes_width(df.sparkSession, est)
+    return df.coalesce(width), width
 
 
 def collect_if_fits(df: DataFrame) -> list | None:

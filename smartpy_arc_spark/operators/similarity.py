@@ -60,9 +60,11 @@ def _oversized(what: str) -> ValueError:
 def cosine(a: Column, b: Column) -> Column:
     """dot(a,b) / sqrt(dot(a,a) * dot(b,b)) on array<double> columns.
 
-    Null (not NaN) for zero-norm vectors: Spark sorts NaN above every
-    number, so a 0/0 NaN would rank a zero vector as the top neighbor of
-    every query; NULL sorts last under ``desc`` and drops out of top-k.
+    Null (not NaN) unless the norm product is finite and positive: Spark
+    sorts NaN above every number, so a 0/0 NaN — or the ``0 · inf`` NaN of
+    a zero vector against one whose squared norm overflows — would rank
+    as the top neighbor of every query; NULL sorts last under ``desc``
+    and drops out of top-k.
     """
     return _cosine_from_norms(a, b, _dot(a, a), _dot(b, b))
 
@@ -72,7 +74,8 @@ def _cosine_from_norms(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Colu
     ``b_n2 = _dot(b, b)`` given, so a caller can fold each once per
     vector instead of once per pair."""
     denom = F.sqrt(a_n2 * b_n2)
-    return F.when(denom > 0, _dot(a, b) / denom)
+    # NaN > 0 holds in Spark's ordering; NaN < inf does not
+    return F.when((denom > 0) & (denom < F.lit(float("inf"))), _dot(a, b) / denom)
 
 
 def cosine_threshold_pairs_bounded(
@@ -103,7 +106,8 @@ def cosine_threshold_pairs_bounded(
     - pairs whose vector lengths differ fold over ``zip_with`` null
       padding → null cosine → dropped by the threshold; here each corpus
       row only scores against query vectors of ITS OWN length;
-    - zero-norm vectors: ``denom > 0`` gate → dropped;
+    - zero-norm vectors and overflowing norms: the finite positive
+      ``denom`` gate → dropped;
     - null/NaN elements poison the fold → dropped (NaN comparisons are
       false in both engines; Arrow surfaces element nulls as NaN).
 
@@ -155,6 +159,7 @@ def cosine_threshold_pairs_bounded(
                     cos = D / denom
                     mask = (
                         (denom > 0)
+                        & np.isfinite(denom)
                         & (cos > threshold)
                         & (cids[:, None] > qids[None, :])
                     )

@@ -12,6 +12,7 @@ import sys
 import zipimport
 from contextlib import contextmanager
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
 
@@ -76,6 +77,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jclass(spark: SparkSession, name: str) -> JavaClass:
+    """A direct py4j handle on the JVM class ``name``.  Resolving
+    ``spark._jvm.a.b.C`` costs one py4j round trip, and one failed class
+    lookup, per package segment; this handle costs none until it is
+    called."""
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
 
 
 @contextmanager

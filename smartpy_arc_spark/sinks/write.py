@@ -34,7 +34,7 @@ from smartpy_arc_spark.functions.scalar import (
     compat_cast_for_write,
 )
 from smartpy_arc_spark.meta import tag_geometry
-from smartpy_arc_spark.session import ensure_worker_imports, scoped_conf
+from smartpy_arc_spark.session import ensure_worker_imports, jclass, scoped_conf
 from smartpy_arc_spark.sources.scan import read_parquet
 
 
@@ -45,7 +45,7 @@ def _out_path(workspace: str, name: str, fmt: str = "parquet") -> str:
 def _path_exists(spark: SparkSession, path: str) -> bool:
     """Whether ``path`` exists, asked of the Hadoop file system Spark's
     writer checks (a driver-side call, no job)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = jclass(spark, "org.apache.hadoop.fs.Path")(path)
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(jpath)
 
 

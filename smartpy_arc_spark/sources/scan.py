@@ -36,10 +36,12 @@ import re
 import warnings
 from collections.abc import Mapping, Sequence
 
-from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from smartpy_arc_spark.session import jclass
+from smartpy_arc_spark.sqltext import literal, project
 
 # Null sentinels of the legacy scan (reference defaults,
 # arc_utils.py:614-615: str_fill='', num_fill=-1, date_fill='1678-01-01').
@@ -119,17 +121,13 @@ def parquet_schema(spark: SparkSession, *paths: str) -> T.StructType | None:
     ):
         return None
 
-    def jclass(name: str) -> JavaClass:
-        # a direct handle: resolving ``spark._jvm.a.b.C`` costs one py4j
-        # round trip per package segment, most of a resolution's cost
-        return JavaClass(name, sc._gateway._gateway_client)
-
-    conv = jclass(_SPARK_PARQUET + "ParquetToSparkSchemaConverter")
+    conv = jclass(spark, _SPARK_PARQUET + "ParquetToSparkSchemaConverter")
     try:
-        jpath = jclass("org.apache.hadoop.fs.Path")(leaf)
-        meta = jclass(_SPARK_PARQUET + "ParquetFooterReader").readFooter(
-            jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(jpath, hconf),
-            jclass("org.apache.parquet.format.converter.ParquetMetadataConverter")
+        jpath = jclass(spark, "org.apache.hadoop.fs.Path")(leaf)
+        meta = jclass(spark, _SPARK_PARQUET + "ParquetFooterReader").readFooter(
+            jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile")
+            .fromPath(jpath, hconf),
+            jclass(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter")
             .SKIP_ROW_GROUPS,
         )
         # the converter exactly as inference builds it: five flags from the
@@ -144,8 +142,8 @@ def parquet_schema(spark: SparkSession, *paths: str) -> T.StructType | None:
             getattr(conv, "$lessinit$greater$default$7")(),
             conf.parquetReaderRespectUnknownTypeAnnotation(),
         )
-        schema = jclass(_SPARK_PARQUET + "ParquetFileFormat").readSchemaFromFooter(
-            jclass("org.apache.parquet.hadoop.Footer")(jpath, meta), converter
+        schema = jclass(spark, _SPARK_PARQUET + "ParquetFileFormat").readSchemaFromFooter(
+            jclass(spark, "org.apache.parquet.hadoop.Footer")(jpath, meta), converter
         )
         return T.StructType.fromJson(json.loads(schema.json()))
     except Exception as exc:
@@ -400,21 +398,20 @@ def _fill_sentinels(
     num_fill: float = DEFAULT_NUM_FILL,
     date_fill: str = DEFAULT_DATE_FILL,
 ) -> DataFrame:
-    """Null → sentinel per type class (C5, arc_utils.py:664-673, :739-745)."""
-    exprs = []
-    for field in df.schema.fields:
-        c = F.col(field.name)
+    """Null → sentinel per type class (C5, arc_utils.py:664-673, :739-745):
+    ``coalesce(c, <sentinel cast to c's type>)``, built as one projection
+    from SQL text (``sqltext.project``)."""
+
+    def fill(col: str, field: T.StructField) -> str | None:
         if isinstance(field.dataType, T.StringType):
-            exprs.append(F.coalesce(c, F.lit(str_fill)).alias(field.name))
-        elif isinstance(field.dataType, _NUMERIC_TYPES):
-            exprs.append(F.coalesce(c, F.lit(num_fill).cast(field.dataType)).alias(field.name))
-        elif isinstance(field.dataType, _DATE_TYPES):
-            exprs.append(
-                F.coalesce(c, F.lit(date_fill).cast(field.dataType)).alias(field.name)
-            )
-        else:
-            exprs.append(c.alias(field.name))
-    return df.select(exprs)
+            return f"coalesce({col}, {literal(str_fill)})"
+        if isinstance(field.dataType, _NUMERIC_TYPES):
+            return f"coalesce({col}, {literal(num_fill, field.dataType)})"
+        if isinstance(field.dataType, _DATE_TYPES):
+            return f"coalesce({col}, {literal(date_fill, field.dataType)})"
+        return None
+
+    return project(df, fill)
 
 
 def scan_pandas(spark: SparkSession, workspace: str, class_name: str | None = None, **kw):

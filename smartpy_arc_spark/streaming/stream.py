@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from smartpy_arc_spark.operators._ckpt import stream_state_width
+from smartpy_arc_spark.operators._ckpt import coalesce_to_bytes, stream_state_width
 from smartpy_arc_spark.session import scoped_conf
 
 # micro-batch counts of the most recent drain per runner, keyed by the
@@ -39,9 +39,11 @@ def _record_batches(q) -> None:
         last_drain_batches[p["name"] or p["id"]] = p["batchId"] + 1
 
 
-# the stateful-shuffle width of the most recent drain per runner and the
-# source bytes it was derived from (None: unsized source), keyed like
-# last_drain_batches.  Read by tools/stream_batches.py; a plain dict.
+# the stateful-shuffle width of the most recent drain per runner, the
+# source bytes it was derived from (None: unsized source) and the
+# partition count of the returned result (None: unsized, left as the sink
+# planned it), keyed like last_drain_batches.  Read by
+# tools/stream_batches.py; a plain dict.
 last_drain_widths: dict[str, dict] = {}
 
 
@@ -73,13 +75,25 @@ def _start_at_state_width_on_fs_checkpoints(stream_df: DataFrame, name: str, sta
       rename guarantees; the checksum files are written either way.
     """
     width, source_bytes = stream_state_width(stream_df)
-    last_drain_widths[name] = {"width": width, "source_bytes": source_bytes}
+    # result_width is set by _sized_result once the drain has finished
+    last_drain_widths[name] = {
+        "width": width, "source_bytes": source_bytes, "result_width": None}
     spark = stream_df.sparkSession
     with scoped_conf(spark, {
         "spark.sql.shuffle.partitions": str(width),
         "spark.sql.streaming.checkpointFileManagerClass": _fs_checkpoint_manager(spark),
     }):
         return start()
+
+
+def _sized_result(out: DataFrame, name: str) -> DataFrame:
+    """A finished drain's result at the width its bytes need
+    (``_ckpt.coalesce_to_bytes``), recorded as ``result_width``.  Called
+    once the sink's rows are final: the sink's plan is sized by its rows
+    times their width."""
+    out, width = coalesce_to_bytes(out)
+    last_drain_widths[name]["result_width"] = width
+    return out
 
 
 def _sink_frame(spark: SparkSession, name: str) -> DataFrame:
@@ -99,16 +113,22 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on the writer (TIMESTAMP(NANOS) → long under the legacy conf;
     µs writers → timestamp_ntz).  The events file's footer, read on the
     driver (``parquet_schema``), yields the exact schema the stream reader
-    will see — no data is scanned and no Spark job runs — and
-    ``normalize_event_time`` then converts whichever ``ts`` arrived into a
-    zoned µs timestamp.
+    will see — no data is scanned, no Spark job runs and no batch relation
+    is resolved — and ``normalize_event_time`` then converts whichever
+    ``ts`` arrived into a zoned µs timestamp.  Where the footer cannot be
+    read on the driver, the schema of a batch read of the file is used.
     """
-    from smartpy_arc_spark.sources.scan import normalize_event_time, read_parquet
+    from smartpy_arc_spark.sources.scan import (
+        normalize_event_time,
+        parquet_schema,
+        read_parquet,
+    )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = read_parquet(spark, f"{sf_dir}/events.parquet")
+    path = f"{sf_dir}/events.parquet"
+    schema = parquet_schema(spark, path) or read_parquet(spark, path).schema
     raw = (
-        spark.readStream.schema(probe.schema)
+        spark.readStream.schema(schema)
         # readStream needs a directory; the glob narrows it to the events file
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
@@ -424,6 +444,18 @@ def run_stream_to_memory(
     remain) and writes the same checkpoint and checksum files.  The
     memory sink's temp view is dropped before the drain returns or
     raises; the returned frame keeps the sink and reads its rows.
+
+    Once the drain has finished, the result is coalesced to the width its
+    bytes need (``_ckpt.coalesce_to_bytes``): the sink's rows times their
+    width over ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    clamped to ``[1, spark.sql.shuffle.partitions]``, and recorded as
+    ``result_width`` in ``last_drain_widths``.  The sink's frame plans as
+    a local table scan cut into ``min(rows, defaultParallelism)``
+    partitions, so uncoalesced the sf0.01 window counts (3,385 rows, one
+    partition's worth of bytes) would be written as 4 part files and read
+    back by 4 tasks on 4 cores.  ``coalesce`` adds no shuffle and keeps
+    the partitions' concatenation order, so the rows and their order are
+    unchanged, and it never widens a result.
     """
     name = name or f"stream_out_{uuid.uuid4().hex[:8]}"
     q = _start_at_state_width_on_fs_checkpoints(
@@ -438,7 +470,7 @@ def run_stream_to_memory(
     out = _sink_frame(stream_df.sparkSession, name)
     q.awaitTermination()
     _record_batches(q)
-    return out
+    return _sized_result(out, name)
 
 
 def stream_upsert_to_parquet(
@@ -685,11 +717,13 @@ def run_stream_until_idle(
     timestamp) with ``numInputRows == 0`` and the engine reporting no
     data available — strictly stronger evidence, and the tail shrinks
     from ~0.3 s of held polls to one 100 ms-cadence event.
-    The stateful-shuffle width, the checkpoint manager and the dropped
-    temp view are as in :func:`run_stream_to_memory`; the in-repo
-    generator sources are unsized, so they keep width 8.  Raises
-    ``TimeoutError`` when ``timeout_sec`` passes before idleness is
-    proven, rather than return the partial table the memory sink holds.
+    The stateful-shuffle width, the checkpoint manager, the dropped
+    temp view and the result width are as in :func:`run_stream_to_memory`;
+    the result is sized after the query has stopped, when the sink's rows
+    are final.  The in-repo generator sources are unsized, so they keep
+    state width 8.  Raises ``TimeoutError`` when ``timeout_sec`` passes
+    before idleness is proven, rather than return the partial table the
+    memory sink holds.
     """
     import time
 
@@ -733,7 +767,7 @@ def run_stream_until_idle(
             f"stream {name}: not idle after {timeout_sec} s and "
             f"{last_drain_batches.get(name, 0)} micro-batches"
         )
-    return out
+    return _sized_result(out, name)
 
 
 def streaming_ewma_anomaly(

@@ -318,6 +318,30 @@ def test_row_probe_lives_only_in_ckpt():
     assert not offenders, offenders
 
 
+def test_no_package_walk_jvm_lookups():
+    """``spark._jvm.org.apache...`` resolves one package segment per py4j
+    round trip, each a failed class lookup; JVM classes are reached
+    through ``session.jclass``, a direct handle.  Applies to every
+    module, _ckpt.py included."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            offenders += [
+                f"{os.path.relpath(path, PKG)}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "_jvm"
+                and node.attr[:1].islower()
+            ]
+    assert not offenders, offenders
+
+
 def test_driver_collects_name_their_bound():
     """Every ``.collect()`` / ``.toPandas()`` outside _ckpt.py carries a
     ``# bounded:`` comment naming its bound, on the call's line or in the

@@ -69,6 +69,35 @@ def test_knn_matches_the_per_pair_form(spark):
     queries = v.where("vec_id < 5")
     got = sim.knn_cosine_bruteforce(queries, v, k=len(VECS)).collect()
     want = _per_pair_knn(queries, v, k=len(VECS)).collect()
-    # compared as reprs, so NaN (the zero vector against the overflowing
-    # norm: 0 · inf) equals NaN
     assert sorted(map(repr, got)) == sorted(map(repr, want))
+
+
+def test_zero_against_overflowing_norm_is_null_and_ranks_last(spark):
+    """``0 · inf`` is NaN, and Spark orders NaN above every number, so a
+    bare ``denom > 0`` gate let the pair through and rank first; the
+    finite positive gate makes it NULL, which sorts last under ``desc``."""
+    v = spark.createDataFrame(
+        [(0, [1e154, 1e154, 1.0]), (1, [1.0, 2.0, 3.0]), (2, [0.0, 0.0, 0.0]),
+         (3, [3.0, 2.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    a = v.select(F.col("vec_id").alias("qi"), F.col("embedding").alias("a"),
+                 sim._dot(F.col("embedding"), F.col("embedding")).alias("a_n2"))
+    b = v.select(F.col("vec_id").alias("ci"), F.col("embedding").alias("b"),
+                 sim._dot(F.col("embedding"), F.col("embedding")).alias("b_n2"))
+    pairs = b.crossJoin(a).where("qi != ci")
+    for form in (
+        sim.cosine(F.col("a"), F.col("b")),
+        sim._cosine_from_norms(F.col("a"), F.col("b"), F.col("a_n2"), F.col("b_n2")),
+    ):
+        ranked = pairs.select("qi", "ci", form.alias("cos")).orderBy(
+            F.desc("cos"), "qi", "ci").collect()
+        cos = {(r.qi, r.ci): r.cos for r in ranked}
+        assert cos[(0, 2)] is None and cos[(2, 0)] is None
+        # finite inputs keep their doubles: 1·3 + 2·2 + 3·1 over 14
+        assert cos[(1, 3)] == 10 / 14
+        order = [(r.qi, r.ci) for r in ranked]
+        assert order.index((0, 2)) > order.index((1, 3))
+        assert all(r.cos is None for r in ranked[order.index((0, 2)):])
+    knn = sim.knn_cosine_bruteforce(v.where("vec_id = 0"), v.where("vec_id < 3"), k=5)
+    assert [(r.neighbor_id, r.cos_sim, r.rk) for r in knn.orderBy("rk").collect()] == [
+        (1, None, 1), (2, None, 2)]

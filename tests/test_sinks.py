@@ -1,8 +1,10 @@
 """``sinks/write.py::write_table`` with ``compat_casts=True``: the range
 guard rides in the write job, a value that does not fit falls back to
 ``compat_cast_for_write``, and a bad format is rejected before any job.
-Also the conf scoping of the memory-sink drains' start helper."""
+Also the conf scoping of the memory-sink drains' start helper, and the
+file count of a drained stream's write."""
 
+import os
 from types import SimpleNamespace
 
 import pandas as pd
@@ -162,3 +164,19 @@ def test_drain_checkpoint_manager_class_loads(spark):
     # before Spark 4.1 the class sat in the streaming package itself
     assert st._fs_checkpoint_manager(SimpleNamespace(version="4.0.1")) == (
         "org.apache.spark.sql.execution.streaming.FileSystemBasedCheckpointFileManager")
+
+
+def test_stream_window_counts_writes_one_part_file(spark, sf_dir, tmp_path):
+    """The drained stream's result is one partition, so its compat-cast
+    write leaves one part file; the rows read back unchanged."""
+    import __spark_entry__ as entry
+
+    sf0_01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    df = entry.q_stream_window_counts(spark, sf0_01)
+    W.write_table(df, str(tmp_path), "w", overwrite=True, compat_casts=True)
+    out = tmp_path / "w.parquet"
+    parts = [p.name for p in out.iterdir() if p.name.startswith("part-")]
+    assert len(parts) == 1, parts
+    back = read_parquet(spark, str(out))
+    assert sorted(back.collect(), key=repr) == sorted(
+        _guarded_compat_cast(df).collect(), key=repr)

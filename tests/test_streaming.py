@@ -1,7 +1,8 @@
 """The streaming drains in ``streaming/stream.py``: the state width each
 bounded drain derives from its source (``_ckpt.stream_state_width``), the
-rows it yields at any width, and the timeout of the continuous-trigger
-drain."""
+width of the result it returns (``_ckpt.coalesce_to_bytes``), the rows it
+yields at any width, the timeout of the continuous-trigger drain, and the
+footer schema of the events stream."""
 
 import os
 import uuid
@@ -9,6 +10,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from smartpy_arc_spark.operators import _ckpt
 from smartpy_arc_spark.operators._ckpt import stream_state_width
 from smartpy_arc_spark.streaming import stream as st
 
@@ -48,7 +50,7 @@ def test_sf0_01_events_drain_runs_at_width_1(spark, sf0_01):
     q.awaitTermination()
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
     assert st.last_drain_widths[name] == {
-        "width": 1, "source_bytes": _events_bytes(sf0_01)}
+        "width": 1, "source_bytes": _events_bytes(sf0_01), "result_width": None}
     ops = q.lastProgress["stateOperators"]
     assert [o["numShufflePartitions"] for o in ops] == [1]
     assert spark.table(name).count() > 0
@@ -86,7 +88,8 @@ def test_until_idle_raises_on_timeout(spark):
     name = f"rate_{uuid.uuid4().hex[:8]}"
     with pytest.raises(TimeoutError, match=name):
         st.run_stream_until_idle(agg, name=name, timeout_sec=2)
-    assert st.last_drain_widths[name] == {"width": 8, "source_bytes": None}
+    assert st.last_drain_widths[name] == {
+        "width": 8, "source_bytes": None, "result_width": None}
 
 
 def _windowed(events):
@@ -174,3 +177,85 @@ def test_until_idle_timeout_leaves_no_view(spark):
     with pytest.raises(TimeoutError):
         st.run_stream_until_idle(rate.groupBy().count(), name=name, timeout_sec=1)
     assert name not in _views(spark)
+
+
+@pytest.fixture
+def sink_frames(monkeypatch):
+    """The frames the drains hand to ``coalesce_to_bytes``: each drain's
+    memory-sink frame as the drain returned it before it was sized."""
+    seen = []
+
+    def spy(df):
+        seen.append(df)
+        return _ckpt.coalesce_to_bytes(df)
+
+    monkeypatch.setattr(st, "coalesce_to_bytes", spy)
+    return seen
+
+
+def test_sf0_01_window_drain_returns_one_partition(spark, sf0_01, sink_frames):
+    """3,385 rows of window counts: the sink plans them in
+    min(rows, defaultParallelism) partitions; the drain returns one, with
+    the same rows in the same order."""
+    name = f"r_{uuid.uuid4().hex[:8]}"
+    out = st.run_stream_to_memory(
+        st.windowed_event_counts(st.read_events_stream(spark, sf0_01)), name=name)
+    (sink,) = sink_frames
+    assert out.rdd.getNumPartitions() == 1
+    assert sink.rdd.getNumPartitions() == min(
+        sink.count(), spark.sparkContext.defaultParallelism)
+    assert st.last_drain_widths[name]["result_width"] == 1
+    rows = out.collect()
+    assert rows and rows == sink.collect()
+
+
+def test_result_width_grows_with_bytes_up_to_the_sink(spark, sf_dir, advisory, sink_frames):
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    widths = []
+    for size in ("64MB", "8KB", "1KB", "1b"):
+        advisory(size)
+        name = f"g_{uuid.uuid4().hex[:8]}"
+        out = st.run_stream_to_memory(
+            st.windowed_event_counts(st.read_events_stream(spark, sf_dir)), name=name)
+        sink = sink_frames[-1]
+        width = st.last_drain_widths[name]["result_width"]
+        # the sink's rows times their width, through the state-width rule
+        assert width == _ckpt.bytes_width(spark, _ckpt.leaf_input_bytes(sink))
+        assert out.rdd.getNumPartitions() == min(width, sink.rdd.getNumPartitions())
+        assert out.collect() == sink.collect()
+        widths.append(width)
+    assert widths == sorted(widths) and widths[0] == 1 and widths[-1] == cap
+
+
+def test_until_idle_sizes_the_result_after_stop(spark):
+    from smartpy_arc_spark.sources.seqgen import register_seqgen
+
+    register_seqgen(spark)
+    gen = (
+        spark.readStream.format("seqgen")
+        .option("n_total", 200).option("rows_per_batch", 100)
+        .option("n_users", 10).load()
+    )
+    name = f"idle_{uuid.uuid4().hex[:8]}"
+    out = st.run_stream_until_idle(
+        gen.groupBy("user_id").agg(F.count("*").alias("n")), name=name)
+    assert st.last_drain_widths[name]["result_width"] == 1
+    assert out.rdd.getNumPartitions() == 1
+    assert sum(r.n for r in out.collect()) == 200
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01"])
+def test_events_stream_schema_is_the_batch_reads(spark, sf_dir, scale):
+    """The footer schema handed to ``readStream`` gives the stream the
+    schema it had when a batch read of the file supplied it."""
+    from smartpy_arc_spark.sources.scan import normalize_event_time, read_parquet
+
+    d = os.path.join(os.path.dirname(sf_dir), scale)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = (
+        spark.readStream.schema(read_parquet(spark, f"{d}/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(d)
+    )
+    want = raw.withColumn("ts", normalize_event_time(raw, "ts"))
+    assert st.read_events_stream(spark, d).schema.json() == want.schema.json()

@@ -27,12 +27,17 @@ split four ways:
 A Python process that has exited counts towards the process that reaped
 it (the daemon reaps its workers).
 
+``build_s`` is the part of that CPU, summed over all four, that a call
+spends inside the query function, apart from the sink's run: building
+the DataFrame, plus any jobs the function runs eagerly while it builds
+(the ``mst`` driver loop, the streaming drains).
+
 ``jobs`` counts the Spark jobs a call submits, streaming ones included.
 The session runs as ``perfbench/run.py`` runs it: local[nproc], a 1 GB
 driver heap and a C1-only JVM.  Each query's medians are printed as a
 line to stderr; the last stdout line is one JSON object
-``{query: {"driver_s", "jvm_s", "helpers_s", "workers_s", "jobs",
-"wall_s"}}``.
+``{query: {"driver_s", "jvm_s", "helpers_s", "workers_s", "build_s",
+"jobs", "wall_s"}}``.
 """
 
 from __future__ import annotations
@@ -131,12 +136,16 @@ def main(argv: list[str] | None = None) -> int:
     pid = os.getpid()
     out_dir = os.path.join(work, "out")
 
-    def call(name: str) -> None:
+    def call(name: str) -> float:
+        """Run one call; return the CPU seconds spent building its frame."""
+        b0 = sum(cpu_split(pid).values())
         df = qs[name](spark, data_dir)
+        build_s = sum(cpu_split(pid).values()) - b0
         if args.sink == "parquet":
             write_table(df, out_dir, name, overwrite=True, compat_casts=True)
             df = scan(spark, out_dir, name)
         df.write.format("noop").mode("overwrite").save()
+        return build_s
 
     out = {}
     try:
@@ -144,12 +153,13 @@ def main(argv: list[str] | None = None) -> int:
             samples = []
             for i in range(WARMUP_CALLS + args.calls):
                 c0, j0, t0 = cpu_split(pid), dag.numTotalJobs(), time.perf_counter()
-                call(name)
+                build_s = call(name)
                 wall_s, jobs = time.perf_counter() - t0, dag.numTotalJobs() - j0
                 c1 = cpu_split(pid)
                 if i >= WARMUP_CALLS:
                     samples.append({**{k: c1[k] - c0[k] for k in c0},
-                                    "jobs": jobs, "wall_s": wall_s})
+                                    "build_s": build_s, "jobs": jobs,
+                                    "wall_s": wall_s})
             out[name] = {k: round(statistics.median(s[k] for s in samples), 3)
                          for k in samples[0]}
             print(f"{name}: {out[name]}", file=sys.stderr, flush=True)

@@ -21,7 +21,10 @@ design and recorded for visibility, not gated.
 
 Next to the batch counts, ``state`` maps each query to the stateful
 shuffle width its drain chose and the source bytes behind it
-(``source_bytes`` null for an unsized source, which keeps width 8).
+(``source_bytes`` null for an unsized source, which keeps width 8),
+with ``result_width`` beside them: the partition count of the result
+the drain returned (``_ckpt.coalesce_to_bytes``; null where the result
+is unsized).
 
 Usage: python tools/stream_batches.py [sf_dir] [query ...]
 """
