@@ -75,7 +75,9 @@ drains ran at before they were sized.  A drain's result is sized by the
 same rule (:func:`coalesce_to_bytes`): the memory sink's frame plans as a
 local table scan cut into ``min(rows, defaultParallelism)`` partitions,
 so a few thousand rows would otherwise be written as that many files and
-read back by that many tasks.
+read back by that many tasks.  The Borůvka finish's driver-built forest
+goes through the same rule: up to the driver-collect cap its rows fit one
+partition, so a caller's sort of it needs no exchange.
 
 **Driver collects.**  A frame whose row count the caller cannot bound by
 construction is collected through :func:`collect_if_fits`: one

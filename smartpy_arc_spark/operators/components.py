@@ -18,7 +18,7 @@ is bounded by construction: ``minimum_spanning_forest`` probes each
 Borůvka round's remaining edges with ``_ckpt.collect_if_fits`` and, once
 they fit (≤ ``COLLECT_ROW_CAP`` = 2^16 rows, ~2.6 MB), finishes the forest
 with Kruskal on the driver instead of paying ~15 jobs per further round;
-the picked edges return as an Arrow-built DataFrame.
+the picked edges return as an Arrow-built DataFrame of one partition.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smartpy_arc_spark.operators._ckpt import (
+    coalesce_to_bytes,
     collect_if_fits,
     sized_local_checkpoint,
 )
@@ -1340,7 +1341,18 @@ def minimum_spanning_forest(
     come back through Arrow (``createDataFrame`` of a pandas frame), so
     no Python worker starts.  Round 1's labels are the identity, so it
     probes without a label join, and an empty probe ends the loop
-    without a trailing empty round.
+    without a trailing empty round.  The picked edges are a local
+    relation of a few bytes per edge, so ``coalesce_to_bytes`` returns
+    them as one partition (2 MB at the cap), and a caller's sort of the
+    forest needs no range-partition sample or exchange.
+
+    Round 1 probes the edge pipeline before anything is pinned, so a
+    graph that finishes on the driver runs the pipeline once, in the
+    probe, and leaves no pinned RDD behind.  Only a graph whose probe
+    fails pins its deduplicated edges (``sized_local_checkpoint``), and
+    every distributed round reads the pin.  The price: such a graph
+    evaluates its edge pipeline twice, once for the failed probe and
+    once for the pin, where pinning first evaluated it once.
 
     A distributed round is key-partitioned: per-component ``min_by``
     aggregates, hash joins against the (checkpointed) component labels,
@@ -1359,7 +1371,6 @@ def minimum_spanning_forest(
         .groupBy("s", "d")
         .agg(F.min("w").alias("w"))
     )
-    e = sized_local_checkpoint(e)
     comp = None  # (node, c) labels, built once a distributed round runs
     forest = None
     rest: list[tuple[int, int, int]] = []
@@ -1385,6 +1396,12 @@ def minimum_spanning_forest(
             rest = _kruskal_finish(probe)
             break
         if comp is None:
+            # the first distributed round: pin the edges every later
+            # round re-reads, and read this round's from the pin
+            e = sized_local_checkpoint(e)
+            annotated = e.select(
+                "w", "s", "d", F.col("s").alias("cs"), F.col("d").alias("cd")
+            )
             comp = (
                 e.select(F.col("s").alias("node"))
                 .union(e.select(F.col("d").alias("node")))
@@ -1489,9 +1506,11 @@ def minimum_spanning_forest(
     if rest:
         import pandas as pd
 
-        local = e.sparkSession.createDataFrame(
-            pd.DataFrame(rest, columns=["s", "d", "w"], dtype="Int64"),
-            "s long, d long, w long",
+        local, _ = coalesce_to_bytes(
+            e.sparkSession.createDataFrame(
+                pd.DataFrame(rest, columns=["s", "d", "w"], dtype="Int64"),
+                "s long, d long, w long",
+            )
         )
         out = local if out is None else out.unionByName(local)
     if out is None:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from smartpy_arc_spark.operators import _ckpt
 from smartpy_arc_spark.sources.scan import read_parquet
+from smartpy_arc_spark.sqltext import lit_map
 
 
 def salted_join(
@@ -594,12 +595,11 @@ def distributed_exact_percentiles(
         ])
 
     # groups are numbered on the driver; every other literal map keys on
-    # the number, so it is built from one SQL string (_lit_lookup)
+    # the number, so it is built from one SQL string (_lit_lookup), and
+    # so is the number map itself, for the key types SQL text renders
     groups = list(dict.fromkeys(r["__g"] for r in hist0))
     gid = {g: i for i, g in enumerate(groups)}
-    gcol = F.create_map(
-        *[x for g, i in gid.items() for x in (F.lit(g), F.lit(i))]
-    )[F.col("__g")]
+    gcol = lit_map(list(gid.items()))[F.col("__g")]
     segs: dict[tuple, dict[int, int]] = {}  # (gid, wc) -> bucket -> rows
     for r in hist0:
         if r["__b"] is not None:  # NULL values only mark group presence

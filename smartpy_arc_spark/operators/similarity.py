@@ -39,12 +39,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from smartpy_arc_spark.operators import _ckpt
+from smartpy_arc_spark.sqltext import ident, literal, select_sql
 
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """:func:`_dot` of the SQL expressions ``a`` and ``b``, as SQL text:
+    the same fold, element products summed from 0.0."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
 def _oversized(what: str) -> ValueError:
@@ -194,37 +201,41 @@ def knn_cosine_bruteforce(
 
     Each vector's squared norm is folded once, on its own side of the
     join; a pair folds only its dot product.  The cosine is the same
-    double as :func:`cosine` gives: the same float ops in the same order
-    (``_cosine_from_norms``).
+    double as :func:`cosine` gives: the same float ops in the same order.
+
+    The projections are SQL text (``sqltext.select_sql``): the casts, the
+    squared norms, the gated cosine, the ``row_number()`` window and the
+    rounding, each dot product rendered by :func:`_dot_sql`.  Built
+    from ``F.*`` Columns the same plan took about 700 py4j round trips on
+    the driver; as text it takes about 40.  Its optimized plan is the
+    Column form's (:func:`cosine`, ``_cosine_from_norms``) up to
+    expression ids and lambda variable names, which
+    ``tests/test_similarity.py`` pins with the rows bit for bit.
 
     Returns (query_id, neighbor_id, cos_sim rounded to 6, rk).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    ).withColumn("_qn2", _dot(F.col("_qv"), F.col("_qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-    ).withColumn("_cn2", _dot(F.col("_cv"), F.col("_cv")))
-    pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        _cosine_from_norms(
-            F.col("_qv"), F.col("_cv"), F.col("_qn2"), F.col("_cn2")
-        ).alias("_cos"),
+    vec, qn2, cn2 = ident(vec_col), _dot_sql("_qv", "_qv"), _dot_sql("_cv", "_cv")
+    q = select_sql(queries, [
+        f"{ident(id_col)} AS query_id", f"CAST({vec} AS ARRAY<DOUBLE>) AS _qv"])
+    q = select_sql(q, ["query_id", "_qv", f"{qn2} AS _qn2"])
+    c = select_sql(corpus, [
+        f"{ident(id_col)} AS neighbor_id", f"CAST({vec} AS ARRAY<DOUBLE>) AS _cv"])
+    c = select_sql(c, ["neighbor_id", "_cv", f"{cn2} AS _cn2"])
+    pairs = c.join(F.broadcast(q), F.expr("neighbor_id != query_id"))
+    denom = "SQRT(_qn2 * _cn2)"
+    # NaN > 0 holds in Spark's ordering; NaN < inf does not
+    cos = (
+        f"CASE WHEN ({denom} > 0) AND ({denom} < {literal(float('inf'))}) "
+        f"THEN {_dot_sql('_qv', '_cv')} / {denom} END"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_cos"), 6).alias("cos_sim"),
-            "rk",
-        )
+    scored = select_sql(pairs, ["query_id", "neighbor_id", f"{cos} AS _cos"])
+    ranked = select_sql(scored, [
+        "query_id", "neighbor_id", "_cos",
+        "row_number() OVER (PARTITION BY query_id "
+        "ORDER BY _cos DESC, neighbor_id ASC) AS rk",
+    ]).where(f"rk <= {int(k)}")
+    return select_sql(
+        ranked, ["query_id", "neighbor_id", "round(_cos, 6) AS cos_sim", "rk"]
     )
 
 

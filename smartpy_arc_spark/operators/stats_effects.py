@@ -12,9 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
 
 from smartpy_arc_spark.operators import _ckpt
 from smartpy_arc_spark.operators.stats_tests import mann_whitney_u
+from smartpy_arc_spark.sqltext import lit_map
 
 # cumulative Poisson(1) thresholds; LITERALS shared with the SQL oracle so
 # both engines parse the identical doubles
@@ -164,21 +166,10 @@ def conformal_interval(
             f"collected to the driver"
         )
     n_train = sum(r["c"] for r in train_rows)
-    kv_c = [
-        x
-        for r in train_rows
-        if r["g"] is not None
-        for x in (F.lit(r["g"]), F.lit(int(r["c"])).cast("long"))
-    ]
-    kv_s = [
-        x
-        for r in train_rows
-        if r["g"] is not None
-        for x in (F.lit(r["g"]), F.lit(int(r["s"])).cast("long"))
-    ]
-    if kv_c:
-        cc = F.create_map(*kv_c)[F.col("g")]
-        ss = F.create_map(*kv_s)[F.col("g")]
+    keyed = [r for r in train_rows if r["g"] is not None]
+    if keyed:
+        cc = lit_map([(r["g"], int(r["c"])) for r in keyed], T.LongType())[F.col("g")]
+        ss = lit_map([(r["g"], int(r["s"])) for r in keyed], T.LongType())[F.col("g")]
     else:
         cc = F.lit(None).cast("long")
         ss = F.lit(None).cast("long")

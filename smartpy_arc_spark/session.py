@@ -29,6 +29,19 @@ def get_spark(
     UTC session timezone so timestamps compare bit-for-bit with external
     oracles, and shuffle partitions sized to the parallelism actually
     available rather than the stock 200.
+
+    The generated-code cache holds 1000 classes instead of the stock 100.
+    ``CodeGenerator`` keeps compiled classes in a Guava cache of
+    ``spark.sql.codegen.cache.maxEntries`` split into 4 segments, each
+    evicting on its own, and a class's segment follows a hash that
+    includes the identity hash of its class loader, so it changes from one
+    JVM to the next.  One pass over the ``curate_iterate`` benchmark
+    queries compiles about 70 classes: at 25 per segment most JVMs
+    overflow a segment and then recompile up to about 20 classes on
+    every warm pass (4 vCPUs, Spark 4.1.2); at 250 per segment the
+    working set stays compiled.  It is a static conf, read once per JVM
+    when the first class compiles, so it applies only when this call
+    creates the session.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
@@ -60,6 +73,7 @@ def get_spark(
         # COUNT/MIN/MAX over plain parquet answer from footer statistics
         # instead of scanning row groups (no filters involved → safe)
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # NOTE on spark.sql.files.minPartitionNum: measured at sf0.1 it
         # HURTS (13.0s -> 20.1s headline total): the floor slices every
         # small file into `cpus` splits, paying per-task overhead on KB

@@ -10,6 +10,8 @@ per column instead and hands the whole projection to the JVM at once
 (:func:`select_sql`), so building it costs the same few round trips
 whatever the column count.  The expressions are written to analyze to
 the same plan as their Column forms (``DataFrame.sameSemantics``).
+Per-group literal maps are built the same way (:func:`lit_map`): one
+``map(...)`` expression instead of one ``F.lit`` pair per group.
 
 String literals are rendered with backslash escapes, the default SQL
 parser's string syntax (``spark.sql.parser.escapedStringLiterals`` off).
@@ -21,7 +23,8 @@ import datetime
 import math
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smartpy_arc_spark.session import jclass
@@ -68,6 +71,32 @@ def literal(value, to: T.DataType | None = None) -> str:
     else:
         raise TypeError(f"no SQL literal for {type(value).__name__} {value!r}")
     return text if to is None else f"CAST({text} AS {to.simpleString()})"
+
+
+def _renders_as_lit(value) -> bool:
+    """Whether :func:`literal` gives ``value`` the type and value
+    ``F.lit`` gives it.  A datetime does not: ``F.lit`` converts it in the
+    Python process's time zone, the SQL text in the session's."""
+    if isinstance(value, datetime.datetime):
+        return False
+    return isinstance(value, (bool, int, float, str, datetime.date))
+
+
+def lit_map(pairs: list[tuple], to: T.DataType | None = None) -> Column:
+    """``F.create_map(F.lit(k), F.lit(v)[.cast(to)], ...)`` over ``pairs``
+    as one ``F.expr`` of SQL ``map(...)`` text: a few py4j round trips
+    whatever the pair count, where the ``F.lit`` form makes several per
+    pair.  When a key or value is of a type :func:`literal` cannot render
+    as ``F.lit`` types it (a datetime, a decimal, bytes), the map is built
+    in the ``F.lit`` form."""
+    if all(_renders_as_lit(k) and _renders_as_lit(v) for k, v in pairs):
+        return F.expr(
+            "map(" + ", ".join(f"{literal(k)}, {literal(v, to)}" for k, v in pairs) + ")"
+        )
+    return F.create_map(*[
+        x for k, v in pairs
+        for x in (F.lit(k), F.lit(v) if to is None else F.lit(v).cast(to))
+    ])
 
 
 def select_sql(df: DataFrame, exprs: list[str]) -> DataFrame:

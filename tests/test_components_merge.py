@@ -2,6 +2,7 @@
 forest and MERGE/SCD2 emulation."""
 
 import datetime as dt
+import os
 import random
 
 import pytest
@@ -184,6 +185,32 @@ def test_mst_chain_job_count(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = set(tracker.getJobIdsForGroup()) - before
     assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
+def test_mst_local_path_probes_first_and_returns_one_partition(spark, sf_dir):
+    """The sf0.01 ``mst`` query's edges fit the driver cap, so round 1's
+    probe is the only run of its edge pipeline: nothing is pinned, and
+    the driver finish comes back as one partition, which ``q_mst``'s sort
+    reads without a range-partition sample or an exchange.  Pinning the
+    edges first and returning the finish as 4 partitions ran 7 jobs."""
+    import __spark_entry__ as entry
+
+    sf0_01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pinned = set(sc._jsc.getPersistentRDDs().keySet())
+    before = set(tracker.getJobIdsForGroup())
+    rows = entry.q_mst(spark, sf0_01).collect()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert rows and 0 < len(jobs) <= 4, sorted(jobs)
+    assert not set(sc._jsc.getPersistentRDDs().keySet()) - pinned
+
+    edges = [(i, i + 1, 100 + i) for i in range(48)]
+    forest = minimum_spanning_forest(
+        spark.createDataFrame(edges, "s long, d long, w long"))
+    assert forest.rdd.getNumPartitions() == 1
+    assert sorted(tuple(r) for r in forest.collect()) == edges
 
 
 def test_merge_upsert_semantics(spark):

@@ -1,6 +1,7 @@
-"""The zip re-read gate that ``smartpy_arc_spark.session`` installs on
-package import: ``importlib.invalidate_caches()`` re-reads an archive's
-directory only when the archive changed on disk."""
+"""The session's engine settings and the zip re-read gate that
+``smartpy_arc_spark.session`` installs on package import:
+``importlib.invalidate_caches()`` re-reads an archive's directory only
+when the archive changed on disk."""
 
 import importlib
 import json
@@ -125,3 +126,21 @@ def test_gate_covers_a_reused_spark_worker(spark):
         pytest.fail(f"no Python worker was reused over {len(seen)} tasks")
     assert info["started_gated"]
     assert "pyspark.zip" in info["stamped"]
+
+
+def test_codegen_cache_keeps_a_working_set_of_150_classes(spark):
+    """Spark's stock cache holds 100 generated classes in 4 segments of
+    25: after 150 other classes the first frame's are evicted and a rerun
+    compiles them again.  ``get_spark`` sizes the cache to 1000."""
+    compiled = session.jclass(
+        spark, "org.apache.spark.metrics.source.CodegenMetrics"
+    ).METRIC_COMPILATION_TIME()
+    first = spark.range(3).selectExpr("id * 7919 + 104729 AS v")
+    first.collect()
+    n0 = compiled.getCount()
+    for i in range(75):  # a Range + Project stage and its result projection
+        spark.range(3).selectExpr(f"id * {i + 7920} + {i * 1000 + 104730} AS v").collect()
+    n1 = compiled.getCount()
+    assert n1 - n0 >= 150
+    first.collect()
+    assert compiled.getCount() == n1

@@ -1,9 +1,13 @@
 """``operators/similarity.py::knn_cosine_bruteforce`` folds each vector's
 squared norm once, on its own side of the join: its cosines are the same
-doubles as the per-pair ``cosine()`` form, on the edge cases too."""
+doubles as the per-pair ``cosine()`` form, on the edge cases too.  It is
+built from SQL text, with the plan and rows of its ``F.*`` Column form."""
 
+import re
 import struct
+import threading
 
+from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -38,6 +42,76 @@ def _per_pair_knn(queries, corpus, k):
             .select("query_id", "neighbor_id", F.round("_cos", 6).alias("cos_sim"), "rk"))
 
 
+def _staged_column_knn(queries, corpus, k):
+    """The Column form of the SQL-text body: ``_dot`` norms on each side,
+    ``_cosine_from_norms`` per pair."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
+    ).withColumn("_qn2", sim._dot(F.col("_qv"), F.col("_qv")))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("_cv"),
+    ).withColumn("_cn2", sim._dot(F.col("_cv"), F.col("_cv")))
+    pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    scored = pairs.select("query_id", "neighbor_id", sim._cosine_from_norms(
+        F.col("_qv"), F.col("_cv"), F.col("_qn2"), F.col("_cn2")).alias("_cos"))
+    w = W.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
+    return (scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+            .select("query_id", "neighbor_id", F.round(F.col("_cos"), 6).alias("cos_sim"),
+                    "rk"))
+
+
+def _normalised_plan(df):
+    """The optimized plan with lambda variable names blanked and
+    expression ids renumbered in order of appearance: pyspark names a
+    Column lambda's variables from a global counter (``x_1``, ``y_2``),
+    SQL text by the names written."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = re.sub(r"lambda \w+#", "lambda #", text)
+    ids: dict = {}
+    return re.sub(r"#(\d+)", lambda m: f"#{ids.setdefault(m[1], len(ids))}", text)
+
+
+def _bits(x):  # NULL stays None; any last-bit change shows
+    return None if x is None else struct.pack("<d", x)
+
+
+def test_sql_text_knn_has_the_column_forms_plan_and_rows(spark):
+    v = _vectors(spark)
+    queries = v.where("vec_id < 7")
+    got = sim.knn_cosine_bruteforce(queries, v, k=len(VECS))
+    want = _staged_column_knn(queries, v, len(VECS))
+    assert _normalised_plan(got) == _normalised_plan(want)
+    assert got.schema == want.schema
+
+    def rows(df):
+        return sorted((r.query_id, r.rk, r.neighbor_id, _bits(r.cos_sim))
+                      for r in df.collect())
+
+    assert rows(got) == rows(want)
+
+
+def test_knn_builds_in_few_py4j_commands(spark, monkeypatch):
+    """About 750 commands as ``F.*`` Columns; the SQL text takes under
+    150.  Commands sent from a finalizer thread are not counted."""
+    v = _vectors(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    me, calls, send = threading.get_ident(), [], client.send_command
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        sim.knn_cosine_bruteforce(v, v, k=5)
+    finally:
+        monkeypatch.undo()
+    assert 0 < len(calls) < 150, len(calls)
+
+
 def test_staged_norms_give_the_per_pair_doubles(spark):
     v = _vectors(spark)
     q = v.select(F.col("vec_id").alias("qi"), F.col("embedding").alias("a"))
@@ -51,13 +125,9 @@ def test_staged_norms_give_the_per_pair_doubles(spark):
                                F.col("b_n2")).alias("staged"),
     ).collect()
     assert len(rows) == len(VECS) ** 2
-
-    def bits(x):  # NULL stays None; any last-bit change shows
-        return None if x is None else struct.pack("<d", x)
-
-    assert all(bits(r.staged) == bits(r.per_pair) for r in rows), [
+    assert all(_bits(r.staged) == _bits(r.per_pair) for r in rows), [
         (r.qi, r.ci, r.staged, r.per_pair) for r in rows
-        if bits(r.staged) != bits(r.per_pair)]
+        if _bits(r.staged) != _bits(r.per_pair)]
     nulls = {(r.qi, r.ci) for r in rows if r.staged is None}
     # zero norm, a NULL element, mismatched lengths, a NULL vector
     assert {(2, 0), (3, 0), (4, 0), (7, 0)} <= nulls

@@ -33,11 +33,14 @@ the DataFrame, plus any jobs the function runs eagerly while it builds
 (the ``mst`` driver loop, the streaming drains).
 
 ``jobs`` counts the Spark jobs a call submits, streaming ones included.
+``compiles`` counts the classes Spark's code generator compiles during a
+call (``CodegenMetrics``' compilation-time histogram): the classes its
+cache did not hold, for the query and its sink alike.
 The session runs as ``perfbench/run.py`` runs it: local[nproc], a 1 GB
 driver heap and a C1-only JVM.  Each query's medians are printed as a
 line to stderr; the last stdout line is one JSON object
 ``{query: {"driver_s", "jvm_s", "helpers_s", "workers_s", "build_s",
-"jobs", "wall_s"}}``.
+"jobs", "compiles", "wall_s"}}``.
 """
 
 from __future__ import annotations
@@ -116,6 +119,7 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, ROOT)
     import __spark_entry__ as contract
     from smartpy_arc_spark import get_spark
+    from smartpy_arc_spark.session import jclass
     from smartpy_arc_spark.sinks.write import write_table
     from smartpy_arc_spark.sources.scan import scan
 
@@ -133,6 +137,9 @@ def main(argv: list[str] | None = None) -> int:
         },
     )
     dag = spark.sparkContext._jsc.sc().dagScheduler()
+    compiled = jclass(
+        spark, "org.apache.spark.metrics.source.CodegenMetrics"
+    ).METRIC_COMPILATION_TIME()
     pid = os.getpid()
     out_dir = os.path.join(work, "out")
 
@@ -152,6 +159,7 @@ def main(argv: list[str] | None = None) -> int:
         for name in args.queries:
             samples = []
             for i in range(WARMUP_CALLS + args.calls):
+                k0 = compiled.getCount()
                 c0, j0, t0 = cpu_split(pid), dag.numTotalJobs(), time.perf_counter()
                 build_s = call(name)
                 wall_s, jobs = time.perf_counter() - t0, dag.numTotalJobs() - j0
@@ -159,6 +167,7 @@ def main(argv: list[str] | None = None) -> int:
                 if i >= WARMUP_CALLS:
                     samples.append({**{k: c1[k] - c0[k] for k in c0},
                                     "build_s": build_s, "jobs": jobs,
+                                    "compiles": compiled.getCount() - k0,
                                     "wall_s": wall_s})
             out[name] = {k: round(statistics.median(s[k] for s in samples), 3)
                          for k in samples[0]}
