@@ -3,7 +3,10 @@
 Media travel as opaque ``binary`` columns plus typed metadata — the pattern
 for 100 TB multimodal training pipelines: Spark moves bytes + metadata,
 per-item decode happens in Arrow-batched Python workers near the data,
-never on the driver.
+never on the driver.  Every operator here except ``frame_sample`` (one
+input row → several frames) emits one row per item through
+``codecs._per_payload``, the shared boundary; a NULL payload yields its
+row with NULL outputs.
 
 Decode is REAL for every container with a pure-Python codec in this repo —
 JPEG (``jpeg.py``: Huffman+IDCT), PNG/BMP/WAV (``codecs.py``), GIF
@@ -23,16 +26,19 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IMAGE_META_SCHEMA = (
-    "item_id long, n_bytes int, width int, height int, format string"
+from smartpy_arc_spark.multimodal.codecs import (
+    _PNG_SIG,
+    _per_payload,
+    make_png,
+    parse_bmp,
+    parse_png,
 )
-
-FRAME_SCHEMA = "item_id long, frame_idx int, frame bytes_not_supported"  # doc only
 
 
 def attach_payload(df: DataFrame, src_col: str, payload_col: str = "payload") -> DataFrame:
@@ -42,14 +48,42 @@ def attach_payload(df: DataFrame, src_col: str, payload_col: str = "payload") ->
     return df.withColumn(payload_col, F.col(src_col).cast("binary"))
 
 
-def _stub_image_meta(item_id: int, payload: bytes) -> tuple:
+def _sniff_image(payload: bytes) -> tuple[str, np.ndarray] | None:
+    """Decode a still image by its magic bytes → ``(format, rgb)``, with
+    ``rgb`` an (h, w, 3) uint8 array (the first frame of a GIF; a
+    grayscale image repeated into three channels, an alpha channel
+    dropped).  JPEG (``FF D8``), PNG, BMP and GIF are recognized; an
+    unrecognized or corrupt payload returns None rather than raising
+    (corpus-scale decode must not die on one bad file)."""
+    from smartpy_arc_spark.multimodal.gif import parse_gif
+    from smartpy_arc_spark.multimodal.jpeg import parse_jpeg
+
+    try:
+        if payload[:2] == b"\xff\xd8":
+            fmt, img = "jpeg", parse_jpeg(payload)
+        elif payload[:8] == _PNG_SIG:
+            fmt, img = "png", parse_png(payload)
+        elif payload[:2] == b"BM":
+            fmt, img = "bmp", parse_bmp(payload)
+        elif payload[:4] == b"GIF8":
+            fmt, img = "gif", parse_gif(payload)[0]
+        else:
+            return None
+    except Exception:
+        return None
+    if img.shape[2] == 1:
+        img = np.repeat(img, 3, axis=2)
+    return fmt, img[:, :, :3]
+
+
+def _stub_image_meta(payload: bytes) -> tuple:
     """Deterministic fake decode: dimensions derived from payload length so
     an external oracle can recompute them arithmetically."""
     n = len(payload)
     width = n % 640
     height = (n * 7) % 480
     fmt = "png" if n % 2 == 0 else "jpeg"
-    return (item_id, n, width, height, fmt)
+    return (n, width, height, fmt)
 
 
 def decode_image_meta(
@@ -58,64 +92,33 @@ def decode_image_meta(
     id_col: str = "item_id",
     payload_col: str = "payload",
     stub: bool = True,
-    batch_hint: int | None = None,
 ) -> DataFrame:
-    """Per-item image decode → metadata rows via ``mapInPandas``.
-
-    The iterator-of-batches shape is the real contract: each Arrow batch is
-    decoded in-place on the executor, output schema is fixed
-    (``IMAGE_META_SCHEMA``), null payloads pass through as null metadata.
+    """Per-item image decode → metadata rows
+    ``(item_id, n_bytes, width, height, format)``, named ``item_id``
+    whatever ``id_col`` is; a NULL payload gives NULL metadata.
 
     ``stub=False`` runs the REAL pure-Python decoders (``codecs.py`` /
-    ``jpeg.py``): the container format is sniffed from magic bytes —
-    JPEG (``FF D8``), PNG, BMP — and width/height come from an actual
-    decode.  Unrecognized payloads yield ``format=NULL`` with null
-    dimensions rather than an error (corpus-scale decode must not die on
-    one bad file).  ``stub=True`` keeps the arithmetic fake whose output
-    an external oracle can recompute from the payload length alone.
+    ``jpeg.py`` / ``gif.py``): the container format is sniffed from magic
+    bytes — JPEG (``FF D8``), PNG, BMP, GIF — and width/height come from
+    an actual decode.  Unrecognized payloads yield ``format=NULL`` with
+    null dimensions (and their ``n_bytes``) rather than an error.
+    ``stub=True`` keeps the arithmetic fake whose output an external
+    oracle can recompute from the payload length alone.
     """
-    from smartpy_arc_spark.session import ensure_worker_imports
 
-    ensure_worker_imports(df.sparkSession)
+    def meta(b: bytes) -> tuple:
+        if stub:
+            return _stub_image_meta(b)
+        got = _sniff_image(b)
+        if got is None:
+            return (len(b), None, None, None)
+        fmt, img = got
+        return (len(b), img.shape[1], img.shape[0], fmt)
 
-    def real_meta(item_id: int, payload: bytes) -> tuple:
-        from smartpy_arc_spark.multimodal.codecs import parse_bmp, parse_png
-        from smartpy_arc_spark.multimodal.jpeg import parse_jpeg
-
-        try:
-            if payload[:2] == b"\xff\xd8":
-                img = parse_jpeg(payload)
-                return (item_id, len(payload), img.shape[1], img.shape[0], "jpeg")
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                img = parse_png(payload)
-                return (item_id, len(payload), img.shape[1], img.shape[0], "png")
-            if payload[:2] == b"BM":
-                img = parse_bmp(payload)
-                return (item_id, len(payload), img.shape[1], img.shape[0], "bmp")
-            if payload[:4] == b"GIF8":
-                from smartpy_arc_spark.multimodal.gif import parse_gif
-
-                img = parse_gif(payload)[0]
-                return (item_id, len(payload), img.shape[1], img.shape[0], "gif")
-        except Exception:
-            pass  # corrupt container: report unknown, keep the row
-        return (item_id, len(payload), None, None, None)
-
-    def decode(batches):
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    out.append((item_id, None, None, None, None))
-                elif stub:
-                    out.append(_stub_image_meta(int(item_id), bytes(payload)))
-                else:
-                    out.append(real_meta(int(item_id), bytes(payload)))
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_bytes", "width", "height", "format"]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(decode, IMAGE_META_SCHEMA)
+    return _per_payload(
+        df, id_col, payload_col,
+        "n_bytes int, width int, height int, format string", meta,
+    ).withColumnRenamed(id_col, "item_id")
 
 
 def frame_sample(
@@ -142,7 +145,6 @@ def frame_sample(
     ensure_worker_imports(df.sparkSession)
 
     def sample(batches):
-        from smartpy_arc_spark.multimodal.codecs import make_png
         from smartpy_arc_spark.multimodal.gif import parse_gif
 
         for pdf in batches:
@@ -195,9 +197,10 @@ def extract_features(
     normalize: bool = False,
     stub: bool = True,
 ) -> DataFrame:
-    """Embedding extraction stub: payload → fixed-``dim`` float vector via
-    ``mapInPandas`` (``array<float>`` output, the shape a CLIP/ResNet
-    encoder produces; feeds the similarity/ANN operators directly).
+    """Embedding extraction stub: payload → fixed-``dim`` float vector
+    ``(item_id, features)`` (``array<float>`` output, the shape a
+    CLIP/ResNet encoder produces; feeds the similarity/ANN operators
+    directly).
 
     The ``stub=True`` fake is arithmetic on payload length — ``v_j =
     ((n·P_j + Q_j) mod 1000) / 1000`` — so an external oracle can
@@ -210,35 +213,14 @@ def extract_features(
     Neural-model (CLIP/ResNet) extraction itself is out of scope here (no
     model runtime in this container); corpus-TRAINED text embeddings are
     real and live in ``operators/lsa.py`` (distributed LSA).
-    Unrecognized payloads yield null vectors.
+    NULL and unrecognized payloads yield null vectors.
     """
-    from smartpy_arc_spark.session import ensure_worker_imports
 
-    ensure_worker_imports(df.sparkSession)
-
-    def real_features(b: bytes):
-        import numpy as np
-
-        from smartpy_arc_spark.multimodal.codecs import parse_bmp, parse_png
-        from smartpy_arc_spark.multimodal.gif import parse_gif
-        from smartpy_arc_spark.multimodal.jpeg import parse_jpeg
-
-        try:
-            if b[:2] == b"\xff\xd8":
-                img = parse_jpeg(b)
-            elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                img = parse_png(b)
-            elif b[:2] == b"BM":
-                img = parse_bmp(b)
-            elif b[:4] == b"GIF8":
-                img = parse_gif(b)[0]
-            else:
-                return None
-        except Exception:
+    def real_features(b: bytes) -> list[float] | None:
+        got = _sniff_image(b)
+        if got is None:
             return None
-        if img.shape[2] == 1:
-            img = np.repeat(img, 3, axis=2)
-        f = img.astype(np.float64) / 255.0
+        f = got[1].astype(np.float64) / 255.0
         h, w, _ = f.shape
         lum = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
         hh, wh = max(h // 2, 1), max(w // 2, 1)
@@ -254,30 +236,20 @@ def extract_features(
         reps = (dim + len(feats) - 1) // len(feats)
         return [float(x) for x in (feats * reps)[:dim]]
 
-    def featurize(batches):
-        for pdf in batches:
-            ids, vecs = [], []
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(int(item_id))
-                if payload is None:
-                    vecs.append(None)
-                    continue
-                b = bytes(payload)
-                if stub:
-                    n = len(b)
-                    v = [((n * (2 * j + 3) + 7 * j) % 1000) / 1000.0
-                         for j in range(dim)]
-                else:
-                    v = real_features(b)
-                if v is not None and normalize:
-                    norm = sum(x * x for x in v) ** 0.5 or 1.0
-                    v = [x / norm for x in v]
-                vecs.append(v)
-            yield pd.DataFrame({"item_id": ids, "features": vecs})
+    def featurize(b: bytes) -> tuple:
+        if stub:
+            n = len(b)
+            v = [((n * (2 * j + 3) + 7 * j) % 1000) / 1000.0 for j in range(dim)]
+        else:
+            v = real_features(b)
+        if v is not None and normalize:
+            norm = sum(x * x for x in v) ** 0.5 or 1.0
+            v = [x / norm for x in v]
+        return (v,)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        featurize, "item_id long, features array<float>"
-    )
+    return _per_payload(
+        df, id_col, payload_col, "features array<float>", featurize
+    ).withColumnRenamed(id_col, "item_id")
 
 
 def resize_image(
@@ -289,63 +261,32 @@ def resize_image(
     height: int = 64,
     stub: bool = True,
 ) -> DataFrame:
-    """Image resize: payload → resized payload + output dims (binary in,
-    binary out, metadata updated — the in-place media-transform shape).
+    """Image resize: payload → resized payload + output dims
+    ``(item_id, payload, width, height)`` (binary in, binary out,
+    metadata updated — the in-place media-transform shape).
 
     ``stub=False`` (the real path): sniff the container (JPEG/PNG/BMP),
     decode with the pure-Python codecs, nearest-neighbor resample to
     ``width×height``, re-encode as PNG (lossless, so the output is a
-    deterministic function of the input bytes).  Unrecognized payloads
-    pass through as null.  ``stub=True`` keeps the legacy truncate/cycle
-    fake for the arithmetic-oracle queries."""
-    from smartpy_arc_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(df.sparkSession)
+    deterministic function of the input bytes).  NULL, GIF and
+    unrecognized payloads pass through as a null payload; every row
+    carries the target ``width``/``height``.  ``stub=True`` keeps the
+    legacy truncate/cycle fake for the arithmetic-oracle queries."""
     target = width * height
 
-    def resize(batches):
-        import numpy as np
+    def resize(b: bytes) -> tuple:
+        if stub:
+            reps = (target // max(len(b), 1)) + 1
+            return ((b * reps)[:target], width, height)
+        got = _sniff_image(b)
+        if got is None or got[0] == "gif":
+            return (None, width, height)
+        img = got[1]
+        ys = (np.arange(height) * img.shape[0]) // height
+        xs = (np.arange(width) * img.shape[1]) // width
+        return (make_png(img[ys][:, xs]), width, height)
 
-        from smartpy_arc_spark.multimodal.codecs import make_png, parse_bmp, parse_png
-        from smartpy_arc_spark.multimodal.jpeg import parse_jpeg
-
-        def real_resize(b: bytes) -> bytes | None:
-            try:
-                if b[:2] == b"\xff\xd8":
-                    img = parse_jpeg(b)
-                elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                    img = parse_png(b)
-                elif b[:2] == b"BM":
-                    img = parse_bmp(b)
-                else:
-                    return None
-            except Exception:
-                return None
-            if img.shape[2] == 1:
-                img = np.repeat(img, 3, axis=2)
-            h0, w0, _ = img.shape
-            ys = (np.arange(height) * h0) // height
-            xs = (np.arange(width) * w0) // width
-            return make_png(img[ys][:, xs])
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(int(item_id))
-                if payload is None:
-                    payloads.append(None)
-                    continue
-                b = bytes(payload)
-                if stub:
-                    reps = (target // max(len(b), 1)) + 1
-                    payloads.append((b * reps)[:target])
-                else:
-                    payloads.append(real_resize(b))
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": payloads,
-                 "width": [width] * len(ids), "height": [height] * len(ids)}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        resize, "item_id long, payload binary, width int, height int"
-    )
+    return _per_payload(
+        df, id_col, payload_col, "payload binary, width int, height int",
+        resize, null_row=(None, width, height),
+    ).withColumnRenamed(id_col, "item_id")

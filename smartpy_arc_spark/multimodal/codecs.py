@@ -1,14 +1,24 @@
-"""REAL media decoders for library-free formats: WAV (RIFF/PCM16) and
-BMP (uncompressed 24-bit).
+"""Library-free media codecs and the per-payload boundary every
+one-row-per-item media operator runs through.
 
-``multimodal/binary.py`` stubs the decode step for formats that need
-PIL/ffmpeg (absent from this environment, honestly marked).  These two
-containers, though, are plain ``struct`` layouts — so their decoders are
-fully REAL: header parsing, sample/pixel extraction, and per-item audio
-(RMS, peak, duration) / image (dimensions, mean channel) features, all
-numpy-vectorized inside ``mapInPandas`` Arrow batches.  This is the same
-executor-side plumbing the stubbed formats use; swapping in PIL/ffmpeg
-changes one function body, not the pipeline.
+Media travel as opaque ``binary`` columns; decode happens near the data,
+in Arrow-batched Python workers, never on the driver.  This module holds
+pure-Python/numpy codecs for six containers — WAV (RIFF/PCM16), BMP
+(uncompressed 24-bit) and PNG (8-bit RGB/RGBA) here, baseline JPEG
+(``jpeg.py``), GIF (``gif.py``) and AVI (``avi.py``) beside it — and
+eight feature operators over them: ``wav_features``,
+``wav_spectral_features``, ``bmp_features``, ``png_features``,
+``jpeg_features``, ``gif_features``, ``avi_features`` and
+``image_ahash``.
+
+All of them, and the three one-row-per-item operators of ``binary.py``,
+go through :func:`_per_payload`: one ``mapInPandas`` that calls a
+per-payload function on each payload's bytes and returns the id column
+plus that operator's typed fields.  The boundary's one NULL rule: a NULL
+payload yields its row with NULL fields (an operator may name other
+constants for that row); it never reaches the per-payload function.
+A payload a codec cannot parse raises, failing the job, unless the
+operator catches it (``binary.py``'s sniffing operators do).
 
 Scale shape: decode is row-local (no shuffle) and the payload bytes
 never reach the driver; features come out as small typed columns, the
@@ -18,13 +28,72 @@ raw media stays an opaque binary column end to end.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------- boundary
+
+def _per_payload(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    fields: str,
+    fn: Callable[[bytes], tuple],
+    *,
+    null_row: tuple | None = None,
+) -> DataFrame:
+    """Run ``fn(bytes)`` on every non-NULL payload inside one Arrow-batched
+    ``mapInPandas`` and return ``(id_col, *fields)``.
+
+    ``fields`` is a DDL column list (``"width int, height int"``; no comma
+    inside a type); ``fn`` returns one tuple in that order.  A NULL payload
+    yields ``null_row`` (all NULL by default) without calling ``fn``.  The
+    id column passes through untouched.  Output columns are built with
+    object dtype, so an int column holding a NULL stays exact instead of
+    round-tripping through float64.
+    """
+    from smartpy_arc_spark.session import ensure_worker_imports
+
+    ensure_worker_imports(df.sparkSession)
+    names = [f.split()[0] for f in fields.split(",")]
+    empty = (None,) * len(names) if null_row is None else null_row
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [empty if p is None else fn(bytes(p)) for p in pdf["__p"]]
+            out = pd.DataFrame(rows, columns=names, dtype=object)
+            out.insert(0, "__id", pdf["__id"].to_numpy())
+            yield out
+
+    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
+    out = src.mapInPandas(run, f"__id long, {fields}")
+    return out.withColumnRenamed("__id", id_col)
+
+
+_MEANS_E2 = "mean_r_e2 long, mean_g_e2 long, mean_b_e2 long"
+
+
+def _channel_means_e2(frames: list[np.ndarray]) -> tuple[int, int, int]:
+    """Red, green and blue means over every pixel of ``frames`` (each
+    (h, w, channels) uint8), in integer hundredths: exact int64 sums
+    before one division.  Channel ``c`` reads ``min(c, channels - 1)``,
+    so a grayscale image reports its gray level three times and an
+    alpha channel is ignored.  An image with no pixels reports zeros."""
+    ch = frames[0].shape[2]
+    sums = np.zeros(ch, dtype=np.int64)
+    n = 0
+    for fr in frames:
+        sums += fr.reshape(-1, ch).astype(np.int64).sum(axis=0)
+        n += fr.shape[0] * fr.shape[1]
+    return tuple(
+        int(round(sums[min(c, ch - 1)] * 100 / n)) if n else 0 for c in range(3)
+    )
 
 
 # ---------------------------------------------------------------- WAV
@@ -80,35 +149,26 @@ def wav_features(
     — exact integer sums of squares before one sqrt, so the value is
     engine-reproducible given the same bytes.
     """
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
 
-    ensure_worker_imports(spark)
+    def row(b: bytes) -> tuple:
+        rate, _, x = parse_wav(b)
+        xi = x.astype(np.int64)
+        n = len(xi)
+        rms = float(np.sqrt((xi * xi).sum() / n)) if n else 0.0
+        return (
+            rate,
+            n,
+            int(n * 1000 // rate) if rate else 0,
+            int(round(rms * 10000)),
+            int(np.abs(xi).max()) if n else 0,
+        )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"__id": [], "sample_rate": [], "n_samples": [],
-                   "duration_ms": [], "rms_e4": [], "peak": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                rate, _, x = parse_wav(bytes(payload))
-                xi = x.astype(np.int64)
-                n = len(xi)
-                rms = float(np.sqrt((xi * xi).sum() / n)) if n else 0.0
-                out["__id"].append(item_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                out["duration_ms"].append(int(n * 1000 // rate) if rate else 0)
-                out["rms_e4"].append(int(round(rms * 10000)))
-                out["peak"].append(int(np.abs(xi).max()) if n else 0)
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, sample_rate int, n_samples long, duration_ms long, "
-        "rms_e4 long, peak int",
+    return _per_payload(
+        df, id_col, payload_col,
+        "sample_rate int, n_samples long, duration_ms long, rms_e4 long, "
+        "peak int",
+        row,
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 # ---------------------------------------------------------------- BMP
@@ -161,34 +221,15 @@ def bmp_features(
     """Decode BMP payloads → ``(id, width, height, mean_r_e2, mean_g_e2,
     mean_b_e2)`` (channel means in integer hundredths — exact pixel sums
     before one division)."""
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
 
-    ensure_worker_imports(spark)
+    def row(b: bytes) -> tuple:
+        img = parse_bmp(b)
+        h, w, _ = img.shape
+        return (w, h, *_channel_means_e2([img]))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"__id": [], "width": [], "height": [],
-                   "mean_r_e2": [], "mean_g_e2": [], "mean_b_e2": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                img = parse_bmp(bytes(payload))
-                h, w, _ = img.shape
-                sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w
-                out["__id"].append(item_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                for k, c in zip(("mean_r_e2", "mean_g_e2", "mean_b_e2"), range(3)):
-                    out[k].append(int(round(sums[c] * 100 / n)) if n else 0)
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, width int, height int, mean_r_e2 long, mean_g_e2 long, "
-        "mean_b_e2 long",
+    return _per_payload(
+        df, id_col, payload_col, f"width int, height int, {_MEANS_E2}", row
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 # ---------------------------------------------------------------- PNG
@@ -291,6 +332,18 @@ def parse_png(payload: bytes) -> np.ndarray:
     return out.reshape(h, w, channels)
 
 
+def _image_row(parse: Callable[[bytes], np.ndarray]) -> Callable[[bytes], tuple]:
+    """Per-payload function of the single-image containers that report
+    ``(width, height, n_channels, *channel means)``."""
+
+    def row(b: bytes) -> tuple:
+        img = parse(b)
+        h, w, ch = img.shape
+        return (w, h, ch, *_channel_means_e2([img]))
+
+    return row
+
+
 def png_features(
     df: DataFrame,
     *,
@@ -300,35 +353,11 @@ def png_features(
     """Decode PNG payloads → ``(id, width, height, n_channels,
     mean_r_e2, mean_g_e2, mean_b_e2)`` — same feature contract as
     :func:`bmp_features`, so pipelines swap containers freely."""
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(spark)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"__id": [], "width": [], "height": [], "n_channels": [],
-                   "mean_r_e2": [], "mean_g_e2": [], "mean_b_e2": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                img = parse_png(bytes(payload))
-                h, w, ch = img.shape
-                sums = img.reshape(-1, ch).astype(np.int64).sum(axis=0)
-                n = h * w
-                out["__id"].append(item_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(ch)
-                for k, c in zip(("mean_r_e2", "mean_g_e2", "mean_b_e2"), range(3)):
-                    out[k].append(int(round(sums[c] * 100 / n)) if n else 0)
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, width int, height int, n_channels int, "
-        "mean_r_e2 long, mean_g_e2 long, mean_b_e2 long",
+    return _per_payload(
+        df, id_col, payload_col,
+        f"width int, height int, n_channels int, {_MEANS_E2}",
+        _image_row(parse_png),
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def jpeg_features(
@@ -342,38 +371,13 @@ def jpeg_features(
     mean_r_e2, mean_g_e2, mean_b_e2)`` — the same feature contract as
     :func:`png_features` / :func:`bmp_features`, so pipelines swap
     containers freely."""
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
+    from smartpy_arc_spark.multimodal.jpeg import parse_jpeg
 
-    ensure_worker_imports(spark)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from smartpy_arc_spark.multimodal.jpeg import parse_jpeg
-
-        for pdf in batches:
-            out = {"__id": [], "width": [], "height": [], "n_channels": [],
-                   "mean_r_e2": [], "mean_g_e2": [], "mean_b_e2": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                img = parse_jpeg(bytes(payload))
-                h, w, ch = img.shape
-                sums = img.reshape(-1, ch).astype(np.int64).sum(axis=0)
-                n = h * w
-                out["__id"].append(item_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(ch)
-                for k, c in zip(("mean_r_e2", "mean_g_e2", "mean_b_e2"), range(3)):
-                    v = int(round(sums[min(c, ch - 1)] * 100 / n)) if n else 0
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, width int, height int, n_channels int, "
-        "mean_r_e2 long, mean_g_e2 long, mean_b_e2 long",
+    return _per_payload(
+        df, id_col, payload_col,
+        f"width int, height int, n_channels int, {_MEANS_E2}",
+        _image_row(parse_jpeg),
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def gif_features(
@@ -387,39 +391,17 @@ def gif_features(
     with channel means over ALL frames — the same exact-integer-sums
     contract as the other codec feature extractors, plus the frame count
     an animation pipeline needs."""
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
+    from smartpy_arc_spark.multimodal.gif import parse_gif
 
-    ensure_worker_imports(spark)
+    def row(b: bytes) -> tuple:
+        frames = parse_gif(b)
+        h, w, _ = frames[0].shape
+        return (w, h, len(frames), *_channel_means_e2(frames))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from smartpy_arc_spark.multimodal.gif import parse_gif
-
-        for pdf in batches:
-            out = {"__id": [], "width": [], "height": [], "n_frames": [],
-                   "mean_r_e2": [], "mean_g_e2": [], "mean_b_e2": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                frames = parse_gif(bytes(payload))
-                h, w, _ = frames[0].shape
-                sums = np.zeros(3, dtype=np.int64)
-                for fr in frames:
-                    sums += fr.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w * len(frames)
-                out["__id"].append(item_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(len(frames))
-                for k, c in zip(("mean_r_e2", "mean_g_e2", "mean_b_e2"), range(3)):
-                    out[k].append(int(round(sums[c] * 100 / n)) if n else 0)
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, width int, height int, n_frames int, "
-        "mean_r_e2 long, mean_g_e2 long, mean_b_e2 long",
+    return _per_payload(
+        df, id_col, payload_col,
+        f"width int, height int, n_frames int, {_MEANS_E2}", row,
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def avi_features(
@@ -433,40 +415,17 @@ def avi_features(
     mean_r_e2, mean_g_e2, mean_b_e2)`` with channel means over ALL frames
     — same exact-integer-sums contract as the image codecs, plus the
     frame count and frame rate a video pipeline needs."""
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
+    from smartpy_arc_spark.multimodal.avi import parse_avi
 
-    ensure_worker_imports(spark)
+    def row(b: bytes) -> tuple:
+        frames, info = parse_avi(b)
+        h, w, _ = frames[0].shape
+        return (w, h, len(frames), info.get("fps", 0), *_channel_means_e2(frames))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from smartpy_arc_spark.multimodal.avi import parse_avi
-
-        for pdf in batches:
-            out = {"__id": [], "width": [], "height": [], "n_frames": [],
-                   "fps": [], "mean_r_e2": [], "mean_g_e2": [], "mean_b_e2": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                frames, info = parse_avi(bytes(payload))
-                h, w, _ = frames[0].shape
-                sums = np.zeros(3, dtype=np.int64)
-                for fr in frames:
-                    sums += fr.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w * len(frames)
-                out["__id"].append(item_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(len(frames))
-                out["fps"].append(info.get("fps", 0))
-                for k, c in zip(("mean_r_e2", "mean_g_e2", "mean_b_e2"), range(3)):
-                    out[k].append(int(round(sums[c] * 100 / n)) if n else 0)
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, width int, height int, n_frames int, fps int, "
-        "mean_r_e2 long, mean_g_e2 long, mean_b_e2 long",
+    return _per_payload(
+        df, id_col, payload_col,
+        f"width int, height int, n_frames int, fps int, {_MEANS_E2}", row,
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 # ---------------------------------------------------------- perceptual hash
@@ -511,28 +470,15 @@ def image_ahash(
 ) -> DataFrame:
     """Decode BMP payloads and emit their perceptual average-hash:
     ``(id, ahash)`` with the 64-bit hash as a signed BIGINT (two's
-    complement, so grouping/banding works on the raw column).  Arrow-
-    batched ``mapInPandas`` — decode and hash are per-row local, the
-    image dedup that follows is an ordinary hash groupBy."""
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
+    complement, so grouping/banding works on the raw column).  Decode and
+    hash are per-row local; the image dedup that follows is an ordinary
+    hash groupBy."""
 
-    ensure_worker_imports(spark)
+    def row(b: bytes) -> tuple:
+        hv = average_hash_array(parse_bmp(b), grid=grid)
+        return (hv - (1 << 64) if hv >= (1 << 63) else hv,)  # two's complement
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                img = parse_bmp(bytes(payload))
-                hv = average_hash_array(img, grid=grid)
-                ids.append(item_id)
-                # two's complement into signed 64-bit
-                hashes.append(hv - (1 << 64) if hv >= (1 << 63) else hv)
-            yield pd.DataFrame({"__id": ids, "ahash": hashes})
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(hash_batch, "__id long, ahash long")
-    return out.withColumnRenamed("__id", id_col)
+    return _per_payload(df, id_col, payload_col, "ahash long", row)
 
 
 # ---------------------------------------------------------- audio spectrum
@@ -549,57 +495,42 @@ def wav_spectral_features(
     the features an audio-dedup/classification pipeline derives before
     any model sees the clip.
 
-    Arrow-batched ``mapInPandas`` + numpy ``rfft`` — row-local, linear
-    scale-out; deterministic for given bytes (FFT of identical input is
-    identical on a platform, pinned by closed-form pure-tone tests, not
+    numpy ``rfft`` per payload — row-local, linear scale-out;
+    deterministic for given bytes (FFT of identical input is identical
+    on a platform, pinned by closed-form pure-tone tests, not
     cross-engine hashes).
 
     Returns ``(id, sample_rate, n_samples, dominant_hz_e2,
     centroid_hz_e2, bandwidth_hz_e2)``.
     """
-    spark = df.sparkSession
-    from smartpy_arc_spark.session import ensure_worker_imports
 
-    ensure_worker_imports(spark)
+    def row(b: bytes) -> tuple:
+        rate, _, x = parse_wav(b)
+        n = len(x)
+        if n < 2:
+            return (rate, n, 0, 0, 0)
+        mag = np.abs(np.fft.rfft(x.astype(np.float64)))
+        freqs = np.fft.rfftfreq(n, d=1.0 / rate)
+        m = mag.copy()
+        m[0] = 0.0  # DC is level, not pitch
+        dom = float(freqs[int(np.argmax(m))])
+        w = m.sum()
+        if w > 0:
+            centroid = float((freqs * m).sum() / w)
+            bw = float(np.sqrt(((freqs - centroid) ** 2 * m).sum() / w))
+        else:
+            centroid, bw = 0.0, 0.0
+        return (
+            rate,
+            n,
+            int(round(dom * 100)),
+            int(round(centroid * 100)),
+            int(round(bw * 100)),
+        )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"__id": [], "sample_rate": [], "n_samples": [],
-                   "dominant_hz_e2": [], "centroid_hz_e2": [],
-                   "bandwidth_hz_e2": []}
-            for item_id, payload in zip(pdf["__id"], pdf["__p"]):
-                rate, _, x = parse_wav(bytes(payload))
-                n = len(x)
-                out["__id"].append(item_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                if n < 2:
-                    for k in ("dominant_hz_e2", "centroid_hz_e2",
-                              "bandwidth_hz_e2"):
-                        out[k].append(0)
-                    continue
-                mag = np.abs(np.fft.rfft(x.astype(np.float64)))
-                freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                m = mag.copy()
-                m[0] = 0.0  # DC is level, not pitch
-                dom = float(freqs[int(np.argmax(m))])
-                w = m.sum()
-                if w > 0:
-                    centroid = float((freqs * m).sum() / w)
-                    bw = float(
-                        np.sqrt(((freqs - centroid) ** 2 * m).sum() / w)
-                    )
-                else:
-                    centroid, bw = 0.0, 0.0
-                out["dominant_hz_e2"].append(int(round(dom * 100)))
-                out["centroid_hz_e2"].append(int(round(centroid * 100)))
-                out["bandwidth_hz_e2"].append(int(round(bw * 100)))
-            yield pd.DataFrame(out)
-
-    src = df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    out = src.mapInPandas(
-        decode,
-        "__id long, sample_rate int, n_samples long, dominant_hz_e2 long, "
+    return _per_payload(
+        df, id_col, payload_col,
+        "sample_rate int, n_samples long, dominant_hz_e2 long, "
         "centroid_hz_e2 long, bandwidth_hz_e2 long",
+        row,
     )
-    return out.withColumnRenamed("__id", id_col)

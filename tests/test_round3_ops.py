@@ -833,66 +833,6 @@ def test_feature_hash_stable_and_bounded(spark):
     assert d1 == d3
 
 
-# ------------------------------------------------- real WAV/BMP codecs
-
-def test_wav_roundtrip_and_features(spark):
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.codecs import (
-        make_wav,
-        parse_wav,
-        wav_features,
-    )
-
-    x = np.array([0, 1000, -1000, 32767, -32768], dtype=np.int16)
-    rate, ch, back = parse_wav(make_wav(x, rate=8000))
-    assert rate == 8000 and ch == 1
-    assert np.array_equal(back, x)
-
-    df = spark.createDataFrame(
-        [(1, bytearray(make_wav(x, rate=8000)))], "item_id long, payload binary"
-    )
-    r = wav_features(df).collect()[0]
-    assert r["sample_rate"] == 8000 and r["n_samples"] == 5
-    assert r["peak"] == 32768
-    xi = x.astype(np.int64)
-    assert r["rms_e4"] == round(float(np.sqrt((xi * xi).sum() / 5)) * 10000)
-
-
-def test_bmp_roundtrip_and_features(spark):
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.codecs import (
-        bmp_features,
-        make_bmp,
-        parse_bmp,
-    )
-
-    rng = np.arange(5 * 3 * 3, dtype=np.uint8).reshape(5, 3, 3)
-    back = parse_bmp(make_bmp(rng))
-    assert np.array_equal(back, rng)  # BGR/bottom-up/padding all undone
-
-    df = spark.createDataFrame(
-        [(7, bytearray(make_bmp(rng)))], "item_id long, payload binary"
-    )
-    r = bmp_features(df).collect()[0]
-    assert (r["width"], r["height"]) == (3, 5)
-    sums = rng.reshape(-1, 3).astype(int).sum(axis=0)
-    assert r["mean_r_e2"] == round(sums[0] * 100 / 15)
-    assert r["mean_b_e2"] == round(sums[2] * 100 / 15)
-
-
-def test_wav_rejects_non_pcm(spark):
-    import pytest as _pytest
-
-    from smartpy_arc_spark.multimodal.codecs import parse_bmp, parse_wav
-
-    with _pytest.raises(ValueError):
-        parse_wav(b"nonsense bytes here padded out to enough length....")
-    with _pytest.raises(ValueError):
-        parse_bmp(b"XXnot a bitmap")
-
-
 # ------------------------------------------------- governance / drift
 
 def test_k_anonymity_flags_small_classes(spark):
@@ -1032,76 +972,6 @@ def test_neyman_favors_big_varied_strata(spark):
     assert out["flat"]["alloc"] == 0          # S_h = 0 → no budget
     assert out["varied"]["alloc"] > out["smallv"]["alloc"]  # N_h scales it
     assert out["varied"]["share_e6"] + out["smallv"]["share_e6"] == 1_000_000
-
-
-def test_png_roundtrip_all_filters(spark):
-    """parse_png must undo every scanline filter — zlib recompression of
-    externally-filtered data is exercised by hand-building the stream."""
-    import struct as _s
-    import zlib
-
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.codecs import (
-        _PNG_SIG,
-        make_png,
-        parse_png,
-        png_features,
-    )
-
-    img = (np.arange(6 * 4 * 3, dtype=np.uint8) * 7 % 256).reshape(6, 4, 3)
-    assert np.array_equal(parse_png(make_png(img)), img)
-
-    # re-encode with every filter type per row (cycled 0..4) and make
-    # sure unfiltering still reconstructs the same pixels
-    h, w, ch = img.shape
-    stride = w * ch
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.int32)
-    flat = img.reshape(h, stride).astype(np.int32)
-    for y in range(h):
-        ft = y % 5
-        cur = flat[y]
-        if ft == 0:
-            enc = cur
-        elif ft == 1:
-            left = np.concatenate([np.zeros(ch, np.int32), cur[:-ch]])
-            enc = (cur - left) & 0xFF
-        elif ft == 2:
-            enc = (cur - prev) & 0xFF
-        elif ft == 3:
-            left = np.concatenate([np.zeros(ch, np.int32), cur[:-ch]])
-            enc = (cur - ((left + prev) >> 1)) & 0xFF
-        else:
-            enc = np.zeros(stride, np.int32)
-            for x in range(stride):
-                a = int(cur[x - ch]) if x >= ch else 0
-                b = int(prev[x])
-                c = int(prev[x - ch]) if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                enc[x] = (cur[x] - pr) & 0xFF
-        raw += bytes([ft]) + bytes(enc.astype(np.uint8))
-        prev = cur
-
-    def chunk(typ, body):
-        return (_s.pack(">I", len(body)) + typ + body
-                + _s.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF))
-
-    blob = (_PNG_SIG
-            + chunk(b"IHDR", _s.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-    assert np.array_equal(parse_png(blob), img)
-
-    df = spark.createDataFrame(
-        [(1, bytearray(blob))], "item_id long, payload binary"
-    )
-    r = png_features(df).collect()[0]
-    assert (r["width"], r["height"], r["n_channels"]) == (4, 6, 3)
-    sums = img.reshape(-1, 3).astype(int).sum(axis=0)
-    assert r["mean_g_e2"] == round(sums[1] * 100 / 24)
 
 
 # ------------------------------------------------- weighted SSSP

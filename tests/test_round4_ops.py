@@ -663,61 +663,6 @@ def test_ngram_novelty_partial_overlap(spark):
     assert got[2]["n_grams"] == 3 and got[2]["n_unique"] == 2
 
 
-# ------------------------------------------------- image ahash dedup
-
-def test_ahash_matches_numpy_reference_and_dedups(spark):
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.codecs import (
-        average_hash_array,
-        image_ahash,
-        make_bmp,
-    )
-
-    def img(seed, h=10, w=8):
-        # vary SPATIAL structure with the seed — aHash is deliberately
-        # invariant to constant brightness shifts
-        y, x, c = np.meshgrid(
-            np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-        )
-        return (
-            (y * (13 + 11 * seed) + x * (3 + 7 * seed) + c * 5) % 256
-        ).astype("uint8")
-
-    imgs = {1: img(1), 2: img(2), 3: img(1)}  # 3 duplicates 1
-    rows = [(k, bytearray(make_bmp(v))) for k, v in imgs.items()]
-    df = spark.createDataFrame(rows, "item_id long, payload binary")
-    got = {r["item_id"]: r["ahash"] for r in image_ahash(df).collect()}
-    assert got[1] == got[3] and got[1] != got[2]
-    for k, v in imgs.items():
-        hv = average_hash_array(v)
-        signed = hv - (1 << 64) if hv >= (1 << 63) else hv
-        assert got[k] == signed
-
-
-def test_ahash_near_duplicate_small_hamming(spark):
-    """One flipped pixel block changes few aHash bits; an unrelated image
-    differs in many."""
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.codecs import average_hash_array
-
-    def img(seed, h=16, w=16):
-        y, x, c = np.meshgrid(
-            np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-        )
-        return ((seed * 11 + y * 17 + x * 5 + c * 3) % 256).astype("uint8")
-
-    a = img(1)
-    near = a.copy()
-    near[0:2, 0:2, :] = 255
-    far = img(9)
-    ha, hn, hf = (average_hash_array(v) for v in (a, near, far))
-    ham = lambda p, q: bin(p ^ q).count("1")  # noqa: E731
-    assert ham(ha, hn) <= 6
-    assert ham(ha, hf) > 10
-
-
 # ------------------------------------------------- streaming hopping
 
 def test_stream_hopping_two_windows_per_event(spark, sf_dir):
@@ -1586,35 +1531,6 @@ def test_stream_ewma_anomaly_hand_fold(spark, tmp_path):
     # the raw step size
     assert out["n_anomalies"] == n_anom == 1
     assert out["ewma_e4"] == int(math.floor(level * 100 + 0.5))
-
-
-# ------------------------------------------------- wav spectral
-
-def test_wav_spectral_pure_tone(spark):
-    """A 1 kHz pure tone: dominant bin and centroid land at 1000 Hz
-    (bin-exact for n a multiple of rate/freq), bandwidth near 0."""
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.codecs import (
-        make_wav,
-        wav_spectral_features,
-    )
-
-    rate, n, freq = 16000, 1600, 1000.0
-    i = np.arange(n)
-    tone = (10000 * np.sin(2 * np.pi * freq * i / rate)).astype("int16")
-    noiseish = ((i * 7919) % 65536 - 32768).astype("int16")
-    df = spark.createDataFrame(
-        [(1, bytearray(make_wav(tone, rate=rate))),
-         (2, bytearray(make_wav(noiseish, rate=rate)))],
-        "item_id long, payload binary",
-    )
-    got = {r["item_id"]: r for r in wav_spectral_features(df).collect()}
-    assert got[1]["dominant_hz_e2"] == 100000        # exactly 1000.00 Hz
-    assert abs(got[1]["centroid_hz_e2"] - 100000) < 2000   # leakage slack
-    assert got[1]["bandwidth_hz_e2"] < got[2]["bandwidth_hz_e2"]
-    # broadband signal: centroid far from any single tone, wide bandwidth
-    assert got[2]["bandwidth_hz_e2"] > 100000
 
 
 # ------------------------------------------------- calibration

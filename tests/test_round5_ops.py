@@ -176,41 +176,6 @@ def test_gif_codec_lossless_roundtrip():
     assert len(dec) == 4 and all((a == b).all() for a, b in zip(dec, frames))
 
 
-def test_frame_sample_real_path_decodes_gif(spark):
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.binary import frame_sample
-    from smartpy_arc_spark.multimodal.codecs import parse_png
-    from smartpy_arc_spark.multimodal.gif import make_gif
-
-    frames = [np.full((8, 8, 3), (i * 30, 10, 200 - i * 20), np.uint8)
-              for i in range(6)]
-    media = spark.createDataFrame(
-        [(1, bytearray(make_gif(frames))), (2, bytearray(b"not video"))],
-        "item_id long, payload binary",
-    )
-    out = frame_sample(media, n_frames=3, stub=False).collect()
-    got = sorted((r.item_id, r.frame_idx) for r in out)
-    assert got == [(1, 0), (1, 1), (1, 2)]  # junk payload skipped
-    first = next(r for r in out if r.frame_idx == 0)
-    img = parse_png(bytes(first.frame))
-    assert (img == frames[0]).all()  # evenly spaced: pick 0, 2, 4
-
-
-def test_decode_image_meta_sniffs_gif(spark):
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.binary import decode_image_meta
-    from smartpy_arc_spark.multimodal.gif import make_gif
-
-    img = np.full((5, 11, 3), (9, 8, 7), np.uint8)
-    media = spark.createDataFrame(
-        [(1, bytearray(make_gif(img)))], "item_id long, payload binary"
-    )
-    r = decode_image_meta(media, stub=False).collect()[0]
-    assert r.format == "gif" and (r.width, r.height) == (11, 5)
-
-
 def test_line_dedup_removes_boilerplate_preserves_order(spark):
     from smartpy_arc_spark.operators.dedup import line_dedup
 
@@ -352,29 +317,6 @@ def test_ipf_raking_hits_margins(spark):
     assert all(abs(v / 1e6 - 100) < 0.05 for v in rm.values())
     # weights stay proportional within structure: zero cells stay zero
     assert all(x.weight_scaled > 0 for x in out)
-
-
-def test_extract_features_real_path(spark):
-    """stub=False: real decode-based classical features — same constant
-    image in two different containers yields the SAME feature vector."""
-    import numpy as np
-
-    from smartpy_arc_spark.multimodal.binary import extract_features
-    from smartpy_arc_spark.multimodal.codecs import make_png
-    from smartpy_arc_spark.multimodal.gif import make_gif
-
-    img = np.full((10, 20, 3), (40, 90, 200), np.uint8)
-    media = spark.createDataFrame(
-        [(1, bytearray(make_png(img))), (2, bytearray(make_gif(img))),
-         (3, bytearray(b"junk"))],
-        "item_id long, payload binary",
-    )
-    out = {r.item_id: r.features
-           for r in extract_features(media, dim=10, stub=False).collect()}
-    assert out[1] is not None and len(out[1]) == 10
-    assert out[1] == out[2]  # lossless containers, identical pixels
-    assert abs(out[1][0] - 40 / 255) < 1e-6  # mean_r of constant image
-    assert out[3] is None
 
 
 def test_naive_bayes_train_score(spark):
@@ -858,26 +800,6 @@ def test_avi_rejects_non_dib():
 
     with pytest.raises(NotImplementedError):
         parse_avi(bytes(payload))
-
-
-def test_frame_sample_real_path_decodes_avi(spark):
-    """frame_sample(stub=False) sniffs RIFF/AVI payloads and re-encodes
-    evenly-spaced real frames as lossless PNG."""
-    import pandas as pd
-
-    from smartpy_arc_spark.multimodal.avi import make_avi
-    from smartpy_arc_spark.multimodal.binary import frame_sample
-    from smartpy_arc_spark.multimodal.codecs import parse_png
-
-    frames = [np.full((3, 5, 3), (10 * i, 20, 30), dtype=np.uint8)
-              for i in range(4)]
-    pdf = pd.DataFrame({"item_id": [1], "payload": [make_avi(frames)]})
-    out = frame_sample(spark.createDataFrame(pdf), n_frames=2,
-                       stub=False).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in out] == [0, 1]
-    # picks = {0, 4//2=2} → frame colors r=0 and r=20
-    got = [int(parse_png(bytes(r["frame"]))[0, 0, 0]) for r in out]
-    assert got == [0, 20]
 
 
 def test_lsa_learned_embeddings(spark):
